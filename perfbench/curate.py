@@ -5,9 +5,9 @@ Each pass builds the ``curation_pipeline`` composition exactly as
 ``dedup.apply_dedup`` -> ``dedup.decontaminate`` ->
 ``schemes.deterministic_sample``) over a generated corpus with planted
 duplicates, and writes it through ``sources.sink.write_dataset``.  Pass
-0 is the cold pass, then come untimed warm-up passes; timed passes
-follow for ``--seconds``.  Every pass's
-output must equal the DuckDB oracle ``oracle_sql()["curation_pipeline"]``
+0 is the cold pass, then come untimed warm-up passes, then a fixed
+number of timed passes (:meth:`Ctx.timed_ops`).  Every pass's output
+must equal the DuckDB oracle ``oracle_sql()["curation_pipeline"]``
 on the same corpus, and no two surviving docs may share a text.
 """
 
@@ -24,9 +24,9 @@ import pyarrow.parquet as pq
 import gen
 
 SCHEMA = "doc_id bigint, text string, lang string, kind string, src_id bigint"
-# Warm pass times fall by a third over the first few passes while the JIT
-# catches up; timing starts after them so runs agree with each other.
-WARMUP_PASSES = 3
+# Warm pass times keep falling for many passes while the JIT catches up;
+# the first warm pass, the steepest step, is left untimed.
+WARMUP_PASSES = 1
 ITEMS = "docs_per_s"
 
 
@@ -91,13 +91,9 @@ def run(ctx):
         ok, warm = ctx.attempt("warm-up pass", one_pass, i)
         if ok:
             outputs.append(warm[1])
-    timed = []
     with ctx.window():
-        t_end = time.perf_counter() + ctx.seconds
-        while time.perf_counter() < t_end or len(timed) < 3:
-            ok, res = ctx.attempt("timed pass", one_pass, 1 + WARMUP_PASSES + len(timed))
-            if ok:
-                timed.append(res)
+        timed = ctx.repeat("timed pass", lambda i: one_pass(1 + WARMUP_PASSES + i),
+                           ctx.timed_ops())
     ctx.window_ops = len(timed)
     outputs += [dest for _, dest in timed]
 

@@ -2,9 +2,10 @@
 
 One consumer iterates ``DataStream`` epochs over an MNIST-shaped table
 as fast as batches come.  Epoch 0 is the cold pass; a second stream
-with the same seed then replays epoch 0, whose order must repeat, and
-epoch 1 runs untimed as well; timed epochs follow for ``--seconds``.  Every epoch
-must deliver a permutation of the input with each row intact.
+with the same seed then replays epoch 0 untimed, as warm-up, and its
+order must repeat; a fixed number of timed epochs of the first stream
+follows (:meth:`Ctx.timed_ops`).  Every epoch must deliver a permutation of the
+input with each row intact.
 """
 
 from __future__ import annotations
@@ -77,18 +78,10 @@ def run(ctx):
         same = cold is not None and replay["digest"] == cold["digest"]
         ctx.op(replay["ok"] and same, "warm-up epoch: order differs from epoch 0 of the same seed")
 
-    ok, warm = ctx.attempt("warm-up epoch", epoch, main)
-    if ok:
-        ctx.op(warm["ok"], "warm-up epoch: not a permutation of the input")
-
-    timed = []
     with ctx.window():
-        t_end = time.perf_counter() + ctx.seconds
-        while time.perf_counter() < t_end or len(timed) < 3:
-            ok, e = ctx.attempt("timed epoch", epoch, main)
-            if ok:
-                ctx.op(e["ok"], "timed epoch: not a permutation of the input")
-                timed.append(e)
+        timed = ctx.repeat("timed epoch", lambda _: epoch(main), ctx.timed_ops())
+    for e in timed:
+        ctx.op(e["ok"], "timed epoch: not a permutation of the input")
     ctx.window_ops = len(timed)
 
     ctx.raw["waits"] = [e["waits"] for e in timed]

@@ -1,6 +1,7 @@
 """Measurement from outside the program: host record, JVM probes, spans.
 
-- :class:`Host` reads cores, memory, load and CPU steal from ``/proc``.
+- :class:`Host` reads cores, memory, load and CPU steal from ``/proc``;
+  :func:`program_id` names the program under test by a hash of its source.
 - :class:`Jvm` reads JIT and GC time over JMX (through the py4j
   gateway) and the JVM process's CPU time and peak RSS from ``/proc``.
 - :class:`Tracer` records a span around each public ``fuel_spark`` call
@@ -15,6 +16,8 @@ from __future__ import annotations
 
 import contextlib
 import functools
+import glob
+import hashlib
 import json
 import os
 import time
@@ -44,10 +47,25 @@ class Host:
             self.load1_start = float(f.read().split()[0])
         self._ticks0 = _cpu_ticks()
 
-    def steal_frac(self) -> float:
-        """Share of all CPU time since the run began that the hypervisor stole."""
-        d = [b - a for a, b in zip(self._ticks0, _cpu_ticks())]
-        return d[7] / max(sum(d[:8]), 1)
+    def steal_share(self) -> float:
+        """Share of the CPU time the machine's processors asked for since
+        the run began (busy plus stolen; idle and iowait left out) that
+        the hypervisor stole."""
+        user, nice, system, _idle, _iowait, irq, softirq, steal = (
+            b - a for a, b in zip(self._ticks0[:8], _cpu_ticks()[:8]))
+        return steal / max(user + nice + system + irq + softirq + steal, 1)
+
+
+def program_id(root: str) -> str:
+    """Short hash of the program under test (``fuel_spark`` and the entry
+    module), so that runs of different commits in one checkout stay apart."""
+    h = hashlib.sha256()
+    paths = sorted(glob.glob(os.path.join(root, "fuel_spark", "**", "*.py"), recursive=True))
+    for path in paths + [os.path.join(root, "__spark_entry__.py")]:
+        h.update(os.path.relpath(path, root).encode() + b"\0")
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:12]
 
 
 def proc_cpu_s(pid: int) -> float:

@@ -13,27 +13,38 @@ line of JSON::
 With ``--trace 0`` the metrics are the end-to-end metrics of
 ``BENCHMARK.json``, which every workload has:
 
-- ``setup_s``: process start until the first pass can begin (imports and
-  ``get_spark`` once, plus the median of three input set-ups, each
-  generating the inputs into a fresh directory and, for ``screen``,
-  building the MinHash index);
+- ``setup_s``: process start until the first pass can begin, one wall
+  interval: imports, ``get_spark``, generating the inputs into a fresh
+  directory and, for ``screen``, building the MinHash index;
 - ``cold_pass_s``: the first epoch (``feed``), the first pass
   (``curate``) or the first drain micro-batch (``screen``);
 - ``items_per_s``: examples or documents per second, the median over
-  timed epochs or passes, or the warm drain rate of ``screen``.
+  timed epochs or passes, or the warm drain rate of ``screen``.  The
+  number of timed epochs or passes follows from ``--seconds`` and the
+  workload's nominal pass time, never from how fast the program runs,
+  so every commit is timed on the same pass indices.
 
 ``screen`` also prints its per-file latency (``latency_p50_s``,
 ``latency_p90_s``), and every workload prints ``fail_frac``: failed
 operations (epochs, passes, files) over attempted ones, which the last
 line carries as ``failed`` and ``attempted``.
 
+A run is valid only if the hypervisor stole at most ``STEAL_LIMIT`` of
+the CPU time the machine's processors asked for while it ran
+(``/proc/stat``); an invalid run says so above the last line and in its
+record, and ``perfbench/compare.py`` leaves it out when it compares two
+sets of runs.
+
 With ``--trace 1`` every public call is wrapped in a span and the
 metrics are the per-layer metrics of ``BENCHMARK.json``; all others,
 and the reason for any that is absent, are printed above the last line.
-Every run writes a record (host, parameters, metrics, spans) to
-``perfbench/out/``.  Workload parameters live in
+The tracing overhead is taken against the untraced run of the same
+program and seed.  Every run writes a record (host, parameters,
+metrics, spans) to ``perfbench/out/``, named by workload, program hash,
+seed and trace.  Workload parameters live in
 ``perfbench/workloads.json``; the self-tests run with
-``python3 -m pytest perfbench/tests``.
+``python3 -m pytest perfbench/tests``.  A run that overruns
+``DEADLINE_S`` stops its JVM and exits 3 without a result.
 """
 
 from __future__ import annotations
@@ -59,10 +70,18 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 OUT = os.path.join(HERE, "out")
 WORKLOADS = ("feed", "curate", "screen")
-SETUP_REPS = 3
+# Above this share of stolen CPU a run's times say more about the
+# neighbours than about the program (quiet runs read under 0.01).
+STEAL_LIMIT = 0.02
 E2E_UNITS = {"setup_s": "s", "cold_pass_s": "s", "items_per_s": "1/s",
              "latency_p50_s": "s", "latency_p90_s": "s"}
 DEADLINE_S = 170
+GRACE_S = 8
+
+
+class Deadline(BaseException):
+    """The run overran.  A BaseException, so that no ``except Exception``
+    in a workload counts it as one failed operation and carries on."""
 
 
 def load_json(path):
@@ -86,7 +105,6 @@ class Ctx:
         self.problems: list[str] = []
         self.e2e: dict[str, tuple[float, int]] = {}
         self.layers: dict[str, tuple] = {}
-        self.setup_data_s = None
         self.window_stats: dict = {}
         self.window_span: dict = {}
         self.window_groups: list[str] = []
@@ -97,16 +115,16 @@ class Ctx:
         return self.tracer.span(name, **attrs)
 
     def setup(self, make):
-        """Run the data set-up ``SETUP_REPS`` times, each in a fresh
-        directory; keep the last result and the median time."""
-        times = []
-        for rep in range(SETUP_REPS):
-            t0 = time.perf_counter()
-            with self.span("setup"):
-                out = make(os.path.join(self.work, f"setup-{rep}"))
-            times.append(time.perf_counter() - t0)
-        self.setup_data_s = statistics.median(times)
+        """Make the inputs in a fresh directory; ``setup_s`` ends here."""
+        with self.span("setup"):
+            out = make(os.path.join(self.work, "inputs"))
+        self.e2e["setup_s"] = (time.perf_counter() - T_START, 1)
         return out
+
+    def timed_ops(self) -> int:
+        """How many epochs or passes to time: ``--seconds`` over the
+        workload's nominal pass time, at least three."""
+        return max(3, round(self.seconds / self.params["nominal_pass_s"]))
 
     def op(self, ok: bool, what: str):
         """Count one operation (epoch, pass or file) and whether it passed."""
@@ -123,6 +141,16 @@ class Ctx:
             traceback.print_exc()
             self.op(False, f"{what} raised")
             return False, None
+
+    def repeat(self, what: str, fn, count: int) -> list:
+        """``fn(i)`` for ``i`` in ``range(count)``: the results of those
+        that did not raise."""
+        out = []
+        for i in range(count):
+            ok, res = self.attempt(what, fn, i)
+            if ok:
+                out.append(res)
+        return out
 
     def layer(self, name, unit, value, n=None):
         self.layers[name] = (value, unit, n)
@@ -157,7 +185,7 @@ def layer_metrics(ctx, host, session_s, session_jit_s, sc) -> None:
     ctx.layer("engine.jvm_cpu_s", "s", w["cpu_s"] / ops)
     ctx.layer("engine.peak_rss_mb", "MB", ctx.jvm.peak_rss_mb())
     ctx.layer("driver.py_cpu_s", "s", w["py_cpu_s"] / ops)
-    ctx.layer("host.steal_frac", "ratio", host.steal_frac())
+    ctx.layer("host.steal_share", "ratio", host.steal_share())
     ctx.layer("host.load1_start", "load", host.load1_start)
     if not ctx.tracer.enabled:
         return
@@ -214,11 +242,12 @@ def run_one(args) -> int:
     except ImportError as e:
         print(f"perfbench: cannot import fuel_spark from {ROOT}: {e}", file=sys.stderr)
         return 2
-    from measure import Host, Jvm, Tracer
+    from measure import Host, Jvm, Tracer, program_id
 
     bench = load_json(os.path.join(ROOT, "BENCHMARK.json"))
     params = load_json(os.path.join(HERE, "workloads.json"))[args.workload]
     host = Host()
+    prog = program_id(ROOT)
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(host.cores))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{host.mem_total_mb // 8}m")
     run_id = f"{args.workload}-{args.seed}-{uuid.uuid4().hex[:8]}"
@@ -239,21 +268,19 @@ def run_one(args) -> int:
         })
         spark.sparkContext.setLogLevel("ERROR")
         session_s = time.perf_counter() - t0
-        session_ready = time.perf_counter() - T_START
         jvm = Jvm(spark)
         session_jit_s = jvm.snapshot()["jit_s"]
         tracer = Tracer(bool(args.trace), run_id, spark.sparkContext)
         ctx = Ctx(args, spark, tracer, jvm, params, work)
         module = __import__(args.workload)
         module.run(ctx)
-        ctx.e2e["setup_s"] = (session_ready + ctx.setup_data_s, SETUP_REPS)
         layer_metrics(ctx, host, session_s, session_jit_s, spark.sparkContext)
     finally:
         if spark is not None:
             stop(spark)
         shutil.rmtree(work, ignore_errors=True)
 
-    return report(args, bench, params, host, ctx, tracer, module.ITEMS)
+    return report(args, bench, params, host, prog, ctx, tracer, module.ITEMS)
 
 
 def stop(spark):
@@ -273,7 +300,9 @@ def stop(spark):
             proc.wait()
 
 
-def report(args, bench, params, host, ctx, tracer, items) -> int:
+def report(args, bench, params, host, prog, ctx, tracer, items) -> int:
+    steal = ctx.layers["host.steal_share"][0]
+    valid = steal <= STEAL_LIMIT
     wanted = bench["per_layer"] if args.trace else bench["end_to_end"]
     for name, (value, n) in ctx.e2e.items():
         label = f"{name} ({items})" if name == "items_per_s" else name
@@ -288,16 +317,21 @@ def report(args, bench, params, host, ctx, tracer, items) -> int:
             print(f"{args.workload:7s} {name:34s} {fmt(value):>12s} {unit:6s} {extra}")
     for p in ctx.problems:
         print(f"{args.workload:7s} FAILED {p}")
+    if not valid:
+        print(f"{args.workload:7s} INVALID run: the hypervisor stole {steal:.3f} of the CPU "
+              f"time asked for (limit {STEAL_LIMIT}); compare.py leaves it out")
 
     record = {
-        "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
-        "trace": args.trace, "params": params,
+        "workload": args.workload, "program": prog, "seed": args.seed,
+        "seconds": args.seconds, "trace": args.trace, "valid": valid, "params": params,
         "host": {"cores": host.cores, "mem_total_mb": host.mem_total_mb,
                  "driver_mem": os.environ["SPARK_GRAFT_DRIVER_MEM"],
                  "spark_cpus": os.environ["SPARK_GRAFT_CPUS"],
-                 "load1_start": host.load1_start, "steal_frac": host.steal_frac(),
+                 "load1_start": host.load1_start, "steal_share": steal,
+                 "steal_limit": STEAL_LIMIT,
                  "jvm_peak_rss_mb": ctx.layers["engine.peak_rss_mb"][0],
                  "py_peak_rss_mb": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024},
+        "run_s": time.perf_counter() - T_START,
         "attempted": ctx.attempted, "failed": ctx.failed, "problems": ctx.problems,
         "e2e": {k: {"value": v, "n": n} for k, (v, n) in ctx.e2e.items()},
         "layers": {k: {"value": v, "unit": u, "n_or_reason": n}
@@ -306,15 +340,11 @@ def report(args, bench, params, host, ctx, tracer, items) -> int:
         "raw": ctx.raw,
     }
     os.makedirs(OUT, exist_ok=True)
-    stem = f"{args.workload}-seed{args.seed}-trace{args.trace}"
+    stem = f"{args.workload}-{prog}-seed{args.seed}-trace{args.trace}"
     with open(os.path.join(OUT, stem + ".json"), "w") as f:
         json.dump(record, f, indent=1)
-    untraced_log = os.path.join(OUT, "untraced.jsonl")
     if args.trace:
-        overhead(args.workload, ctx.e2e, untraced_log)
-    else:
-        with open(untraced_log, "a") as f:
-            f.write(json.dumps({"workload": args.workload, "e2e": record["e2e"]}) + "\n")
+        overhead(record)
 
     metrics = {}
     for m in wanted:
@@ -326,21 +356,23 @@ def report(args, bench, params, host, ctx, tracer, items) -> int:
     return 0
 
 
-def overhead(workload, e2e, log_path):
-    """Traced end-to-end values against the median of the untraced runs on record."""
-    past = []
-    if os.path.exists(log_path):
-        with open(log_path) as f:
-            past = [r["e2e"] for r in map(json.loads, f) if r["workload"] == workload]
-    for name, (value, _) in e2e.items():
-        vals = [r[name]["value"] for r in past if name in r]
-        if not vals:
-            print(f"{workload:7s} trace.overhead.{name:19s} {'absent':>12s} ratio  "
-                  f"no untraced run on record")
+def overhead(traced):
+    """Traced end-to-end values against the untraced run of the same
+    workload, program and seed, when one is on record and valid."""
+    wl = traced["workload"]
+    path = os.path.join(OUT, f"{wl}-{traced['program']}-seed{traced['seed']}-trace0.json")
+    base = load_json(path) if os.path.exists(path) else None
+    why = ("no untraced run of this program and seed on record" if base is None
+           else "the untraced run is invalid" if not base["valid"]
+           else "this traced run is invalid" if not traced["valid"] else None)
+    for name, rec in traced["e2e"].items():
+        if why:
+            print(f"{wl:7s} trace.overhead.{name:19s} {'absent':>12s} ratio  {why}")
             continue
-        ratio = value / statistics.median(vals) - 1.0
-        print(f"{workload:7s} trace.overhead.{name:19s} {fmt(ratio):>12s} ratio  "
-              f"traced/untraced-1, untraced n={len(vals)}")
+        ratio = rec["value"] / base["e2e"][name]["value"] - 1.0
+        better = "higher" if name == "items_per_s" else "lower"
+        print(f"{wl:7s} trace.overhead.{name:19s} {fmt(ratio):>12s} ratio  "
+              f"traced/untraced-1 ({better} is better), same seed")
 
 
 def run_all(args) -> int:
@@ -365,11 +397,29 @@ def main() -> int:
         return run_all(args)
 
     def deadline(*_):
-        raise TimeoutError(f"run exceeded {DEADLINE_S} s")
+        signal.signal(signal.SIGALRM, hard_stop)
+        signal.alarm(GRACE_S)
+        raise Deadline(f"run exceeded {DEADLINE_S} s")
+
+    def hard_stop(*_):
+        """Clean-up overran too: kill the JVM and leave without a result."""
+        from pyspark import SparkContext
+
+        proc = getattr(SparkContext._gateway, "proc", None)
+        if proc is not None:
+            proc.kill()
+            proc.wait()
+        os._exit(3)
 
     signal.signal(signal.SIGALRM, deadline)
     signal.alarm(DEADLINE_S)
-    return run_one(args)
+    try:
+        return run_one(args)
+    except Deadline as e:
+        print(f"perfbench: {e}; no result", file=sys.stderr)
+        return 3
+    finally:
+        signal.alarm(0)
 
 
 if __name__ == "__main__":
