@@ -28,11 +28,30 @@ from pyspark.sql import DataFrame, Window, functions as F
 from fuel_spark.functions import det_key
 
 
+def scheme_order(
+    df: DataFrame, key: str, shuffled: bool = False, seed: int = 42
+) -> tuple[DataFrame, list[str]]:
+    """The scheme's total order: ``(det_key(seed, key), key)`` when
+    shuffled, ``key`` when sequential.
+
+    Returns ``df`` with the order columns (the shuffled md5 key rides
+    as ``_ord``, computed once per row rather than per comparison) and
+    their names; an example's position is its 0-based rank in
+    ``orderBy(*names)``.  :func:`with_positions` and
+    ``streams.DataStream`` both order by this, so a stream's epoch and
+    its scheme's ``pos`` cannot drift apart.
+    """
+    if shuffled:
+        return df.withColumn("_ord", det_key(seed, F.col(key))), ["_ord", key]
+    return df, [key]
+
+
 def with_positions(
     df: DataFrame, key: str, shuffled: bool = False, seed: int = 42,
     pos_col: str = "pos",
 ) -> DataFrame:
-    """Assign each example its 0-based iteration position.
+    """Assign each example its 0-based iteration position: its rank in
+    :func:`scheme_order`.
 
     Positions come from the partition-offset scheme
     (:func:`fuel_spark.ops.core.with_positions`): a *parallel*
@@ -44,11 +63,33 @@ def with_positions(
     """
     from fuel_spark.ops.core import with_positions as _core_positions
 
-    if shuffled:
-        d = df.withColumn("_ord", det_key(seed, F.col(key)))
-        out = _core_positions(d, ["_ord", key], pos_col=pos_col, base=0)
-        return out.drop("_ord")
-    return _core_positions(df, key, pos_col=pos_col, base=0)
+    d, order = scheme_order(df, key, shuffled, seed)
+    out = _core_positions(d, order, pos_col=pos_col, base=0)
+    return out.drop(*(c for c in order if c not in df.columns))
+
+
+def order_at(
+    df: DataFrame, key: str, pos: int, shuffled: bool = False, seed: int = 42
+) -> tuple | None:
+    """The :func:`scheme_order` values of the example at 0-based
+    position ``pos``, or None when ``pos`` is past the end.
+
+    Runs the distributed positions pass over the key column alone and
+    keeps the one row at ``pos``: the sort stays parallel and the
+    driver receives a single row at any ``pos`` (an
+    ``orderBy().offset(pos)`` would plan as a top-(pos + 1) per
+    partition merged on the driver).
+    """
+    from fuel_spark.ops.core import with_positions as _core_positions
+
+    d, order = scheme_order(df.select(key), key, shuffled, seed)
+    rows = (
+        _core_positions(d, order, pos_col="_pos", base=0)
+        .where(F.col("_pos") == pos)
+        .select(*order)
+        .collect()
+    )
+    return tuple(rows[0]) if rows else None
 
 
 def sequential_batches(

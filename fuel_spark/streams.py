@@ -7,11 +7,16 @@ Reference parity: ``fuel/streams.py:122`` DataStream,
 This is the switch-over surface for a fuel user: wrap any DataFrame,
 pick an iteration scheme, and iterate epochs of numpy minibatches —
 ``next(epoch)`` yields ``{source_name: np.ndarray}`` exactly like
-fuel's ``as_dict`` iterators.  Underneath, batch identity is computed
-distributed (fuel_spark.schemes) and rows stream to the driver through
-``toLocalIterator`` (one partition in flight, Arrow-encoded) — the
-training loop consumes 100 TB without the driver ever holding more
-than a batch.
+fuel's ``as_dict`` iterators, each array in its column's stored dtype.
+
+An epoch is ONE range-partitioned parallel sort of the payload by the
+scheme's total order (:func:`fuel_spark.schemes.scheme_order`): no
+positions pass, no checkpoint, no broadcast, no second exchange, and no
+Spark job until the first batch is asked for.  Rows reach the driver in
+that order through ``toLocalIterator(prefetchPartitions=True)``, which
+ships pickled rows one partition at a time with the next partition
+prefetched — so the driver holds at most two partitions, never the
+dataset — and the driver cuts them into minibatches as they arrive.
 
 Shuffled epochs re-key per epoch (seed + epoch), matching fuel's
 fresh-permutation-per-epoch contract without any driver-side index
@@ -23,9 +28,54 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from fuel_spark import schemes
+
+# Spark element type -> the numpy dtype fuel would have stored it as
+_NUMPY_DTYPES = {
+    T.ByteType: np.int8,
+    T.ShortType: np.int16,
+    T.IntegerType: np.int32,
+    T.LongType: np.int64,
+    T.FloatType: np.float32,
+    T.DoubleType: np.float64,
+}
+
+
+def _stored_dtype(t: T.DataType):
+    """numpy dtype of a column (array columns: of their elements), or
+    None to let numpy infer it."""
+    while isinstance(t, T.ArrayType):
+        t = t.elementType
+    return _NUMPY_DTYPES.get(type(t))
+
+
+def _to_array(values: tuple, dtype) -> np.ndarray:
+    """One source's minibatch in its stored dtype (smallint -> int16,
+    float -> float32, ...).  A NULL in a float or double column (or
+    inside a float array) becomes NaN.  A NULL in an integer column has
+    no numpy value, so that batch keeps numpy's inferred (object)
+    array with None in it."""
+    try:
+        return np.asarray(values, dtype=dtype)
+    except TypeError:
+        return np.asarray(values)
+
+
+def _at_or_after(order: list[str], cursor: tuple) -> Column:
+    """Rows at or after ``cursor`` in the ascending, nulls-first
+    lexicographic order of the ``order`` columns (Spark's ``orderBy``
+    default).  A NULL comparison drops the row, which is right: it
+    only arises where the row sorts before the cursor."""
+    cond = F.lit(True)
+    for name, v in reversed(list(zip(order, cursor))):
+        c = F.col(name)
+        if v is None:
+            cond = c.isNotNull() | (c.isNull() & cond)
+        else:
+            cond = (c > F.lit(v)) | ((c == F.lit(v)) & cond)
+    return cond
 
 
 class DataStream:
@@ -60,37 +110,42 @@ class DataStream:
     def sources(self) -> tuple[str, ...]:
         return tuple(self.df.columns)
 
-    def _planned(self, epoch: int) -> DataFrame:
-        if self.shuffled:
-            return schemes.shuffled_batches(
-                self.df, self.key, self.batch_size, seed=self.seed + epoch
-            )
-        return schemes.sequential_batches(self.df, self.key, self.batch_size)
-
-    def _epoch_df(self, epoch: int, from_batch: int = 0) -> DataFrame:
-        planned = self._planned(epoch)
+    def _epoch_df(self, epoch: int, from_batch: int = 0) -> DataFrame | None:
+        """The epoch's rows in scheme order from minibatch ``from_batch``
+        on, or None when that minibatch is past the end.  Resuming
+        filters the payload at the cursor BEFORE the sort, so rows
+        already consumed are never shuffled (fuel pickles the in-flight
+        iterator instead: reference fuel/iterator.py:8,
+        tests/test_serialization.py)."""
+        seed = self.seed + epoch
+        d, order = schemes.scheme_order(self.df, self.key, self.shuffled, seed)
         if from_batch:
-            # batch ids are a deterministic function of (key, seed,
-            # epoch), so "resume at batch k" is a plain filter Catalyst
-            # pushes toward the scan — no driver-side iterator state to
-            # pickle (fuel serializes the in-flight iterator instead:
-            # reference fuel/iterator.py:8, tests/test_serialization.py).
-            planned = planned.where(planned["batch_id"] >= from_batch)
-        return planned.orderBy("pos").drop("pos", "batch_id")
+            cursor = schemes.order_at(
+                self.df, self.key, from_batch * self.batch_size,
+                self.shuffled, seed,
+            )
+            if cursor is None:
+                return None
+            d = d.where(_at_or_after(order, cursor))
+        d = d.orderBy(*order)
+        return d.drop(*(c for c in order if c not in self.df.columns))
 
     def _batched_iter(self, epoch: int, from_batch: int, as_dict: bool) -> Iterator:
         cols = self.df.columns
+        dtypes = [_stored_dtype(f.dataType) for f in self.df.schema.fields]
 
         def gen():
-            buf: list[tuple] = []
             df = self._epoch_df(epoch, from_batch)
+            if df is None:
+                return
+            buf: list[tuple] = []
             for row in df.toLocalIterator(prefetchPartitions=True):
                 buf.append(tuple(row))
                 if len(buf) == self.batch_size:
-                    yield self._to_batch(buf, cols, as_dict)
+                    yield self._to_batch(buf, cols, dtypes, as_dict)
                     buf = []
             if buf:
-                yield self._to_batch(buf, cols, as_dict)
+                yield self._to_batch(buf, cols, dtypes, as_dict)
 
         return gen()
 
@@ -124,8 +179,8 @@ class DataStream:
         self._epoch = 0
 
     @staticmethod
-    def _to_batch(rows: list[tuple], cols: list[str], as_dict: bool):
-        arrays = [np.asarray(col) for col in zip(*rows)]
+    def _to_batch(rows: list[tuple], cols: list[str], dtypes: list, as_dict: bool):
+        arrays = [_to_array(col, dt) for col, dt in zip(zip(*rows), dtypes)]
         if as_dict:
             return dict(zip(cols, arrays))
         return tuple(arrays)
