@@ -16848,7 +16848,7 @@ def oracle_sql() -> dict[str, str]:
     
     """
 
-    sqls["text_pii_by_source"] = """
+    sqls["text_pii_by_source"] = r"""
         WITH inj AS (
           SELECT doc_id, source,
                  CASE WHEN doc_id % 5 = 0 THEN

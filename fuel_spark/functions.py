@@ -16,24 +16,41 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Round-robin repartition when the scan produced fewer partitions
-    than the cluster has cores.
+def ensure_parallelism(df: DataFrame, *keys: str) -> DataFrame:
+    """Spread ``df`` over ``defaultParallelism`` partitions, in the plan.
 
-    Heavy narrow ops (minhash, simhash, per-row vector math) are
-    CPU-bound: at 100 TB the scan naturally yields thousands of splits,
-    but a small table arrives as 1 partition and would single-thread a
-    32-core stage.  One cheap round-robin exchange unlocks full-width
-    codegen; skipped entirely when the input is already wide enough.
+    Heavy narrow ops (shingling, minhash, cosines, set intersections)
+    are CPU-bound, and a small input arrives in one or two row-bearing
+    partitions and would single-thread the stage.  The rule is one
+    exchange to full width: round-robin without ``keys``, hashed on
+    ``keys`` otherwise (so it also satisfies a following join or
+    aggregation on them).  The count is explicit because an
+    explicit-count exchange is exempt from AQE's size-based
+    coalescing, so the width holds even when the rows are bytes-tiny.
+
+    The decision reads the plan and never runs a Spark job (counting
+    partitions runs the shuffles below a post-shuffle frame as a hidden
+    job, and a scan's split count says nothing about how many splits
+    hold rows).  Two frames are returned unchanged:
+
+    - a streaming ``df``: micro-batch width is the source's concern;
+    - without ``keys``, a plain file scan (no exchange, so Spark plans
+      it without an AdaptiveSparkPlan root) over at least
+      ``defaultParallelism`` files: every core already has a file, and
+      the exchange would cost a per-partition sort
+      (``sortBeforeRepartition``) plus a round-robin shuffle of the
+      projected rows.
     """
     if df.isStreaming:
-        # micro-batch width is the source's concern; .rdd is also
-        # unavailable on streaming plans
         return df
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if (
+        not keys
+        and len(df.inputFiles()) >= n
+        and df._jdf.queryExecution().executedPlan().nodeName() != "AdaptiveSparkPlan"
+    ):
+        return df
+    return df.repartition(n, *keys)
 
 # The r10/r11 narrow-frame checkpoint rule, written down (VERDICT r10
 # ask #8): a multi-referenced frame is worth a lazy localCheckpoint

@@ -233,11 +233,8 @@ def ngram_jaccard_pairs(
     # ids), so AQE's size-based coalescing folds them into one
     # partition and the shingle-set intersections — the CPU-heavy
     # part — run single-threaded (measured 15.6s vs 1.9s on the same
-    # 125k pairs).  An explicit-count round-robin exchange is exempt
-    # from AQE coalescing; cost is one shuffle of narrow rows.
-    cands = cands.repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
+    # 125k pairs).  Cost is one shuffle of narrow rows.
+    cands = ensure_parallelism(cands)
     carry = dict(carry_exprs or {})
     sh = ensure_parallelism(
         df.select(
@@ -806,12 +803,9 @@ def containment_pairs(
         df, id_col, text_col, num_hashes, bands, shingle_k,
         max_bucket=max_bucket, distinct_pairs=False,
     )
-    # same AQE-coalesce guard as the jaccard verify (see
-    # ngram_jaccard_pairs): tiny pair bytes must not single-thread
-    # the set intersections
-    cands = cands.repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
+    # same width pin as the jaccard verify (see ngram_jaccard_pairs):
+    # tiny pair bytes must not single-thread the set intersections
+    cands = ensure_parallelism(cands)
     sh = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
     sh = sh.select(F.col(id_col), norm_text(F.col(text_col)).alias("_norm"))
     sh = sh.select(F.col(id_col), shingles_over_norm("_norm", shingle_k).alias("sh"))
@@ -1502,9 +1496,7 @@ def fuzzy_join(
     b = _sh(right, right_id, right_text, "id_r", "_sh_r")
     # pin the verify width (see ngram_jaccard_pairs): tiny pair bytes
     # must not let AQE single-thread the set intersections
-    cand = cand.repartition(
-        left.sparkSession.sparkContext.defaultParallelism
-    )
+    cand = ensure_parallelism(cand)
     return (
         cand.join(a, "id_l")
         .join(b, "id_r")
@@ -2447,9 +2439,7 @@ def edit_distance_pairs(
     # so every downstream pass (segment indexing, probe explosion,
     # restoration) inherited near-serial parallelism (profiled: the
     # probe-generation stage ran 2 tasks wide under a 9.6s CPU load).
-    groups = groups.repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    ).localCheckpoint(eager=False)
+    groups = ensure_parallelism(groups).localCheckpoint(eager=False)
 
     # -- index: own segmentation, keyed xxhash64(own length, seg idx,
     # content)
@@ -2527,18 +2517,16 @@ def edit_distance_pairs(
     # r11: both bucket aggregations emit ~1.3MB of partial sets, so
     # AQE coalesced the final collect_set+array_sort merge to ONE
     # task (profiled: 4.2s of single-threaded CPU of a 6.8s wall).
-    # An explicit-count key repartition is AQE-coalesce-exempt and
-    # satisfies the aggregation's distribution, keeping the merge at
-    # full width; the raw (_id, _k) rows it shuffles are 16 bytes.
-    par = df.sparkSession.sparkContext.defaultParallelism
+    # A key repartition satisfies the aggregation's distribution,
+    # keeping the merge at full width; the raw (_id, _k) rows it
+    # shuffles are 16 bytes.
     gi = (
-        idx_long.unionByName(idx_short)
-        .repartition(par, "_k")
+        ensure_parallelism(idx_long.unionByName(idx_short), "_k")
         .groupBy("_k")
         .agg(F.array_sort(F.collect_set("_id")).alias("_ai"))
     )
     gp = (
-        probes.repartition(par, "_k")
+        ensure_parallelism(probes, "_k")
         .groupBy("_k")
         .agg(F.array_sort(F.collect_set("_id")).alias("_ap"))
     )
@@ -2549,17 +2537,15 @@ def edit_distance_pairs(
     # frames, so AQE coalesces the join read to ONE partition — and
     # the CPU-heavy pair explode fused into that stage ran
     # single-threaded (profiled: a 1-task stage with ~4s of CPU of a
-    # 6.8s wall at sf0.1).  An explicit-count round-robin repartition
-    # between join and explode is AQE-coalesce-exempt and fans the
-    # explode back out; the (ra, rb) hash repartition then both feeds
-    # the distinct (same keys — no second exchange) and pins the
-    # verify width (pair rows are bytes-tiny, AQE would coalesce them
-    # to one partition and single-thread the CPU-heavy levenshtein —
-    # same defect class fixed in minhash_candidate_pairs' verify,
-    # measured 15.6s -> 1.9s there).
+    # 6.8s wall at sf0.1).  A round-robin repartition between join and
+    # explode fans the explode back out; the (ra, rb) hash repartition
+    # then both feeds the distinct (same keys — no second exchange)
+    # and pins the verify width (pair rows are bytes-tiny, AQE would
+    # coalesce them to one partition and single-thread the CPU-heavy
+    # levenshtein — same defect class fixed in minhash_candidate_pairs'
+    # verify, measured 15.6s -> 1.9s there).
     pairs = (
-        gi.join(gp, "_k")
-        .repartition(par)
+        ensure_parallelism(gi.join(gp, "_k"))
         .select(F.explode("_ai").alias("_x"), "_ap")
         .select("_x", F.explode("_ap").alias("_y"))
         .where(F.col("_x") != F.col("_y"))
@@ -2567,9 +2553,8 @@ def edit_distance_pairs(
             F.least("_x", "_y").alias("ra"),
             F.greatest("_x", "_y").alias("rb"),
         )
-        .repartition(par, "ra", "rb")
-        .distinct()
     )
+    pairs = ensure_parallelism(pairs, "ra", "rb").distinct()
     ta = groups.select(F.col("_id").alias("ra"), F.col("_t").alias("_ta"))
     tb = groups.select(F.col("_id").alias("rb"), F.col("_t").alias("_tb"))
     rep_pairs = (

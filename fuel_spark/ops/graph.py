@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fuel_spark.functions import checkpoint_if_narrow
+from fuel_spark.functions import checkpoint_if_narrow, ensure_parallelism
 
 DEC = "decimal(27,18)"
 
@@ -342,16 +342,14 @@ def triangle_stats(
     )
     ed = ed.localCheckpoint(eager=False)  # wedge join + closing join
     # width pin: oriented-edge rows are bytes-tiny (two ids), the
-    # repo-wide AQE-coalesce defect class — the explicit-count
-    # repartition keeps the wedge expansion parallel on SPARSE graphs
-    # where the frame is kilobytes.  On the dense co-purchase graph
-    # it measures neutral (34-41s at 10x either way): there the cost
-    # IS the wedge volume — 148M unoriented wedges at sf0.1, 10x data
+    # repo-wide AQE-coalesce defect class — the pin keeps the wedge
+    # expansion parallel on SPARSE graphs where the frame is
+    # kilobytes.  On the dense co-purchase graph it measures neutral
+    # (34-41s at 10x either way): there the cost IS the wedge
+    # volume — 148M unoriented wedges at sf0.1, 10x data
     # -> 10x wedges -> 10x wall-clock, linear in the answer size the
     # orientation already bounds at sum C(outdeg,2) <= m^1.5
-    ed = ed.repartition(
-        edges.sparkSession.sparkContext.defaultParallelism, "u"
-    )
+    ed = ensure_parallelism(ed, "u")
     w1 = ed.select(F.col("u"), F.col("w").alias("x"))
     w2 = ed.select(F.col("u"), F.col("w").alias("y"))
     wedges = (
@@ -510,11 +508,8 @@ def link_prediction(
     )
     adjc = adj.join(ctr, "w")
     # width pin: (id, id, deg) rows are bytes-tiny — the repo-wide
-    # AQE-coalesce class; explicit-count repartition keeps the wedge
-    # expansion parallel
-    adjc = adjc.repartition(
-        edges.sparkSession.sparkContext.defaultParallelism, "w"
-    )
+    # AQE-coalesce class; the pin keeps the wedge expansion parallel
+    adjc = ensure_parallelism(adjc, "w")
     wx = adjc.select("w", F.col("x").alias("_xa"), "_dw")
     wy = adjc.select("w", F.col("x").alias("_xb"))
     wedges = (

@@ -79,21 +79,19 @@ def cosine_pairs_within(
     their anchor row), so join work is Σ_small n² + Σ_large n, never
     corpus².
     """
-    # explicit-count repartition on the block key: the blocked join's
-    # shuffle output is bytes-small at moderate scale, AQE coalesces
-    # it to one partition, and the per-pair cosine lambdas — the
-    # CPU-heavy part — run single-threaded (the 20× smoke measured
-    # 54s for semantic_dedup, 6.6s of it one task computing 380k
-    # cosines).  Explicit counts are exempt from coalescing.
-    width = corpus.sparkSession.sparkContext.defaultParallelism
-    a = corpus.select(
+    # width pin on the block key: the blocked join's shuffle output is
+    # bytes-small at moderate scale, AQE coalesces it to one
+    # partition, and the per-pair cosine lambdas — the CPU-heavy part
+    # — run single-threaded (the 20× smoke measured 54s for
+    # semantic_dedup, 6.6s of it one task computing 380k cosines).
+    a = ensure_parallelism(corpus.select(
         F.col(group_col).alias("g"), F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
-    ).repartition(width, "g")
-    b = corpus.select(
+    ), "g")
+    b = ensure_parallelism(corpus.select(
         F.col(group_col).alias("g"), F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("vb"),
-    ).repartition(width, "g")
+    ), "g")
     if max_block is not None:
         sizes = corpus.groupBy(F.col(group_col).alias("g")).agg(
             F.min(id_col).alias("_anchor"), F.count(F.lit(1)).alias("_n")
@@ -724,13 +722,10 @@ def pivot_lsh_ann(
             )
         )
 
-    # explicit-count repartition: the bucketed corpus is bytes-small
-    # after the agg and AQE would coalesce it, single-threading the
-    # CPU-heavy candidate cosines (the pivot-IVF lesson)
-    width = corpus.sparkSession.sparkContext.defaultParallelism
-    cb = bucketed(corpus, "neighbor_id", "cvec").repartition(
-        width, "neighbor_id"
-    )
+    # width pin: the bucketed corpus is bytes-small after the agg and
+    # AQE would coalesce it, single-threading the CPU-heavy candidate
+    # cosines (the pivot-IVF lesson)
+    cb = ensure_parallelism(bucketed(corpus, "neighbor_id", "cvec"), "neighbor_id")
     qb = bucketed(queries, "query_id", "qvec")
     if probes >= 1:
         masks = [1 << p for p in range(n_planes)]
@@ -1698,12 +1693,11 @@ def pivot_ivf_ann(
     # assignment: nearest pivot by (rounded) cosine, ties to the
     # lowest pivot id — min(struct(-cos, pivot_id)) is the argmin with
     # a deterministic tie-break and map-side partial aggregation.
-    # Explicit-count repartition after the agg: the assigned frame is
-    # bytes-small, AQE would coalesce it and single-thread the
-    # CPU-heavy candidate cosines downstream (measured 2.5x on the
-    # 20x smoke for the PQ sibling); explicit counts are exempt.
-    width = corpus.sparkSession.sparkContext.defaultParallelism
-    assigned = (
+    # Width pin after the agg: the assigned frame is bytes-small, AQE
+    # would coalesce it and single-thread the CPU-heavy candidate
+    # cosines downstream (measured 2.5x on the 20x smoke for the PQ
+    # sibling).
+    assigned = ensure_parallelism(
         c.crossJoin(pivots)
         .withColumn("_negcos", -F.round(cosine_expr("cvec", "pvec"), 6))
         .groupBy("neighbor_id")
@@ -1713,8 +1707,8 @@ def pivot_ivf_ann(
         )
         .select(
             "neighbor_id", "cvec", F.col("_m.pivot_id").alias("bucket")
-        )
-        .repartition(width, "neighbor_id")
+        ),
+        "neighbor_id",
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
@@ -1800,12 +1794,11 @@ def pivot_pq_ann(
     )
     # encode: per (vector, subspace) the L2-nearest codeword, ties to
     # the lowest pivot id — groupBy argmin, no window over fact rows.
-    # Explicit-count repartition: the code frame is 3 small ints per
-    # row, AQE's byte-based coalesce folds it to ~1 partition and
-    # single-threads the ADC dot stage downstream (measured 4.0s vs
-    # 1.6s at the 20x smoke); explicit counts are exempt.
-    width = corpus.sparkSession.sparkContext.defaultParallelism
-    enc = (
+    # Width pin: the code frame is 3 small ints per row, AQE's
+    # byte-based coalesce folds it to ~1 partition and single-threads
+    # the ADC dot stage downstream (measured 4.0s vs 1.6s at the 20x
+    # smoke).
+    enc = ensure_parallelism(
         c.select(
             "neighbor_id", F.explode(subspaces).alias("j"),
             F.expr(f"slice(cvec, j * {sub} + 1, {sub})").alias("csub"),
@@ -1814,8 +1807,8 @@ def pivot_pq_ann(
         .withColumn("_d", F.round(l2sq_expr("csub", "sub_vec"), 6))
         .groupBy("neighbor_id", "j")
         .agg(F.min(F.struct(F.col("_d"), F.col("pivot_id"))).alias("_m"))
-        .select("neighbor_id", "j", F.col("_m.pivot_id").alias("code"))
-        .repartition(width, "neighbor_id")
+        .select("neighbor_id", "j", F.col("_m.pivot_id").alias("code")),
+        "neighbor_id",
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")

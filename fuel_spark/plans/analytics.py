@@ -31,11 +31,13 @@ def pricing_summary(t: dict[str, DataFrame]) -> DataFrame:
     groupBy has 4 groups so partial aggregation collapses nearly all
     rows map-side.  Scales linearly with lineitem bytes.
 
-    ensure_parallelism widens a narrower-than-cluster scan (a
+    ensure_parallelism widens a scan of fewer files than cores (a
     single-row-group file parallelizes the decimal aggregation 1.7×
-    measured at sf0.1) and is a no-op at real scale, where the scan
-    already yields thousands of splits; the filter still pushes to
-    parquet below the exchange (plan-asserted).
+    measured at sf0.1); the filter still pushes to parquet below the
+    exchange (plan-asserted).  A scan of at least that many files is
+    left alone, so partial aggregation still runs before any shuffle:
+    at 20× (22 lineitem files, 4 cores) the exchange took the median
+    from 11.1 to 16.3 s.
     """
     from fuel_spark.functions import ensure_parallelism
 

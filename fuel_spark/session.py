@@ -29,7 +29,7 @@ DEFAULT_CONF = {
     # overhead (profiled: linkage's six hottest stages were 64 tasks
     # over 0.1 MB).  With the flag on the loop width tracks data size
     # at ANY scale — the guide's "scale-adaptive partitioning, not a
-    # constant" (§2).  Interleaved 7-rep A/B (ab_r11g):
+    # constant" (§2).  Interleaved 7-rep A/B (OPTIMIZATION_r11.md):
     # linkage_pipeline 7/7 wins, median 6.69->4.32s; textrank and the
     # data-scaled part_pagerank par-to-better; outputs identical.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",

@@ -16,6 +16,18 @@ def test_entry_returns_rows(spark):
     assert "sum_qty" in df.columns
 
 
+def test_entry_module_compiles_without_warnings():
+    """Oracle SQL holds regex text: a backslash in a non-raw string is
+    an invalid escape (a SyntaxWarning from Python 3.12 on)."""
+    import warnings
+
+    with open(E.__file__, encoding="utf-8") as f:
+        src = f.read()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        compile(src, E.__file__, "exec")
+
+
 def test_oracle_keys_subset_of_queries():
     q = set(E.queries())
     o = set(E.oracle_sql())

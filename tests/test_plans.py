@@ -6,9 +6,11 @@ parquet scan, projections prune the read schema, dimension joins
 broadcast, and the scale-path batcher stays shuffle-free.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from fuel_spark import schemes
+from fuel_spark.functions import ensure_parallelism
 from fuel_spark.sources import from_rows, load_tables
 from fuel_spark.plans import analytics
 
@@ -56,6 +58,60 @@ def test_semi_join_for_exists(spark):
     t = load_tables(spark, SF)
     p = _plan(analytics.order_priority_counts(t))
     assert "LeftSemi" in p
+
+
+_SPLIT_CONF = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+
+
+@pytest.mark.parametrize(
+    "source",
+    ["post_shuffle", "one_row_group_parquet", "streaming", "many_files", "many_files_post_shuffle"],
+)
+def test_ensure_parallelism_decides_from_the_plan(spark, tmp_path, source):
+    """The one width rule, decided without running a Spark job.  A batch
+    frame gets a round-robin exchange to defaultParallelism unless it is
+    a plain scan of at least that many files; a streaming frame is
+    returned unchanged.  The one-row-group case is a file whose scan has
+    >= defaultParallelism byte splits but only one split holding rows:
+    a partition count would call it wide."""
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    saved = {k: spark.conf.get(k) for k in _SPLIT_CONF}
+    try:
+        if source == "post_shuffle":
+            df = spark.range(10000).groupBy((F.col("id") % 7).alias("k")).count()
+        elif source == "one_row_group_parquet":
+            path = str(tmp_path / "one_row_group")
+            spark.range(50000).selectExpr("id", "md5(cast(id AS string)) AS h") \
+                .coalesce(1).write.parquet(path)
+            for k in _SPLIT_CONF:
+                spark.conf.set(k, "16k")
+            df = spark.read.parquet(path)
+            assert df.rdd.getNumPartitions() >= n
+            assert df.select(F.spark_partition_id()).distinct().count() == 1
+        elif source.startswith("many_files"):
+            path = str(tmp_path / "many_files")
+            spark.range(1000 * n).repartition(n).write.parquet(path)
+            df = spark.read.parquet(path).where("id % 3 = 0")
+            assert len(df.inputFiles()) == n
+            if source == "many_files_post_shuffle":
+                df = df.groupBy((F.col("id") % 7).alias("k")).count()
+        else:
+            df = spark.readStream.format("rate").load()
+        group = f"test-plans-width-{source}"
+        sc.setJobGroup(group, "ensure_parallelism")
+        try:
+            out = ensure_parallelism(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        if source in ("streaming", "many_files"):
+            assert out is df
+        else:
+            assert f"RoundRobinPartitioning({n})" in _plan(out)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_partition_local_batches_no_exchange(spark):
