@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from fuel_spark import schemes
 from fuel_spark.ops import core, dedup, linkage, multimodal, pixels, sequences, similarity
-from fuel_spark.functions import round6_ratio
+from fuel_spark.functions import materialize, round6_ratio
 from fuel_spark.ops import profile as profile_ops
 from fuel_spark.ops import curate as curate_ops
 from fuel_spark.ops import sketch
@@ -1676,22 +1676,19 @@ def q_curation_pipeline(spark, sf, prededup_exact: bool = True):
     d = _t(spark, sf)["documents"]
     corpus = d.where(F.col("doc_id") >= 20).select("doc_id", "text", "lang")
     bench = d.where(F.col("doc_id") < 20).select("text")
-    # r10 optimization (guide §5 localCheckpoint / verify-skill replay
-    # note): `kept` is referenced 2-3x inside apply_dedup (digest
-    # rollup, sketch input, final anti-join) and `deduped` 4x
-    # (decontaminate's gram pass + id spine, the clean join) — Spark
-    # replays multi-referenced subtrees (no ReusedExchange across the
-    # anti-join), so without the two lazy checkpoints the quality pass
-    # and the whole near-dup pipeline re-run per reference.
-    kept = (
+    # `kept` is consumed 2-3x inside apply_dedup (digest rollup,
+    # sketch input, final anti-join) and `deduped` 4x (decontaminate's
+    # gram pass + id spine, the clean join).
+    kept = materialize(
         text_ops.quality_score(corpus, "text")
         .where(F.col("quality") >= 0.9)
         .select("doc_id", "text", "lang")
-        .localCheckpoint(eager=False)
     )
-    deduped = dedup.apply_dedup(
-        kept, "doc_id", "text", threshold=0.5, prededup_exact=prededup_exact
-    ).localCheckpoint(eager=False)
+    deduped = materialize(
+        dedup.apply_dedup(
+            kept, "doc_id", "text", threshold=0.5, prededup_exact=prededup_exact
+        )
+    )
     flags = dedup.decontaminate(deduped, "doc_id", "text", bench, "text", n=3)
     clean = deduped.join(
         flags.where(~F.col("contaminated")).select("doc_id"), "doc_id"
@@ -2063,19 +2060,16 @@ def q_pretrain_pipeline(spark, sf):
     # shuffle carries each distinct text roughly once instead of
     # digests twice plus the full corpus once through the SMJ — and
     # `kept` is referenced exactly once (no subtree replay).
-    # lazy localCheckpoint: the substring stage references its input
-    # three times (seed pass, span-hash word arrays, rebuild pass) and
-    # Spark replays multi-referenced subtrees — without this the
-    # filter+dedup chain upstream runs ~5x (measured 9.7s -> 6.8s at
-    # sf0.1, rows/hashes unchanged)
-    deduped = (
+    # consumed 3x by the substring stage (seed pass, span-hash word
+    # arrays, rebuild pass): measured 9.7s -> 6.8s at sf0.1, rows and
+    # hashes unchanged
+    deduped = materialize(
         kept.groupBy(F.md5(F.col("text")).alias("_h"))
         .agg(
             F.min("doc_id").alias("doc_id"),
             F.min_by("text", "doc_id").alias("text"),
         )
         .select("doc_id", "text")
-        .localCheckpoint(eager=False)
     )
     cleaned = dedup.exact_substring_apply(
         deduped, "doc_id", "text", min_len=10, seed_k=5
@@ -4293,15 +4287,9 @@ def q_image_geometry_cert(spark, sf):
     checksum of the original grid, after one 90-degree rotation, and
     after a horizontal flip — plus the two identity laws (rotate x4
     == id, flip x2 == id) as booleans the oracle re-derives."""
-    # tag once, lazily materialize once: five certificate branches
-    # reference the same synthetic frame, and Spark replays
-    # multi-referenced subtrees (no ReusedExchange) — measured 25.7s
-    # -> ~5s at the 20x tier
-    px = (
-        _px(spark, sf)
-        .join(_doc_src(spark, sf), "id")
-        .localCheckpoint(eager=False)
-    )
+    # consumed 5x by the certificate branches: measured 25.7s -> ~5s
+    # at the 20x tier
+    px = materialize(_px(spark, sf).join(_doc_src(spark, sf), "id"))
 
     def chk(frame, name):
         return frame.groupBy(
@@ -5416,9 +5404,11 @@ def q_curation_grid(spark, sf):
     # pin the scored frame: 6 grid cells + the total each reference
     # it, and quality_score's regex features are the whole cost
     # (7 recomputes measured 54s at the 20x smoke; pinned ~8s)
-    scored = text_ops.quality_score(d, "text").select(
-        "quality", F.col("n_words").alias("nw")
-    ).localCheckpoint(eager=False)
+    scored = materialize(
+        text_ops.quality_score(d, "text").select(
+            "quality", F.col("n_words").alias("nw")
+        )
+    )
     tot = scored.agg(
         F.count(F.lit(1)).cast("bigint").alias("_td"),
         F.sum("nw").cast("bigint").alias("_tw"),

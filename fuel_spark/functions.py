@@ -52,73 +52,27 @@ def ensure_parallelism(df: DataFrame, *keys: str) -> DataFrame:
         return df
     return df.repartition(n, *keys)
 
-# The r10/r11 narrow-frame checkpoint rule, written down (VERDICT r10
-# ask #8): a multi-referenced frame is worth a lazy localCheckpoint
-# only when materializing it is cheaper than replaying its subtree per
-# reference, and the empirical boundary from the r10 measurements is
-# ROW WIDTH — id/hash/count frames (<= ~128 estimated bytes/row) won
-# every time (tf/unit/pos/seeds/flagged), while payload-expanding
-# frames lost (the shingle-array frame: materialization >= recompute).
-# Checkpoint caveat at cluster scale: localCheckpoint stores to
-# executor-local disk with NO lineage fallback — an executor loss
-# kills the job — so the budget errs small; a frame wide enough to be
-# worth durable storage should use reliableCheckpoint
-# (sc.setCheckpointDir + .checkpoint()) instead.
-NARROW_CHECKPOINT_ROW_BYTES = 128
 
-_FIXED_WIDTH_BYTES = {
-    "boolean": 1, "tinyint": 1, "smallint": 2, "int": 4, "integer": 4,
-    "bigint": 8, "long": 8, "float": 4, "double": 8, "date": 4,
-    "timestamp": 8, "timestamp_ntz": 8,
-}
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` once, for every later consumer: the one place
+    fuel_spark calls ``localCheckpoint``.
 
+    A DataFrame is a plan, and Spark replays an uncached subtree once
+    per reference (there is no ReusedExchange across separately built
+    consumers).  The rule is: materialize a frame that has two or more
+    consumers, or one that a loop carries into the next round (which
+    also keeps the loop's plan from growing with the round count).
 
-def est_row_bytes(dtype: str) -> int:
-    """Static per-row byte estimate for a simpleString dtype: fixed
-    widths for primitives, 48 for strings/binary (hash/id-sized — a
-    raw document column blows the budget by design: checkpointing
-    text frames needs a measurement, not this gate), 16x the element
-    estimate for arrays/maps (the r10 shingle-array loss case)."""
-    d = dtype.strip().lower()
-    if d in _FIXED_WIDTH_BYTES:
-        return _FIXED_WIDTH_BYTES[d]
-    if d.startswith("decimal"):
-        return 16
-    if d in ("string", "binary"):
-        return 48
-    if d.startswith("array<") and d.endswith(">"):
-        return 16 * est_row_bytes(d[6:-1])
-    if d.startswith("map<") and d.endswith(">"):
-        k, _, v = d[4:-1].partition(",")
-        return 16 * (est_row_bytes(k) + est_row_bytes(v or "string"))
-    if d.startswith("struct<") and d.endswith(">"):
-        # crude: fields split on top-level commas; good enough for the
-        # narrow structs this repo builds
-        total, depth, field = 0, 0, ""
-        for ch in d[7:-1] + ",":
-            if ch == "," and depth == 0:
-                total += est_row_bytes(field.partition(":")[2] or "string")
-                field = ""
-                continue
-            depth += ch in "<("
-            depth -= ch in ">)"
-            field += ch
-        return total
-    return 64  # unknown types: assume mid-width
+    The storage is executor-local with no lineage fallback: losing an
+    executor loses the blocks and fails the job that reads them.
 
-
-def checkpoint_if_narrow(
-    df: DataFrame, budget: int = NARROW_CHECKPOINT_ROW_BYTES
-) -> DataFrame:
-    """Lazy ``localCheckpoint`` for a multi-referenced frame IFF its
-    statically estimated row width fits the narrow budget; returns the
-    frame unchanged otherwise (replay stays cheaper than
-    materialization past the boundary — measured, see the rule
-    comment above)."""
-    width = sum(est_row_bytes(t) for _, t in df.dtypes)
-    if width <= budget:
-        return df.localCheckpoint(eager=False)
-    return df
+    The checkpoint is lazy in name only.  Under AQE the call runs the
+    exchanges beneath it at once, while the caller's plan is still
+    being built: 1 job over a hash exchange, 2 over a range exchange
+    (boundary sample + map stage), 0 over a narrow plan, whose rows
+    are stored by the first action that reads them.
+    """
+    return df.localCheckpoint(eager=False)
 
 
 def with_materialized(df: DataFrame, name: str, col: Column) -> DataFrame:

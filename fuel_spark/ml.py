@@ -19,7 +19,7 @@ from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
 
-from fuel_spark.functions import cosine_expr
+from fuel_spark.functions import cosine_expr, materialize
 
 
 def to_ml_vector(df: DataFrame, array_col: str, out_col: str = "features") -> DataFrame:
@@ -396,9 +396,9 @@ def kmeans_fixed(
     final centroid (round 6).
     """
     DECC = "decimal(27,18)"
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-    ).localCheckpoint(eager=False)  # scanned 2x per iteration + final
+    c = materialize(  # scanned 2x per iteration + final
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
+    )
     cent = broadcast(
         corpus.select(
             F.col(id_col).alias("cluster"), F.col(vec_col).alias("cvec")

@@ -19,6 +19,9 @@ from collections.abc import Mapping as MappingABC
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import ArrayType
 
+from fuel_spark.functions import materialize
+
+
 # -- Mapping (187) ---------------------------------------------------------
 
 
@@ -329,15 +332,10 @@ def _offset_positions(d: DataFrame, pos_col: str, base: int) -> DataFrame:
     and offset[pid] no longer matches the pid the row was numbered
     under: positions silently corrupt.  Found at the 20x tier (r9:
     half the order deciles vanished under a text-carrying frame);
-    the localCheckpoint guarantees both branches read the SAME
-    materialized layout at any plan shape.
-
-    The checkpoint is NOT lazy in effect: under AQE,
-    ``localCheckpoint(eager=False)`` runs the shuffle stages beneath it
-    when it is called — 2 jobs over a range exchange (boundary sample +
-    map stage), 1 over a hash exchange, 0 over a narrow plan — so every
-    caller pays for the sort while its plan is still being built."""
-    d = d.localCheckpoint(eager=False)
+    ``materialize`` guarantees both branches read the SAME
+    materialized layout at any plan shape (and, over the caller's
+    range exchange, runs the sort while the plan is being built)."""
+    d = materialize(d)
     d = d.withColumn("_mid", F.monotonically_increasing_id())
     d = d.withColumn(
         "_wpid", F.shiftrightunsigned("_mid", _MID_PARTITION_SHIFT)

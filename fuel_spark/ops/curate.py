@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from fuel_spark.functions import checkpoint_if_narrow, words
+from fuel_spark.functions import materialize, words
 
 
 def domain_mixture_weights(
@@ -237,10 +237,9 @@ def truncation_savings(
     frac_saved.
     """
     n = F.size(words(F.col(text_col))).cast("bigint")
-    # referenced by the grid, the total AND once per prob in the
-    # savings loop (2 + len(probs) replays of the tokenize pass) —
-    # 8 bytes/row, well inside the narrow-checkpoint budget (r11)
-    lens = checkpoint_if_narrow(df.select(n.alias("_n")))
+    # consumed 2 + len(probs)x: the grid, the total and each prob's
+    # savings pass
+    lens = materialize(df.select(n.alias("_n")))
     grid = lens.groupBy("_n").agg(F.count(F.lit(1)).alias("_c"))
     wcum = Window.orderBy("_n").rowsBetween(Window.unboundedPreceding, 0)
     cum = grid.withColumn("_cum", F.sum("_c").over(wcum))
@@ -315,10 +314,8 @@ def mixture_schedule_slots(
     domain asc) over the domain-sized frame.  Output: domain,
     n_tokens, slots_alloc.
     """
-    # referenced by the total and the apportionment select — each
-    # reference replays the corpus tokenize+groupBy; domain-sized
-    # narrow rows, checkpoint budget passes (r11)
-    toks = checkpoint_if_narrow(
+    # consumed 2x: the total and the apportionment select
+    toks = materialize(
         df.select(F.col(domain_col), F.size(words(F.col(text_col))).alias("_n"))
         .groupBy(domain_col)
         .agg(F.sum("_n").cast("bigint").alias("n_tokens"))
@@ -809,7 +806,8 @@ def unimax_allocation(
     Output: domain, n_tokens, cap_tokens, capped, alloc_tokens,
     epochs.
     """
-    toks = (
+    # consumed 2x per unrolled round: the agg and the crossJoin side
+    toks = materialize(
         df.select(F.col(domain_col), F.size(words(F.col(text_col))).alias("_n"))
         .groupBy(domain_col)
         .agg(F.sum("_n").cast("bigint").alias("n_tokens"))
@@ -817,10 +815,6 @@ def unimax_allocation(
             "cap_tokens",
             (F.lit(int(max_epochs)) * F.col("n_tokens")).cast("bigint"),
         )
-        # domain-sized; every unrolled round references it (the agg AND
-        # the crossJoin side) — checkpointing keeps the corpus token
-        # scan single no matter how many rounds replay the frame
-        .localCheckpoint(eager=False)
     )
     frame = toks.withColumn("_capped", F.lit(False))
     for _ in range(rounds):
@@ -831,7 +825,10 @@ def unimax_allocation(
             F.sum(F.when(F.col("_capped"), 0).otherwise(1))
             .cast("bigint").alias("_nunc"),
         )
-        frame = (
+        # carried into the next round: round k's 1-row aggregate
+        # otherwise replays every earlier round's subtree (measured
+        # 4.8s -> 1.6s at 20x)
+        frame = materialize(
             frame.drop("_share")
             .crossJoin(F.broadcast(agg))
             .withColumn(
@@ -851,10 +848,6 @@ def unimax_allocation(
                 ),
             )
             .drop("_fixed", "_nunc")
-            # per-round lazy checkpoint: round k's 1-row aggregate
-            # otherwise replays every earlier round's subtree (the
-            # ~3^k MMR replay class; measured 4.8s -> 1.6s at 20x)
-            .localCheckpoint(eager=False)
         )
     alloc = F.when(
         F.col("_capped"), F.col("cap_tokens").cast("double")

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from fuel_spark.functions import (
     ensure_parallelism,
+    materialize,
     minhash_expr,
     norm_text,
     shingle_hashes_expr,
@@ -344,18 +345,12 @@ def apply_dedup(
             .select(id_col)
         )
         near_input = df.join(exact_losers, id_col, "left_anti")
-        # the sketch/verify machinery references its input THREE times
-        # (bands + both sides of the shingle join) and Spark replays
-        # the whole digest-rollup + anti-join chain under each one
-        # (no ReusedExchange across the anti join — measured 12 scans,
-        # 19s for a 5k-doc verify at the 20× smoke).  A LAZY
-        # localCheckpoint of the narrow (id, text) canon frame
-        # materializes that chain once; same lineage trade as
-        # pagerank/connected_components' loop hygiene, and the
-        # checkpoint holds the post-exact-dedup corpus only.
-        near_input = near_input.select(
-            F.col(id_col), F.col(text_col)
-        ).localCheckpoint(eager=False)
+        # consumed 3x: the bands and both sides of the shingle join
+        # (replaying the digest-rollup + anti-join chain under each one
+        # measured 12 scans, 19s for a 5k-doc verify at the 20× smoke)
+        near_input = materialize(
+            near_input.select(F.col(id_col), F.col(text_col))
+        )
     if keep == "min_id":
         pairs = ngram_jaccard_pairs(
             near_input, id_col, text_col, threshold, num_hashes, bands,
@@ -449,7 +444,8 @@ def cross_doc_ngram_dup(
     # barrier that forces _w to materialize once per row.  Without it
     # Catalyst inlines the normalize+split into the per-position gram
     # lambda — O(len^2) per doc, measured 30x slower at sf0.1.
-    per_doc = (
+    # Consumed 2x: the corpus gram count and the join back.
+    per_doc = materialize(
         ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
         .select(
             F.col(id_col),
@@ -457,10 +453,6 @@ def cross_doc_ngram_dup(
         )
         .select(F.col(id_col), grams.alias("_g"))
         .select(F.col(id_col), F.explode("_g").alias("gh"))
-        # r10 (guide §5): narrow (id, 16-hex gh) frame feeding both the
-        # corpus gram count and the join back — checkpoint lazily so
-        # the tokenize+gram+md5 pass runs once, not twice
-        .localCheckpoint(eager=False)
     )
     doc_counts = per_doc.groupBy("gh").agg(
         F.count(F.lit(1)).alias("n_docs")
@@ -527,12 +519,8 @@ def decontaminate(
     bench_grams = (
         grams_of(benchmark, F.lit(0), F.col(bench_text_col)).select("gh").distinct()
     )
-    # r10 (guide §5): narrow (id, 16-hex gh) frame feeding both the
-    # per-doc gram count and the benchmark semi-join — checkpoint
-    # lazily so the tokenize+gram+md5 pass runs once, not twice
-    doc_grams = grams_of(df, F.col(id_col), F.col(text_col)).localCheckpoint(
-        eager=False
-    )
+    # consumed 2x: the per-doc gram count and the benchmark semi-join
+    doc_grams = materialize(grams_of(df, F.col(id_col), F.col(text_col)))
     per_doc = doc_grams.groupBy("_id").agg(F.count(F.lit(1)).alias("n_grams"))
     hits = (
         doc_grams.join(broadcast(bench_grams), "gh", "left_semi")
@@ -559,7 +547,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 50,
-    checkpoint_interval: int = 3,
 ) -> DataFrame:
     """Connected components of the near-dup pair graph by iterative
     min-label propagation: every vertex converges to the smallest id
@@ -589,14 +576,8 @@ def connected_components(
     converged round — the aggregation is one parallel job.  Exit
     condition identical by monotonicity.
 
-    Lineage is truncated with ``localCheckpoint`` every
-    ``checkpoint_interval`` iterations (the GraphFrames pattern):
-    caching alone keeps chaining the logical plan, so on a
-    high-diameter graph a lost executor at iteration k would recompute
-    the whole k-deep chain and very deep loops can overflow plan-size
-    limits.  With the short-cut self-join the analyzed plan triples
-    per un-truncated iteration, so the default interval is 3 (27x
-    growth per block); a checkpoint makes each block restart-cheap.
+    The edge frame and each round's labels are materialized, so no
+    round replays its predecessors and the plan stays one round deep.
     """
     # symmetrize with ONE pass over the pair frame: the union-of-two-
     # selects shape references `pairs` twice, and Spark replays the
@@ -604,8 +585,9 @@ def connected_components(
     # uncached frame) — with the MinHash verify upstream that was the
     # entire cost of dedup_components at the 20× smoke (228s of a
     # 356s run re-verifying 2.5M pairs a second time; the explode
-    # form re-measures at ~½ the total)
-    edges = (
+    # form re-measures at ~½ the total).  Consumed by the initial
+    # labels and by every round's join.
+    edges = materialize(
         pairs.select(
             F.explode(
                 F.array(
@@ -621,70 +603,54 @@ def connected_components(
         .select("_e.src", "_e.dst")
         .distinct()
     )
-    labels = (
+    labels = materialize(
         edges.select(F.col("src").alias("v"))
         .distinct()
         .withColumn("component", F.col("v"))
-    ).cache()
-    edges = edges.cache()
+    )
 
     def _label_sum(frame):
         return frame.agg(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("_s")
         ).collect()[0][0]
 
-    prev_sum = None
-    try:
-        for it in range(max_iter):
-            msgs = (
-                edges.join(labels, edges.src == labels.v)
-                .select(F.col("dst").alias("v"), "component")
+    prev_sum = _label_sum(labels)
+    for _ in range(max_iter):
+        msgs = (
+            edges.join(labels, edges.src == labels.v)
+            .select(F.col("dst").alias("v"), "component")
+        )
+        stepped = (
+            labels.select("v", "component")
+            .union(msgs)
+            .groupBy("v")
+            .agg(F.min("component").alias("component"))
+        )
+        # pointer doubling: label(v) <- min(label(v), label(label(v))).
+        # Labels are always ids of reachable vertices, so the
+        # self-lookup stays within the component and the reachable-min
+        # invariant holds; chain distances halve per round.
+        parent = stepped.select(
+            F.col("v").alias("_pv"), F.col("component").alias("_pc")
+        )
+        labels = materialize(
+            stepped.join(parent, stepped.component == F.col("_pv"), "left")
+            .select(
+                "v",
+                F.least(
+                    F.col("component"),
+                    F.coalesce(F.col("_pc"), F.col("component")),
+                ).alias("component"),
             )
-            stepped = (
-                labels.select("v", "component")
-                .union(msgs)
-                .groupBy("v")
-                .agg(F.min("component").alias("component"))
-            )
-            # pointer doubling: label(v) <- min(label(v),
-            # label(label(v))).  Labels are always ids of reachable
-            # vertices, so the self-lookup stays within the component
-            # and the reachable-min invariant holds; chain distances
-            # halve per round.
-            parent = stepped.select(
-                F.col("v").alias("_pv"), F.col("component").alias("_pc")
-            )
-            new_labels = (
-                stepped.join(parent, stepped.component == F.col("_pv"), "left")
-                .select(
-                    "v",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("_pc"), F.col("component")),
-                    ).alias("component"),
-                )
-            )
-            if checkpoint_interval and (it + 1) % checkpoint_interval == 0:
-                # eager truncation: materializes AND severs lineage
-                new_labels = new_labels.localCheckpoint(eager=True)
-            else:
-                new_labels = new_labels.cache()
-            # r11: monotone-sum convergence (see docstring) — the
-            # new-vs-old comparison join is gone; this one aggregation
-            # both materializes the cached/checkpointed new_labels and
-            # answers "did anything change".  Seed the previous sum
-            # from the initial label frame on the first round.
-            if prev_sum is None:
-                prev_sum = _label_sum(labels)
-            new_sum = _label_sum(new_labels)
-            labels.unpersist()
-            labels = new_labels
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-        return labels.select("v", "component")
-    finally:
-        edges.unpersist()
+        )
+        # monotone-sum convergence (see docstring): this one
+        # aggregation both stores the round's labels and answers "did
+        # anything change"
+        new_sum = _label_sum(labels)
+        if new_sum == prev_sum:
+            break
+        prev_sum = new_sum
+    return labels.select("v", "component")
 
 
 def dedup_components(
@@ -794,10 +760,9 @@ def containment_pairs(
             .where(F.col(id_col) != F.col("_keep"))
             .select(id_col)
         )
-        df = (
+        df = materialize(
             df.join(losers, id_col, "left_anti")
             .select(F.col(id_col), F.col(text_col))
-            .localCheckpoint(eager=False)
         )
     cands = minhash_candidate_pairs(
         df, id_col, text_col, num_hashes, bands, shingle_k,
@@ -1165,30 +1130,26 @@ def incremental_dedup_summary(
     Shuffle story inherits from the parts: digest-keyed diff, banded
     screen (never pairwise), union merge, linear compaction.  The
     old-index and incoming-bands frames are each referenced by
-    multiple stages, so both are lazily localCheckpointed — without
-    it Spark replays the minhash subtree once per referencing stage
-    (the measured 5× replay class from ``pretrain_pipeline``).
+    multiple stages, so both are materialized once.
 
     Output: stage (ordinal), stage_name, n (9 constant rows).
     """
-    diff = corpus_diff(old, new, id_col, text_col).localCheckpoint(
-        eager=False
-    )
+    diff = materialize(corpus_diff(old, new, id_col, text_col))
     incoming_ids = diff.where(F.col("status").isin("added", "changed"))
     incoming = new.join(
         incoming_ids.select(id_col), id_col, "left_semi"
     )
-    idx = with_minhash_bands(
-        old, id_col, text_col, num_hashes, bands, shingle_k
-    ).localCheckpoint(eager=False)
-    inc_bands = with_minhash_bands(
-        incoming, id_col, text_col, num_hashes, bands, shingle_k
-    ).localCheckpoint(eager=False)
-    # flagged is an id-only frame referenced by three consumers (the
-    # stage-6 count, the survivors anti-join, the merged-bands
-    # anti-join below) — lazy checkpoint so the band semi-join runs
-    # once, not per consumer
-    flagged = (
+    idx = materialize(
+        with_minhash_bands(old, id_col, text_col, num_hashes, bands, shingle_k)
+    )
+    inc_bands = materialize(
+        with_minhash_bands(
+            incoming, id_col, text_col, num_hashes, bands, shingle_k
+        )
+    )
+    # consumed 3x: the stage-6 count, the survivors anti-join and the
+    # merged-bands anti-join below
+    flagged = materialize(
         inc_bands.join(
             idx.select("band_id", "band_key").distinct(),
             ["band_id", "band_key"],
@@ -1196,7 +1157,6 @@ def incremental_dedup_summary(
         )
         .select(id_col)
         .distinct()
-        .localCheckpoint(eager=False)
     )
     survivors = incoming.join(flagged, id_col, "left_anti")
     # r10 optimization (guide §1.2 "don't compute things you throw
@@ -1452,10 +1412,9 @@ def fuzzy_join(
                 .where(F.col(idc) != F.col("_keep"))
                 .select(idc)
             )
-            return (
+            return materialize(
                 df.join(losers, idc, "left_anti")
                 .select(F.col(idc), F.col(txt))
-                .localCheckpoint(eager=False)
             )
 
         left = _canon(left, left_id, left_text)
@@ -1558,10 +1517,13 @@ def hamming_near_dup(
     # pass a LAZY fingerprint chain (simhash = words explode + bit
     # votes), and the band union + the size-guard join reference this
     # subtree up to 2·bands times — the 20× smoke measured the sketch
-    # recomputing ~8× (29s).  The checkpoint holds two bigints/row.
-    tagged = df.select(
-        F.col(id_col).alias("_id"), F.col(hash_col).cast("bigint").alias("_h")
-    ).localCheckpoint(eager=False)
+    # recomputing ~8× (29s).  The frame holds two bigints/row.
+    tagged = materialize(
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.col(hash_col).cast("bigint").alias("_h"),
+        )
+    )
     # one explode instead of `bands` unions: a single pass over tagged
     band_structs = [
         F.struct(
@@ -2030,9 +1992,7 @@ def exact_substring_spans(
             .where(F.col("_n") <= max_positions)
             .drop("_n")
         )
-    # consumed by both sides of the diagonal self-join — checkpoint
-    # lazily so the seed pass (and the cap shuffle) computes once
-    seeds = seeds.localCheckpoint(eager=False)
+    seeds = materialize(seeds)  # both sides of the diagonal self-join
     a = seeds.select(
         F.col("gh"), F.col("_id").alias("doc_a"), F.col("pos").alias("pos_a")
     )
@@ -2118,7 +2078,7 @@ def self_repetition_spans(
             .where(F.col("_n") <= max_positions)
             .drop("_n")
         )
-    seeds = seeds.localCheckpoint(eager=False)
+    seeds = materialize(seeds)
     a = seeds.select(id_col, F.col("gh"), F.col("pos").alias("pos_a"))
     b = seeds.select(id_col, F.col("gh"), F.col("pos").alias("pos_b"))
     diag = (
@@ -2432,14 +2392,13 @@ def edit_distance_pairs(
         )
     else:
         groups = base.withColumn("_ids", F.array("_id"))
-    # consumed by index, probe, verify x2, and restoration:
-    # checkpoint lazily so the subtree computes once.  r11: pin the
-    # checkpoint's width first — AQE coalesces the md5 rollup to ~2
-    # partitions at sf0.1, and a localCheckpoint FREEZES that count,
+    # consumed 5x: index, probe, verify x2 and restoration.  r11: pin
+    # the width first — AQE coalesces the md5 rollup to ~2
+    # partitions at sf0.1, and materializing FREEZES that count,
     # so every downstream pass (segment indexing, probe explosion,
     # restoration) inherited near-serial parallelism (profiled: the
     # probe-generation stage ran 2 tasks wide under a 9.6s CPU load).
-    groups = ensure_parallelism(groups).localCheckpoint(eager=False)
+    groups = materialize(ensure_parallelism(groups))
 
     # -- index: own segmentation, keyed xxhash64(own length, seg idx,
     # content)
@@ -2960,18 +2919,15 @@ def _verified_edges(
     shingle_k: int = 5,
 ) -> DataFrame:
     """Distinct verified near-dup edges (id_a < id_b, jaccard
-    carried), lazily checkpointed — the shared spine of the
-    cluster-planning queries (CC + the per-edge stats reference it
-    multiple times; without the pin Spark replays the MinHash verify
-    per reference — the connected_components symmetrization lesson)."""
-    return (
+    carried), materialized — the shared spine of the cluster-planning
+    queries (CC + the per-edge stats reference it multiple times)."""
+    return materialize(
         ngram_jaccard_pairs(
             df, id_col, text_col, threshold, num_hashes, bands,
             shingle_k, distinct_pairs=True,
         )
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-        .localCheckpoint(eager=False)
     )
 
 
@@ -2995,9 +2951,7 @@ def cc_threshold_sweep(
     edges = _verified_edges(df, id_col, text_col, lo)
     parts = []
     for t in sorted(thresholds):
-        et = edges.where(F.col("jaccard") >= t).localCheckpoint(
-            eager=False
-        )
+        et = materialize(edges.where(F.col("jaccard") >= t))
         comp = connected_components(et)
         sizes = comp.groupBy("component").agg(
             F.count(F.lit(1)).alias("sz")
@@ -3239,10 +3193,12 @@ def banding_precision_sweep(
         # explicitly (the dedup_pair_degree_hist convention) — an
         # uncapped sweep on a boilerplate-heavy corpus would cost
         # more than the knob decision is worth
-        pairs = ngram_jaccard_pairs(
-            df, id_col, text_col, 0.0, num_hashes, bands,
-            distinct_pairs=True,
-        ).localCheckpoint(eager=False)
+        pairs = materialize(
+            ngram_jaccard_pairs(
+                df, id_col, text_col, 0.0, num_hashes, bands,
+                distinct_pairs=True,
+            )
+        )
         agg = pairs.agg(
             F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
             F.sum(

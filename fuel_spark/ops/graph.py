@@ -1,8 +1,8 @@
 """Iterative graph analytics as DataFrame loops.
 
 LLM-pipeline extension (no fuel analogue; the iterative-loop
-discipline — cache, converge, ``localCheckpoint`` lineage hygiene —
-mirrors ``ops.dedup.connected_components``).  PageRank here is the
+discipline — materialize each round's output, converge — mirrors
+``ops.dedup.connected_components``).  PageRank here is the
 link-analysis primitive for corpus curation: rank domains/documents by
 citation structure (the original use), or products by co-purchase
 affinity, without ever materializing anything denser than the edge
@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fuel_spark.functions import checkpoint_if_narrow, ensure_parallelism
+from fuel_spark.functions import ensure_parallelism, materialize
 
 DEC = "decimal(27,18)"
 
@@ -24,7 +24,6 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     iterations: int = 10,
-    checkpoint_interval: int = 3,
     undirected: bool = True,
     contrib_scale: int = 15,
     out_scale: int = 12,
@@ -39,9 +38,9 @@ def pagerank(
     exists.  Per-message contributions are rounded then summed as
     exact DECIMAL, so ranks are bit-deterministic at any parallelism
     (the repo-wide float contract).  A fixed iteration count keeps the
-    loop deterministic; ``localCheckpoint`` every
-    ``checkpoint_interval`` rounds truncates lineage exactly as in
-    ``connected_components``.
+    loop deterministic.  The loop-invariant edge and vertex frames and
+    each round's ranks are materialized, so no round replays its
+    predecessors.
 
     Dangling vertices (no out-edges) redistribute their mass uniformly
     — with ``undirected=True`` (each edge mirrored) none exist and the
@@ -60,13 +59,10 @@ def pagerank(
         e = e.union(
             edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
         )
-    e = e.distinct()
-    # The distinct edge frame is referenced 5x before any cache
-    # materializes (verts twice, deg once, the degree weld once, and
-    # deg's second use in `base`) — for a corpus-derived graph
-    # (textrank) every replay is the full extraction+distinct pass.
-    # Two vertex-id columns keep it inside the width gate at any type.
-    e = checkpoint_if_narrow(e)
+    # consumed 5x: verts twice, deg, the degree weld and deg's use in
+    # `base` — for a corpus-derived graph (textrank) every replay is the
+    # full extraction+distinct pass
+    e = materialize(e.distinct())
 
     verts = (
         e.select(F.col("src").alias("vertex"))
@@ -78,93 +74,78 @@ def pagerank(
     )
     # degree is loop-invariant: weld it onto the edge list ONCE so each
     # iteration costs a single src-keyed join + one dst-keyed sum
-    e = (
+    e = materialize(
         e.join(deg.select(F.col("vertex").alias("src"), "deg"), "src")
         .select("src", "dst", F.col("deg").alias("src_deg"))
-        .cache()
     )
     n_rel = verts.groupBy().agg(
         F.count(F.lit(1)).cast("double").alias("_n")
     )
     # vertex, deg (>=1 when undirected), n — the loop-invariant frame
-    base = (
+    base = materialize(
         verts.join(deg, "vertex", "left")
         .crossJoin(F.broadcast(n_rel))
         .select("vertex", F.coalesce("deg", F.lit(0)).alias("deg"), "_n")
-        .cache()
     )
-    ranks = base.select(
-        "vertex", (F.lit(1.0) / F.col("_n")).alias("rank")
-    ).cache()
-    try:
-        for it in range(iterations):
-            # r10: with broadcast_ranks the vertex-sized rank frame
-            # broadcasts into the src-keyed join and the edge list is
-            # NEVER shuffled — a win ONLY when the vertex set is
-            # BOUNDED (a vocabulary graph: textrank passes True).
-            # Measured at the 20x smoke on the part co-purchase graph
-            # (vertices scale with the data, ~4M): broadcast 83.5s vs
-            # shuffle join 54.4s — so the default stays False and
-            # data-scaled graphs keep the shuffle join.  Identical
-            # arithmetic either way.
-            r = F.broadcast(ranks) if broadcast_ranks else ranks
-            contribs = (
-                e.join(r, e.src == r.vertex)
-                .select(
-                    F.col("dst").alias("vertex"),
-                    F.round(F.col("rank") / F.col("src_deg"), contrib_scale)
-                    .cast(DEC)
-                    .alias("c"),
+    ranks = base.select("vertex", (F.lit(1.0) / F.col("_n")).alias("rank"))
+    for _ in range(iterations):
+        # r10: with broadcast_ranks the vertex-sized rank frame
+        # broadcasts into the src-keyed join and the edge list is
+        # NEVER shuffled — a win ONLY when the vertex set is
+        # BOUNDED (a vocabulary graph: textrank passes True).
+        # Measured at the 20x smoke on the part co-purchase graph
+        # (vertices scale with the data, ~4M): broadcast 83.5s vs
+        # shuffle join 54.4s — so the default stays False and
+        # data-scaled graphs keep the shuffle join.  Identical
+        # arithmetic either way.
+        r = F.broadcast(ranks) if broadcast_ranks else ranks
+        contribs = (
+            e.join(r, e.src == r.vertex)
+            .select(
+                F.col("dst").alias("vertex"),
+                F.round(F.col("rank") / F.col("src_deg"), contrib_scale)
+                .cast(DEC)
+                .alias("c"),
+            )
+        )
+        summed = contribs.groupBy("vertex").agg(
+            F.sum("c").cast("double").alias("_in")
+        )
+        s = F.broadcast(summed) if broadcast_ranks else summed
+        new_ranks = base.join(s, "vertex", "left")
+        if undirected:
+            # mirrored edges mean deg >= 1 everywhere: no dangling
+            # mass, so skip that whole per-iteration aggregate
+            dmass = F.lit(0.0)
+        else:
+            # dangling mass: rank stuck on deg=0 vertices teleports
+            # uniformly (the standard correction)
+            dangling = (
+                ranks.join(base.select("vertex", "deg"), "vertex")
+                .where(F.col("deg") == 0)
+                .groupBy()
+                .agg(
+                    F.coalesce(
+                        F.sum(F.round(F.col("rank"), 15).cast(DEC)),
+                        F.lit(0).cast(DEC),
+                    ).cast("double").alias("_dangling")
                 )
             )
-            summed = contribs.groupBy("vertex").agg(
-                F.sum("c").cast("double").alias("_in")
-            )
-            s = F.broadcast(summed) if broadcast_ranks else summed
-            new_ranks = base.join(s, "vertex", "left")
-            if undirected:
-                # mirrored edges mean deg >= 1 everywhere: no dangling
-                # mass, so skip that whole per-iteration aggregate
-                dmass = F.lit(0.0)
-            else:
-                # dangling mass: rank stuck on deg=0 vertices teleports
-                # uniformly (the standard correction)
-                dangling = (
-                    ranks.join(base.select("vertex", "deg"), "vertex")
-                    .where(F.col("deg") == 0)
-                    .groupBy()
-                    .agg(
-                        F.coalesce(
-                            F.sum(F.round(F.col("rank"), 15).cast(DEC)),
-                            F.lit(0).cast(DEC),
-                        ).cast("double").alias("_dangling")
-                    )
-                )
-                new_ranks = new_ranks.crossJoin(F.broadcast(dangling))
-                dmass = F.col("_dangling")
-            new_ranks = new_ranks.select(
+            new_ranks = new_ranks.crossJoin(F.broadcast(dangling))
+            dmass = F.col("_dangling")
+        ranks = materialize(
+            new_ranks.select(
                 "vertex",
                 (
                     (F.lit(1.0) - damping) / F.col("_n")
                     + F.lit(damping)
-                    * (
-                        F.coalesce("_in", F.lit(0.0))
-                        + dmass / F.col("_n")
-                    )
+                    * (F.coalesce("_in", F.lit(0.0)) + dmass / F.col("_n"))
                 ).alias("rank"),
             )
-            if checkpoint_interval and (it + 1) % checkpoint_interval == 0:
-                new_ranks = new_ranks.localCheckpoint(eager=True)
-            else:
-                new_ranks = new_ranks.cache()
-            ranks.unpersist()
-            ranks = new_ranks
-        return ranks.select(
-            "vertex", F.round(F.col("rank"), out_scale).alias("rank")
         )
-    finally:
-        e.unpersist()
-        base.unpersist()
+    return ranks.select(
+        "vertex", F.round(F.col("rank"), out_scale).alias("rank")
+    )
 
 
 def degree_distribution(
@@ -238,7 +219,7 @@ def hits_fixed(
     ``graph_pagerank_fixed`` did.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.localCheckpoint(eager=False)  # consumed 2x per iteration
+    e = materialize(e)  # consumed 2x per iteration
 
     srcs = e.select(F.col("src").alias("vertex")).distinct()
     dsts = e.select(F.col("dst").alias("vertex")).distinct()
@@ -251,7 +232,9 @@ def hits_fixed(
         """One half-step: push scores across edges from key_in to
         key_out, DECIMAL-sum, then L1-normalize."""
         s = F.broadcast(scores) if broadcast_scores else scores
-        raw = (
+        # consumed 2x (L1 total + normalize) and carried into the next
+        # half-step (measured 41.8s vs 6.2s at the 20x smoke without)
+        raw = materialize(
             e.join(s, e[key_in] == s.vertex)
             .select(
                 F.col(key_out).alias("vertex"),
@@ -259,11 +242,6 @@ def hits_fixed(
             )
             .groupBy("vertex")
             .agg(F.sum("_c").cast("double").alias("_raw"))
-            # consumed twice (L1 total + normalize) and feeds the next
-            # half-step: without this, each of the 6 half-steps replays
-            # its predecessors' joins (~2x per step compounding —
-            # measured 41.8s vs 6.2s at the 20x smoke)
-            .localCheckpoint(eager=False)
         )
         tot = raw.agg(
             F.sum(F.col("_raw").cast(DEC)).cast("double").alias("_t")
@@ -316,14 +294,14 @@ def triangle_stats(
         F.least(F.col(src), F.col(dst)).alias("a"),
         F.greatest(F.col(src), F.col(dst)).alias("b"),
     ).where(F.col("a") != F.col("b")).distinct()
-    e0 = e0.localCheckpoint(eager=False)  # degrees + orientation + close
+    e0 = materialize(e0)  # degrees + orientation + close
     deg = (
         e0.select(F.col("a").alias("v"))
         .unionAll(e0.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    deg = deg.localCheckpoint(eager=False)
+    deg = materialize(deg)
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("_dega"))
     db = deg.select(F.col("v").alias("b"), F.col("deg").alias("_degb"))
     ed = (
@@ -340,7 +318,7 @@ def triangle_stats(
         )
         .select("_e.u", "_e.w")
     )
-    ed = ed.localCheckpoint(eager=False)  # wedge join + closing join
+    ed = materialize(ed)  # wedge join + closing join
     # width pin: oriented-edge rows are bytes-tiny (two ids), the
     # repo-wide AQE-coalesce defect class — the pin keeps the wedge
     # expansion parallel on SPARSE graphs where the frame is
@@ -410,7 +388,7 @@ def degree_assortativity(
         F.least(F.col(src), F.col(dst)).alias("a"),
         F.greatest(F.col(src), F.col(dst)).alias("b"),
     ).where(F.col("a") != F.col("b")).distinct()
-    e0 = e0.localCheckpoint(eager=False)
+    e0 = materialize(e0)
     deg = (
         e0.select(F.col("a").alias("v"))
         .unionAll(e0.select(F.col("b").alias("v")))
@@ -492,14 +470,14 @@ def link_prediction(
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
-    e0 = e0.localCheckpoint(eager=False)  # degrees + adjacency + anti-join
+    e0 = materialize(e0)  # degrees + adjacency + anti-join
     deg = (
         e0.select(F.col("a").alias("v"))
         .unionAll(e0.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     )
-    deg = deg.localCheckpoint(eager=False)  # centers + endpoint degrees
+    deg = materialize(deg)  # centers + endpoint degrees
     adj = e0.select(F.col("a").alias("w"), F.col("b").alias("x")).unionAll(
         e0.select(F.col("b").alias("w"), F.col("a").alias("x"))
     )
@@ -603,7 +581,7 @@ def kcore_fixed(
         .distinct()
     )
     census = []
-    e = e.localCheckpoint(eager=False)
+    e = materialize(e)
     for r in range(1, int(rounds) + 1):
         deg = (
             e.select(F.col("a").alias("v"))
@@ -612,7 +590,7 @@ def kcore_fixed(
             .agg(F.count(F.lit(1)).alias("_d"))
         )
         keep = deg.where(F.col("_d") >= int(k)).select("v")
-        keep = keep.localCheckpoint(eager=False)  # both semi-joins + count
+        keep = materialize(keep)  # both semi-joins + count
         # broadcast_keep=False is the billion-vertex escape hatch, the
         # lpa_fixed/HITS knob (50x pressure smoke: 23s at 20x -> 106s
         # at 50x as broadcast volume x tasks grows)
@@ -621,7 +599,7 @@ def kcore_fixed(
         if broadcast_keep:
             ka, kb = F.broadcast(ka), F.broadcast(kb)
         e = e.join(ka, "a", "left_semi").join(kb, "b", "left_semi")
-        e = e.localCheckpoint(eager=False)
+        e = materialize(e)
         census.append(
             keep.agg(
                 F.lit(r).cast("int").alias("round"),
@@ -657,9 +635,8 @@ def lpa_fixed(
     Shuffle story per iteration: one edge⋈labels join keyed on the
     neighbor end, one map-side-combinable (node, label) count, one
     per-node argmax via ``min(struct(-cnt, label))`` (no window over
-    facts); the labels frame is vertex-sized and lazily
-    localCheckpointed each round so round t does not replay round
-    t−1's join chain (the k-core/HITS replay lesson).  Edges are
+    facts); the labels frame is vertex-sized and materialized each
+    round.  Edges are
     mirrored once up front; the edge list itself never shuffles
     after that.
 
@@ -668,7 +645,7 @@ def lpa_fixed(
     """
     e0 = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct()
     em = e0.unionAll(e0.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    em = em.localCheckpoint(eager=False)
+    em = materialize(em)
     labels = em.select(F.col("s").alias("v")).distinct().select(
         "v", F.col("v").alias("lbl")
     )
@@ -691,7 +668,7 @@ def lpa_fixed(
         counts = nb.groupBy("v", "lbl").agg(
             F.count(F.lit(1)).cast("bigint").alias("_c")
         )
-        labels = (
+        labels = materialize(
             counts.groupBy("v")
             .agg(
                 F.min(
@@ -702,7 +679,6 @@ def lpa_fixed(
                 ).alias("_m")
             )
             .select("v", F.col("_m.lbl").alias("lbl"))
-            .localCheckpoint(eager=False)
         )
     return labels.groupBy(F.col("lbl").alias("community")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members")

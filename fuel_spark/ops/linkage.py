@@ -33,7 +33,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-from fuel_spark.functions import checkpoint_if_narrow
+from fuel_spark.functions import materialize
 
 # Fixed, documented m/u priors per comparison field (the certificate
 # checks the MECHANICS — pattern counts and weight arithmetic — not
@@ -216,14 +216,12 @@ def fs_linkage_summary(
     operator; this pins their contract seams.
 
     The candidate-pair frame is referenced by four stages, so it is
-    lazily localCheckpointed once (the multi-reference replay class).
+    materialized once.
 
     Output: stage (ordinal), stage_name, n (8 constant rows).
     """
-    pairs = fs_candidate_pairs(left, right, bal_band).localCheckpoint(
-        eager=False
-    )
-    links = fs_matches(pairs, threshold).localCheckpoint(eager=False)
+    pairs = materialize(fs_candidate_pairs(left, right, bal_band))
+    links = materialize(fs_matches(pairs, threshold))
     entities = fs_entity_clusters(links)
 
     def stage(i: int, name: str, frame: DataFrame) -> DataFrame:
@@ -274,14 +272,11 @@ def fs_incremental_summary(
     granularity — and the NEW side is batch-sized, so blocks are
     registry×batch, far below the registry×registry volume of a full
     relink); the links frame is referenced by three stages so it
-    lazily localCheckpoints once.
+    is materialized once.
     """
-    # pairs is referenced by the stage-3 count AND the links
-    # derivation — 2 replays of the two-pass blocking join; ~40
-    # bytes/row (two ids + three agreement bits), narrow-checkpoint
-    # budget passes (r11)
-    pairs = checkpoint_if_narrow(fs_candidate_pairs(registry, new_batch, bal_band))
-    links = fs_matches(pairs, threshold).localCheckpoint(eager=False)
+    # consumed 2x: the stage-3 count and the links derivation
+    pairs = materialize(fs_candidate_pairs(registry, new_batch, bal_band))
+    links = materialize(fs_matches(pairs, threshold))
     matched = links.select("r_id").distinct()
     unmatched = new_batch.join(matched, "r_id", "left_anti")
     touched = links.select("l_id").distinct()

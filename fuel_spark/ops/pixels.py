@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from fuel_spark.functions import hash_mod, round6_ratio
+from fuel_spark.functions import hash_mod, materialize, round6_ratio
 
 __all__ = [
     "synth_pixel_table",
@@ -770,9 +770,7 @@ def phash_radius_sweep(
 
     Output per radius: n_pairs."""
     mx = max(radii)
-    pairs = phash_band_pairs(hashes, max_hamming=mx).localCheckpoint(
-        eager=False
-    )
+    pairs = materialize(phash_band_pairs(hashes, max_hamming=mx))
     parts = [
         pairs.where(F.col("hamming") <= int(r)).agg(
             F.lit(int(r)).cast("bigint").alias("radius"),

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from fuel_spark.functions import materialize
+
 _NUMERIC = {"int", "bigint", "smallint", "tinyint", "double", "float", "decimal"}
 
 
@@ -491,7 +493,7 @@ def cohen_kappa(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     c = df.groupBy(
         F.col(col_a).alias("a"), F.col(col_b).alias("b")
     ).agg(F.count(F.lit(1)).alias("n"))
-    c = c.localCheckpoint(eager=False)  # consumed 4x (N, trace, margins)
+    c = materialize(c)  # consumed 4x (N, trace, margins)
     tot = c.agg(F.sum("n").cast("double").alias("_N"))
     po = (
         c.where(F.col("a") == F.col("b"))
@@ -551,7 +553,7 @@ def mutual_information(df: DataFrame, col_x, col_y) -> DataFrame:
     j = df.groupBy(cx.alias("x"), cy.alias("y")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    j = j.localCheckpoint(eager=False)
+    j = materialize(j)
     tot = j.agg(F.sum("n").cast("double").alias("_N"))
     mx = j.groupBy("x").agg(F.sum("n").alias("_nx"))
     my = j.groupBy("y").agg(F.sum("n").alias("_ny"))
@@ -1174,13 +1176,15 @@ def group_sortedness(
     )
     # ONE window pass computes every column's lag (3 separate windows
     # measured 21s at the 20x smoke; the shared sort is the cost)
-    lagged = df.select(
-        *[F.col(c).alias(f"_v{i}") for i, c in enumerate(value_cols)],
-        *[
-            F.lag(c).over(w).alias(f"_p{i}")
-            for i, c in enumerate(value_cols)
-        ],
-    ).localCheckpoint(eager=False)
+    lagged = materialize(
+        df.select(
+            *[F.col(c).alias(f"_v{i}") for i, c in enumerate(value_cols)],
+            *[
+                F.lag(c).over(w).alias(f"_p{i}")
+                for i, c in enumerate(value_cols)
+            ],
+        )
+    )
     parts = []
     for i, c in enumerate(value_cols):
         pair = lagged.where(F.col(f"_p{i}").isNotNull())

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
 
-from fuel_spark.functions import cosine_expr, ensure_parallelism
+from fuel_spark.functions import cosine_expr, ensure_parallelism, materialize
 
 # Default skew-guard cap for the pair-emitting block joins here,
 # mirroring ``ops.dedup.DEFAULT_MAX_BUCKET``: bounded BY DEFAULT so a
@@ -350,22 +350,19 @@ def mmr_diversify_fixed(
     broadcast-hinted, and each unrolled step adds one
     candidates×chosen pass, so cost is O(k · Q · shortlist · dim)
     spread over k tiny stages.  The candidate frame is referenced by
-    all k steps, so it is lazily localCheckpointed once — without it
-    Spark replays the upstream shortlist scan (often a full-corpus
-    cosine_topk) k times (the HITS replay lesson).  Output: query_id,
+    all k steps, so it is materialized once.  Output: query_id,
     neighbor_id, relevance, rank (rank = pick order, 1-based).
     """
     one_minus = 1.0 - lam  # pin the EXACT double; oracle uses repr()
     vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
     )
-    cand = (
+    cand = materialize(
         shortlist.select(
             "query_id", "neighbor_id",
             F.col("cosine").alias("relevance"),
         )
         .join(vecs, "neighbor_id")
-        .localCheckpoint(eager=False)
     )
 
     def argmax(scored: DataFrame, score_col: str, rank: int) -> DataFrame:
@@ -417,13 +414,11 @@ def mmr_diversify_fixed(
                 ),
             )
         )
-        # lazy checkpoint per step: picked_t is referenced three times
-        # by step t+1 (chosen vectors, the left_anti, the next union),
-        # so without it the argmax chain replays ~3^k tiny subtrees —
-        # measured 3.6s → ~1s at sf0.1 for pure scheduling overhead
-        picked = picked.unionByName(
-            argmax(scored, "_score", step)
-        ).localCheckpoint(eager=False)
+        # consumed 3x by step t+1 (chosen vectors, the left_anti, the
+        # next union): measured 3.6s → ~1s at sf0.1
+        picked = materialize(
+            picked.unionByName(argmax(scored, "_score", step))
+        )
     return (
         picked.join(
             cand.select("query_id", "neighbor_id", "relevance"),
@@ -1946,7 +1941,7 @@ def davies_bouldin_by_label(
     cents = label_centroids(df, label_col, vec_col).select(
         F.col(label_col).alias("_cl"), F.col("centroid").alias("_c")
     )
-    cents = cents.localCheckpoint(eager=False)  # scatters + both pair sides
+    cents = materialize(cents)  # scatters + both pair sides
     x = df.select(F.col(label_col).alias("_cl"), F.col(vec_col).alias("_v"))
     scat = (
         x.join(broadcast(cents), "_cl")
@@ -2397,12 +2392,11 @@ def kcenter_coreset(
     center row against the corpus and min-updates the running
     distance map-side; the only exchanges are the k 1-row argmax
     reduces (partial-aggregated).  The running-distance frame is
-    lazily localCheckpointed per step: it is referenced by both the
-    next update and the next argmax, and k chained references would
-    otherwise replay the whole chain each step (the MMR ~3^k
-    lesson).  Radius column = distance to the previously-selected
-    set at pick time — non-increasing by construction (tested), and
-    radius_k is the standard 2-approximation coverage certificate.
+    materialized per step: it is referenced by both the next update
+    and the next argmax.  Radius column = distance to the
+    previously-selected set at pick time — non-increasing by
+    construction (tested), and radius_k is the standard
+    2-approximation coverage certificate.
 
     Output: rank (0-based pick order), vec_id, radius (NULL for the
     seed).
@@ -2414,11 +2408,11 @@ def kcenter_coreset(
     seed_vec = base.join(F.broadcast(seed), "vid").select(
         F.col("_v").alias("_cv")
     )
-    state = base.crossJoin(F.broadcast(seed_vec)).select(
-        "vid",
-        "_v",
-        F.round(l2sq_expr("_v", "_cv"), 6).alias("dist"),
-    ).localCheckpoint(eager=False)
+    state = materialize(
+        base.crossJoin(F.broadcast(seed_vec)).select(
+            "vid", "_v", F.round(l2sq_expr("_v", "_cv"), 6).alias("dist")
+        )
+    )
     selected = seed.select(
         F.lit(0).cast("bigint").alias("rank"),
         "vid",
@@ -2437,18 +2431,20 @@ def kcenter_coreset(
             F.col("_m.vid").alias("vid"),
             (-F.col("_m._neg")).alias("radius"),
         )
-        selected = selected.unionByName(pick).localCheckpoint(eager=False)
+        selected = materialize(selected.unionByName(pick))
         if step < int(k) - 1:
             new_vec = base.join(
                 F.broadcast(pick.select("vid")), "vid"
             ).select(F.col("_v").alias("_cv"))
-            state = state.crossJoin(F.broadcast(new_vec)).select(
-                "vid",
-                "_v",
-                F.least(
-                    F.col("dist"), F.round(l2sq_expr("_v", "_cv"), 6)
-                ).alias("dist"),
-            ).localCheckpoint(eager=False)
+            state = materialize(
+                state.crossJoin(F.broadcast(new_vec)).select(
+                    "vid",
+                    "_v",
+                    F.least(
+                        F.col("dist"), F.round(l2sq_expr("_v", "_cv"), 6)
+                    ).alias("dist"),
+                )
+            )
     return selected.select("rank", F.col("vid").alias(id_col), "radius")
 
 
@@ -2742,14 +2738,13 @@ def ann_incremental_summary(
     (flip each bit) like the search path, the corpus side is joined
     by bucket then by id back to its vectors — candidate volume is
     bounded by bucket sizes exactly as in :func:`pivot_lsh_ann`,
-    never pairwise.  The merged index is localCheckpointed once
-    (lazy) against the merge/compact double-reference replay.
+    never pairwise.  The merged index is materialized once: merge and
+    compact both read it.
     """
     planes = pivot_lsh_planes(corpus_old, id_col, vec_col, n_planes)
     index_before = pivot_lsh_index(corpus_old, planes, id_col, vec_col)
-    # multi-referenced below (screen join + merge + certificate
-    # callers): pin the narrow frame once
-    index_before = index_before.localCheckpoint(eager=False)
+    # consumed 3x: the screen join, the merge and the certificate
+    index_before = materialize(index_before)
 
     nb = pivot_lsh_index(new_batch, planes, id_col, vec_col)
     if n_planes > 0:
@@ -2780,9 +2775,11 @@ def ann_incremental_summary(
         .distinct()
     )
     accepted = new_batch.join(dup_ids, id_col, "left_anti")
-    merged = ann_merge_into_index(
-        index_before, accepted, planes, id_col, vec_col, id_col
-    ).localCheckpoint(eager=False)
+    merged = materialize(
+        ann_merge_into_index(
+            index_before, accepted, planes, id_col, vec_col, id_col
+        )
+    )
     compacted = ann_compact_index(merged, max_bucket=max_bucket,
                                   index_id_col=id_col)
 
@@ -2960,11 +2957,13 @@ def ann_reindex_pressure_sweep(
     Output per split: split, n_index, n_rebuilt, n_same_bucket,
     n_moved, moved_frac.
     """
-    # the fresh rebuild is split-independent: bucket once, pin once
-    fresh = pivot_lsh_index(
-        corpus, pivot_lsh_planes(corpus, id_col, vec_col, n_planes),
-        id_col, vec_col,
-    ).localCheckpoint(eager=False)
+    # the fresh rebuild is split-independent: consumed once per split
+    fresh = materialize(
+        pivot_lsh_index(
+            corpus, pivot_lsh_planes(corpus, id_col, vec_col, n_planes),
+            id_col, vec_col,
+        )
+    )
     out = None
     for label, pred in splits:
         old = corpus.where(~pred)

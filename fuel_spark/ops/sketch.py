@@ -32,6 +32,7 @@ from fuel_spark.functions import (
     ensure_parallelism,
     hash_mod,
     hash_uniform,
+    materialize,
 )
 
 
@@ -1180,26 +1181,28 @@ def theta_set_ops_certificate(
     """
     groups = sorted({g for p in pairs for g in p})
     scoped = df.filter(F.col(group_col).isin(groups))
-    # the sketch (<= groups*k rows) and the distinct key base feed
-    # every pair's estimate/exact branch — lazy localCheckpoint once
-    # so the per-pair union does not replay the distinct shuffle
-    # len(pairs)x (measured 6.2s -> 5.1s at the 20x smoke; the remaining cost is the per-pair exact-certificate aggregations, inherent to certifying)
-    sk = kmv_sketch(scoped, group_col, key_col, k=k, seed=seed).select(
-        F.col(group_col).alias("_g"), F.col(key_col).alias("_k"),
-        "_h", "rank",
-    ).localCheckpoint(eager=False)
-    # r11: thetas is a groups-sized aggregate referenced twice per
-    # pair (filter a / filter b) — lazy checkpoint so the aggregation
-    # over sk runs once, not 2x len(pairs) times.
-    thetas = sk.groupBy("_g").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.max(F.when(F.col("rank") == k, F.col("_h"))).alias("_hk"),
-    ).select(
-        "_g",
-        F.when(F.col("_n") >= k, F.col("_hk"))
-        .otherwise(F.lit(2.0))
-        .alias("_theta"),
-    ).localCheckpoint(eager=False)
+    # the sketch (<= groups*k rows) is consumed by every pair's
+    # estimate/exact branch (measured 6.2s -> 5.1s at the 20x smoke;
+    # the remaining cost is the per-pair exact-certificate
+    # aggregations, inherent to certifying)
+    sk = materialize(
+        kmv_sketch(scoped, group_col, key_col, k=k, seed=seed).select(
+            F.col(group_col).alias("_g"), F.col(key_col).alias("_k"),
+            "_h", "rank",
+        )
+    )
+    # r11: thetas is consumed 2x per pair (filter a / filter b)
+    thetas = materialize(
+        sk.groupBy("_g").agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.max(F.when(F.col("rank") == k, F.col("_h"))).alias("_hk"),
+        ).select(
+            "_g",
+            F.when(F.col("_n") >= k, F.col("_hk"))
+            .otherwise(F.lit(2.0))
+            .alias("_theta"),
+        )
+    )
     # r10 optimization (guide §2.3/§2.4): the old per-pair exact branch
     # re-aggregated a distinct (group, key) base once per pair — three
     # full shuffles of the key set for three pairs.  ONE groupBy(key)
@@ -1207,15 +1210,14 @@ def theta_set_ops_certificate(
     # pre-pass is subsumed by the groupBy, and partial map-side
     # aggregation compresses repeated keys before the exchange); every
     # pair's exact union/intersection/difference is then a conditional
-    # sum over that frame, folded into a single 1-row aggregate.  The
-    # lazy localCheckpoint pins the 1-row result so the per-pair
-    # crossJoins reuse it instead of replaying the membership shuffle.
+    # sum over that frame, folded into a single 1-row aggregate,
+    # consumed by every pair's crossJoin.
     gidx = {g: i for i, g in enumerate(groups)}
     flags_all = scoped.groupBy(F.col(key_col).alias("_k")).agg(*[
         F.max(F.when(F.col(group_col) == g, 1).otherwise(0)).alias(f"_i{i}")
         for i, g in enumerate(groups)
     ])
-    exact_all = flags_all.agg(*[
+    exact_all = materialize(flags_all.agg(*[
         agg
         for j, (a, b) in enumerate(pairs)
         for agg in (
@@ -1230,7 +1232,7 @@ def theta_set_ops_certificate(
             F.sum(F.col(f"_i{gidx[a]}") * (1 - F.col(f"_i{gidx[b]}")))
             .cast("bigint").alias(f"_ex{j}_a_not_b"),
         )
-    ]).localCheckpoint(eager=False)
+    ]))
     out = None
     for j, (a, b) in enumerate(pairs):
         th = (
@@ -1536,11 +1538,10 @@ def bloom_fpr_curve(
     fpr (exact-rational round6)."""
     from fuel_spark.functions import hash_mod, round6_ratio
 
-    keys = (
+    keys = materialize(
         df.select(F.col(key_col).cast("long").alias("k"))
         .where(F.col("k").isNotNull())
         .distinct()
-        .localCheckpoint(eager=False)
     )
     members = keys.where(F.col("k") % 2 == 0)
     tests = keys.where(F.col("k") % 2 == 1)

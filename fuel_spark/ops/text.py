@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from fuel_spark.functions import (
     ensure_parallelism,
+    materialize,
     norm_text,
     shingles_over_norm,
     with_materialized,
@@ -202,13 +203,11 @@ def tfidf_similar_docs(
     terms = out.select(
         F.col(id_col), F.explode(words(F.col(text_col))).alias("term")
     ).where(F.col("term") != "")
-    # r10 optimization (guide §5): tf feeds both the df count and the
-    # weighting join, unit feeds both sides of the term self-join —
-    # without the lazy checkpoints the tokenize+count subtree replays
-    # up to 6x (Spark has no ReusedExchange across these references)
-    tf = terms.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=False)
+    # tf is consumed 2x (the df count, the weighting join); unit 2x
+    # (both sides of the term self-join)
+    tf = materialize(
+        terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     DEC9 = "decimal(27,9)"
@@ -226,13 +225,12 @@ def tfidf_similar_docs(
             )
         ).alias("_nrm")
     )
-    unit = (
+    unit = materialize(
         weighted.join(norms, id_col)
         .where(F.col("_nrm") > 0)
         .select(
             F.col(id_col), "term", (F.col("w") / F.col("_nrm")).alias("u")
         )
-        .localCheckpoint(eager=False)
     )
     a = unit.select(
         F.col(id_col).alias("id_a"), "term", F.col("u").alias("ua")
@@ -1288,13 +1286,15 @@ def train_bpe(
         .agg(F.count(F.lit(1)).alias("freq"))
     )
     # word → symbol array: chars + end-of-word marker
-    wf = wf.select(
-        F.expr(
-            f"concat(transform(sequence(1, length(w)), i -> substring(w, i, 1)),"
-            f" array('{end_of_word}'))"
-        ).alias("syms"),
-        "freq",
-    ).localCheckpoint(eager=True)
+    wf = materialize(
+        wf.select(
+            F.expr(
+                f"concat(transform(sequence(1, length(w)),"
+                f" i -> substring(w, i, 1)), array('{end_of_word}'))"
+            ).alias("syms"),
+            "freq",
+        )
+    )
 
     merges: list[tuple[str, str, int]] = []
     for it in range(n_merges):
@@ -1333,8 +1333,8 @@ def train_bpe(
             "freq",
         )
         if (it + 1) % 4 == 0:
-            # fit-loop lineage hygiene (the connected-components rule)
-            wf = wf.localCheckpoint(eager=True)
+            # the loop carries wf: a round replays at most 3 folds
+            wf = materialize(wf)
     return merges
 
 
@@ -1549,11 +1549,9 @@ def span_corruption(
             f" ':', _p0 + 1)), 1, 8), 16, 10) AS BIGINT)"
         ).alias("_u2"),
     )
-    # r10 optimization (guide §5): `pos` (the explode + two md5 draws
-    # per word position) feeds both the span-start pass and the token
-    # assembly join — without the lazy checkpoint the whole subtree
-    # (including everything upstream of `df`) replays per reference
-    pos = pos.localCheckpoint(eager=False)
+    # `pos` (the explode + two md5 draws per word position) is consumed
+    # 2x: the span-start pass and the token assembly join
+    pos = materialize(pos)
     starts = pos.where(F.col("_u1") % 1_000_000 < start_ppm).select(
         id_col, "p", "_n",
         (F.lit(1) + F.col("_u2") % span_mod).alias("_len"),
@@ -2353,9 +2351,8 @@ def pmi_cooccurrence(
         .where(F.length("_t") >= 1)
         .select(F.split("_t", " ").alias("_w"))
     )
-    # one narrow source, two aggregate consumers (pairs, unigrams):
-    # checkpoint lazily so tokenization computes once.
-    base = ensure_parallelism(base).localCheckpoint(eager=False)
+    # consumed 2x: pairs and unigrams
+    base = materialize(ensure_parallelism(base))
     pair_expr = (
         # filter-over-greatest keeps the 1-token doc an empty TYPED
         # array (sequence(1, 0) would descend, not stay empty)
@@ -2368,13 +2365,12 @@ def pmi_cooccurrence(
     pairs = base.select(F.explode(F.expr(pair_expr)).alias("_p")).select(
         "_p.w_a", "_p.w_b"
     )
-    pairs = pairs.localCheckpoint(eager=False)  # counted twice (P, pc)
+    pairs = materialize(pairs)  # counted twice (P, pc)
     pc = pairs.groupBy("w_a", "w_b").agg(F.count(F.lit(1)).alias("pair_count"))
-    uc = (
+    uc = materialize(  # consumed 3x (both joins + T)
         base.select(F.explode("_w").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .localCheckpoint(eager=False)  # consumed 3x (both joins + T)
     )
     tot = pc.agg(F.sum("pair_count").alias("P")).crossJoin(
         uc.agg(F.sum("_c").alias("T"))
@@ -2593,7 +2589,7 @@ def heaps_fit(
         .where(F.length("_t") >= 1)
         .select("_id", F.split("_t", " ").alias("_w"))
     )
-    base = ensure_parallelism(base).localCheckpoint(eager=False)
+    base = materialize(ensure_parallelism(base))
     bounds = base.agg(
         F.min("_id").alias("_lo"), F.max("_id").alias("_hi")
     )
@@ -2837,7 +2833,7 @@ def bigram_llr(
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n11"))
     )
-    bi = bi.localCheckpoint(eager=False)  # margins + totals + output
+    bi = materialize(bi)  # margins + totals + output
     m1 = bi.groupBy("w1").agg(F.sum("n11").alias("_c1"))
     m2 = bi.groupBy("w2").agg(F.sum("n11").alias("_c2"))
     tot = bi.agg(F.sum("n11").cast("double").alias("_N"))
@@ -2971,7 +2967,7 @@ def burrows_delta(
         .where(F.length("_t") >= 1)
         .select("g", F.explode(F.split("_t", " ")).alias("w"))
     )
-    tok = tok.localCheckpoint(eager=False)  # panel + group counts
+    tok = materialize(tok)  # panel + group counts
     panel = F.broadcast(
         tok.groupBy("w")
         .agg(F.count(F.lit(1)).alias("_cf"))
@@ -3078,7 +3074,7 @@ def bray_curtis_sources(
         .select("g", F.explode(F.split("_t", " ")).alias("w"))
     )
     cnt = tok.groupBy("g", "w").agg(F.count(F.lit(1)).alias("_c"))
-    cnt = cnt.localCheckpoint(eager=False)  # feeds totals + both join sides
+    cnt = materialize(cnt)  # feeds totals + both join sides
     tot = cnt.groupBy("g").agg(F.sum("_c").cast("bigint").alias("_n"))
     a = cnt.select(F.col("g").alias("source_a"), "w", F.col("_c").alias("_ca"))
     b = cnt.select(F.col("g").alias("source_b"), "w", F.col("_c").alias("_cb"))
@@ -3146,7 +3142,7 @@ def vocab_novelty_slices(
         .select("slice", F.explode(F.split("_t", " ")).alias("w"))
         .distinct()
     )
-    tok = tok.localCheckpoint(eager=False)  # feeds per-slice + first-seen
+    tok = materialize(tok)  # feeds per-slice + first-seen
     per_slice = tok.groupBy("slice").agg(
         F.count(F.lit(1)).cast("bigint").alias("types")
     )
@@ -3241,8 +3237,8 @@ def tfidf_top_terms(
     to the distribution-level JS divergence and Burrows' Delta views.
 
     One corpus token pass to (source, word) counts; document
-    frequency is a vocab-sized rollup over the same frame (lazy
-    localCheckpoint — two consumers); N is a broadcast 1-row count;
+    frequency is a vocab-sized rollup over the same frame
+    (materialized — two consumers); N is a broadcast 1-row count;
     the per-source top-k ranks a window PARTITIONED by source (≤
     |vocab| rows each, parallel across sources) on the ROUNDED score
     with a word tie-break, so the cut is engine-exact.
@@ -3261,7 +3257,7 @@ def tfidf_top_terms(
     cnt = tok.groupBy("source", "term").agg(
         F.count(F.lit(1)).cast("bigint").alias("term_count")
     )
-    cnt = cnt.localCheckpoint(eager=False)  # scores + document freq
+    cnt = materialize(cnt)  # scores + document freq
     dfw = cnt.groupBy("term").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
     )
@@ -3316,7 +3312,7 @@ def fightin_words(
     is overrepresented HERE, credibly".
 
     All frames are vocab- or (source×word)-sized after one corpus
-    token pass (shared via lazy localCheckpoint); δ and its variance
+    token pass (materialized and shared); δ and its variance
     1/(y+α) + 1/(y'+α') are row-local double chains; the per-source
     top-k ranks a source-PARTITIONED window on the ROUNDED z with a
     word tie-break (engine-exact cut).
@@ -3335,7 +3331,7 @@ def fightin_words(
     cnt = tok.groupBy("source", "term").agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")
     )
-    cnt = cnt.localCheckpoint(eager=False)  # word totals + source totals
+    cnt = materialize(cnt)  # word totals + source totals
     wtot = cnt.groupBy("term").agg(F.sum("_c").cast("bigint").alias("_cw"))
     stot = cnt.groupBy("source").agg(F.sum("_c").cast("bigint").alias("_ns"))
     gtot = wtot.agg(F.sum("_cw").cast("bigint").alias("_n"))
@@ -4211,14 +4207,13 @@ def ngram_collision_rate(
     # Generate-barrier the normalization (with_materialized): a bare
     # projection would let CollapseProject inline the regex into the
     # shingle lambda — the O(len²) trap the helper exists to prevent
-    sh = (
+    sh = materialize(
         with_materialized(
             ensure_parallelism(df.select(F.col(text_col))),
             "_n", norm_text(F.col(text_col)),
         )
         .select(F.explode(shingles_over_norm("_n", k)).alias("s"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     parts = []
     for bits in bit_widths:

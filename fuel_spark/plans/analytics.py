@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
+from fuel_spark.functions import materialize
+
 DEC = "decimal(27,6)"
 
 
@@ -3184,14 +3186,13 @@ def events_markov_stationary(
     ).where(F.col("from_type").isNotNull())
     c = seq.groupBy("from_type", "to_type").agg(F.count(F.lit(1)).alias("n"))
     tot = c.groupBy("from_type").agg(F.sum("n").alias("_rt"))
-    P = (
+    P = materialize(  # consumed once per iteration
         c.join(F.broadcast(tot), "from_type")
         .select(
             "from_type",
             "to_type",
             F.round(F.col("n").cast("double") / F.col("_rt"), 9).alias("p"),
         )
-        .localCheckpoint(eager=False)  # consumed once per iteration
     )
     states = e.select(F.col("event_type").alias("state")).distinct()
     ns = states.agg(F.count(F.lit(1)).cast("double").alias("_k"))
@@ -3576,9 +3577,13 @@ def events_daily_acf(
         (F.sum("n").cast("double") / F.count(F.lit(1))).alias("_mu"),
         F.count(F.lit(1)).alias("_nd"),
     )
-    d0 = daily.crossJoin(F.broadcast(stats)).select(
-        "d", (F.col("n").cast("double") - F.col("_mu")).alias("_dev"), "_nd"
-    ).localCheckpoint(eager=False)
+    d0 = materialize(
+        daily.crossJoin(F.broadcast(stats)).select(
+            "d",
+            (F.col("n").cast("double") - F.col("_mu")).alias("_dev"),
+            "_nd",
+        )
+    )
     denom = d0.select(
         F.round(F.col("_dev") * F.col("_dev"), 6)
         .cast("decimal(27,6)")
@@ -3761,7 +3766,7 @@ def events_mann_kendall(t: dict[str, DataFrame]) -> DataFrame:
     daily = e.groupBy(F.to_date("ts").alias("d")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    daily = daily.localCheckpoint(eager=False)  # self-join + ties + count
+    daily = materialize(daily)  # self-join + ties + count
     a = daily.select(F.col("d").alias("_da"), F.col("n").alias("_na"))
     b = daily.select(F.col("d").alias("_db"), F.col("n").alias("_nb"))
     s = (
@@ -4300,7 +4305,7 @@ def basket_association_rules(
     collect_set basket-array variant 29.7s (30M near-unique groups
     give collect_set no map-side combine), candidate-only supports
     via broadcast semi-join 17.3s (the broadcast BUILD side replays
-    the whole pair pipeline — lazy localCheckpoint does not carry
+    the whole pair pipeline — materializing it does not carry
     across the BroadcastExchange boundary), this exchange-reuse
     shape 10.4s.
 
@@ -4322,7 +4327,7 @@ def basket_association_rules(
     topk = pairs.orderBy(
         F.desc("pair_orders"), F.asc("part_a"), F.asc("part_b")
     ).limit(top)
-    topk = topk.localCheckpoint(eager=False)  # 20 rows; feeds both joins
+    topk = materialize(topk)  # 20 rows; feeds both joins
     item = l.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("_ci")
     )
@@ -4413,12 +4418,16 @@ def events_crosscorr(
     sy = dy.agg(
         (F.sum("_ny").cast("double") / F.count(F.lit(1))).alias("_my")
     )
-    cx = dx.crossJoin(F.broadcast(sx)).select(
-        "d", (F.col("_nx").cast("double") - F.col("_mx")).alias("_dx")
-    ).localCheckpoint(eager=False)
-    cy = dy.crossJoin(F.broadcast(sy)).select(
-        "d", (F.col("_ny").cast("double") - F.col("_my")).alias("_dy")
-    ).localCheckpoint(eager=False)
+    cx = materialize(
+        dx.crossJoin(F.broadcast(sx)).select(
+            "d", (F.col("_nx").cast("double") - F.col("_mx")).alias("_dx")
+        )
+    )
+    cy = materialize(
+        dy.crossJoin(F.broadcast(sy)).select(
+            "d", (F.col("_ny").cast("double") - F.col("_my")).alias("_dy")
+        )
+    )
     vx = cx.select(
         F.round(F.col("_dx") * F.col("_dx"), 6).cast("decimal(27,6)").alias("_t")
     ).agg(F.sum("_t").cast("double").alias("_vx"))
@@ -4608,13 +4617,15 @@ def events_hurst(
             (F.sum("_rs").cast("double") / F.count(F.lit(1))).alias("_ars"),
         )
     )
-    pts = per_w.select(
-        "w",
-        "n_blocks",
-        "_ars",
-        F.log(F.col("w").cast("double")).alias("_lx"),
-        F.log("_ars").alias("_ly"),
-    ).localCheckpoint(eager=False)
+    pts = materialize(
+        per_w.select(
+            "w",
+            "n_blocks",
+            "_ars",
+            F.log(F.col("w").cast("double")).alias("_lx"),
+            F.log("_ars").alias("_ly"),
+        )
+    )
     fit = pts.agg(
         F.count(F.lit(1)).cast("double").alias("_k"),
         F.sum(F.round("_lx", 9).cast("decimal(27,18)")).cast("double").alias("_sx"),
@@ -4692,7 +4703,7 @@ def customer_theil_decomposition(t: dict[str, DataFrame]) -> DataFrame:
             "_shg"
         ),
     )
-    gm = gm.localCheckpoint(eager=False)  # between terms + within join
+    gm = materialize(gm)  # between terms + within join
     between = gm.agg(
         F.max("_n").alias("n_customers"),
         F.count(F.lit(1)).cast("bigint").alias("n_groups"),
@@ -4863,8 +4874,7 @@ def events_logistic_fixed(
     broadcast 1-row weight frame, per-row gradient terms round-9 →
     DECIMAL sums, weights round-9 after each update so iteration
     k+1's inputs are bit-identical on any engine/parallelism.  The
-    labeled frame localCheckpoints once (multi-referenced by every
-    pass — the HITS replay lesson).  Final pass scores train
+    labeled frame is materialized once (every pass reads it).  Final pass scores train
     log-loss (ε-clamped, stated).
 
     Output: one row — n, w0, w1, w2, logloss (round 6).
@@ -4875,7 +4885,7 @@ def events_logistic_fixed(
         (F.col("value").cast("double") / F.lit(100.0)).alias("_x1"),
         (F.hour("ts").cast("double") / F.lit(23.0)).alias("_x2"),
     )
-    lab = lab.localCheckpoint(eager=False)  # one pass per iteration
+    lab = materialize(lab)  # one pass per iteration
     spark = e.sparkSession
     w = spark.createDataFrame([(0.0, 0.0, 0.0)], ["_w0", "_w1", "_w2"])
     for _ in range(int(iterations)):
@@ -6014,7 +6024,7 @@ def events_theil_sen(t: dict[str, DataFrame]) -> DataFrame:
     daily = raw.crossJoin(F.broadcast(x_min)).select(
         (F.col("x0") - F.col("_xmin")).alias("x"), "n"
     )
-    daily = daily.localCheckpoint(eager=False)  # pairs + residuals
+    daily = materialize(daily)  # pairs + residuals
     a = daily.select(F.col("x").alias("xa"), F.col("n").alias("na"))
     b = daily.select(F.col("x").alias("xb"), F.col("n").alias("nb"))
     pairs = a.join(b, F.col("xb") > F.col("xa")).select(
@@ -6505,10 +6515,8 @@ def events_funnel_window_sweep(
     stop growing as the window widens).
 
     The per-step event subsets (first-view minima, the click and
-    purchase streams) are computed ONCE and lazily localCheckpointed
-    — they are referenced by every window candidate, and without the
-    pin Spark would replay the filtered scans per window (the HITS
-    replay lesson); each window then adds only its two bounded-gap
+    purchase streams) are materialized once — every window candidate
+    reads them; each window then adds only its two bounded-gap
     chained joins on the shared user_id key.  Stage-2/3 frames are
     user-grain or smaller.
 
@@ -6517,21 +6525,18 @@ def events_funnel_window_sweep(
     construction (wider window ⊇ narrower matches) — tested.
     """
     e = t["events"]
-    s1 = (
+    s1 = materialize(
         e.where(F.col("event_type") == steps[0])
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint(eager=False)
     )
-    clicks = (
+    clicks = materialize(
         e.where(F.col("event_type") == steps[1])
         .select("user_id", "ts")
-        .localCheckpoint(eager=False)
     )
-    purchases = (
+    purchases = materialize(
         e.where(F.col("event_type") == steps[2])
         .select("user_id", "ts")
-        .localCheckpoint(eager=False)
     )
     out = None
     for wsec in windows_seconds:

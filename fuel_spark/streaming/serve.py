@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from fuel_spark.functions import materialize
+
 
 def stream_events_from_files(
     spark: SparkSession, path: str, schema: str
@@ -466,15 +468,8 @@ def near_dup_stream(
     wide = minhash_band_key_cols(
         docs, id_col, text_col, num_hashes, bands, shingle_k
     )
-    # r10 optimization (guide §5 / §2.4): the B per-band key sets all
-    # derive from `index`, and the static side of a stream-static join
-    # re-evaluates per referencing join — when the index is itself a
-    # lazy plan (e.g. with_minhash_bands over the reference corpus,
-    # the bench shape), the whole sketch subtree re-ran once per band.
-    # One lazy localCheckpoint of the narrow (band_id, band_key)
-    # projection computes it once; an index already materialized to
-    # parquet just re-reads two columns, unchanged semantics either way.
-    keys = index.select("band_id", "band_key").localCheckpoint(eager=False)
+    # consumed once per band's static join (B times)
+    keys = materialize(index.select("band_id", "band_key"))
     for b in range(bands):
         idx_b = (
             keys.where(F.col("band_id") == b)

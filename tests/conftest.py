@@ -127,7 +127,7 @@ SLOW_TESTS = {
     "test_text_dedup.py::test_bigram_logprob_half_boundary_deterministic",
     "test_text_dedup.py::test_bpe_encode_roundtrips_training_corpus",
     "test_text_dedup.py::test_char_level_encode",
-    "test_text_dedup.py::test_connected_components_deep_path_past_checkpoint_interval",
+    "test_text_dedup.py::test_connected_components_deep_path_matches_union_find",
     "test_text_dedup.py::test_connected_components_transitive_chain",
     "test_text_dedup.py::test_cosine_topk_matches_numpy",
     "test_text_dedup.py::test_dedup_components_labels_all_docs",

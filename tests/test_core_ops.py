@@ -366,31 +366,33 @@ def test_with_positions_pinned_layout_with_wide_payload(spark):
     assert got == list(range(500))
 
 
-def test_checkpoint_if_narrow_width_gate(spark):
-    """r11 narrow-checkpoint helper: frames inside the byte budget
-    come back lazily checkpointed (plan truncated on first use),
-    wide payload frames come back UNTOUCHED — the written form of
-    the r10 measured rule (shingle arrays lost, id frames won)."""
-    from fuel_spark.functions import (
-        NARROW_CHECKPOINT_ROW_BYTES,
-        checkpoint_if_narrow,
-        est_row_bytes,
-    )
+def test_materialize_truncates_lineage_and_runs_exchanges_at_call(spark):
+    """The one materialization helper: values are unchanged, the plan
+    is truncated to the stored RDD, and the docstring's call-time cost
+    holds — 0 Spark jobs over a narrow plan, 1 over a hash exchange
+    (counted in a job group, so nothing else is charged to it)."""
+    from fuel_spark.functions import materialize
+
+    sc = spark.sparkContext
+
+    def at_call(df, group):
+        sc.setJobGroup(group, "materialize")
+        try:
+            out = materialize(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
     narrow = spark.range(10).selectExpr("id", "id * 2 AS v")
-    wide = spark.range(10).selectExpr(
-        "id", "array_repeat(repeat('x', 40), 8) AS shingles"
-    )
-    assert sum(est_row_bytes(t) for _, t in narrow.dtypes) \
-        <= NARROW_CHECKPOINT_ROW_BYTES
-    assert sum(est_row_bytes(t) for _, t in wide.dtypes) \
-        > NARROW_CHECKPOINT_ROW_BYTES
-
-    n2 = checkpoint_if_narrow(narrow)
-    w2 = checkpoint_if_narrow(wide)
-    assert w2 is wide  # untouched: replay cheaper than materializing
-    assert n2 is not narrow
+    n2, jobs = at_call(narrow, "test-materialize-narrow")
+    assert jobs == []
     assert sorted(r.v for r in n2.collect()) == [i * 2 for i in range(10)]
-    # a checkpointed frame's materialized plan is lineage-truncated
-    assert "Scan ExistingRDD" in n2._jdf.queryExecution().toString() or \
-        "LogicalRDD" in n2._jdf.queryExecution().toString()
+    plan = n2._jdf.queryExecution().toString()
+    assert "Scan ExistingRDD" in plan or "LogicalRDD" in plan
+
+    hashed = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    h2, jobs = at_call(hashed, "test-materialize-hash")
+    assert len(jobs) == 1
+    assert sorted(map(tuple, h2.collect())) == sorted(
+        map(tuple, hashed.collect())
+    )

@@ -61,10 +61,11 @@ def test_pagerank_mass_conserved_and_deterministic(spark, star_plus_chain):
 
 
 def test_pagerank_deep_chain_survives_checkpointing(spark):
-    # diameter 30 > checkpoint interval: exercises lineage truncation
+    # diameter 30: 12 rounds, each carried into the next as a
+    # materialized frame
     edges = [(i, i + 1) for i in range(30)]
     df = from_rows(spark, edges, "src bigint, dst bigint")
-    out = graph.pagerank(df, iterations=12, checkpoint_interval=3).collect()
+    out = graph.pagerank(df, iterations=12).collect()
     assert len(out) == 31
     ref = _numpy_pagerank(edges, 31, iterations=12)
     for r in out:
@@ -72,6 +73,28 @@ def test_pagerank_deep_chain_survives_checkpointing(spark):
     # interior vertices (2 neighbors) outrank the chain endpoints
     by_v = {r.vertex: r.rank for r in out}
     assert by_v[15] > by_v[0] and by_v[15] > by_v[30]
+
+
+def test_loops_leave_no_cached_frames(spark):
+    """connected_components and pagerank carry their frames with
+    materialize, never cache(): nothing is left in the cache manager
+    when they return, nor after their first action."""
+    from fuel_spark.ops import dedup
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    pairs = from_rows(
+        spark, [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a bigint, id_b bigint"
+    )
+    comp = dedup.connected_components(pairs)
+    assert cache.isEmpty()
+    assert len(comp.collect()) == 6
+    assert cache.isEmpty()
+    edges = from_rows(spark, [(i, i + 1) for i in range(8)], "src bigint, dst bigint")
+    ranks = graph.pagerank(edges, iterations=10)
+    assert cache.isEmpty()
+    assert len(ranks.collect()) == 9
+    assert cache.isEmpty()
 
 
 def test_pagerank_directed_dangling_mass(spark):

@@ -269,39 +269,35 @@ def test_connected_components_transitive_chain(spark):
     assert comp[10] == 10 and comp[11] == 10
 
 
-def test_connected_components_deep_path_past_checkpoint_interval(spark):
-    """A 20-edge path graph has diameter > the 5-iteration
-    localCheckpoint interval: convergence must cross several lineage
-    truncations and still produce one component.  (Without truncation
-    this shape is exactly what overflows plan-size limits / makes
-    recovery recompute the whole chain.)"""
-    n = 21
-    pairs = from_rows(
-        spark,
-        [(i, i + 1) for i in range(1, n)],
-        schema="id_a bigint, id_b bigint",
-    )
-    comp = {r.v: r.component for r in
-            dedup.connected_components(pairs).collect()}
-    assert all(comp[v] == 1 for v in range(1, n + 1))
-    # a truncation-free control agrees — on a SHORT path only: with
-    # no checkpoint the analyzed plan doubles per iteration (labels
-    # feeds both the join and the union), so a 20-iteration
-    # truncation-free loop is exactly the analyzer blow-up the
-    # checkpoint exists to prevent.  8 iterations (2^8 plan nodes)
-    # is still cheap and exercises the same code path.
-    m = 9
-    short = from_rows(
-        spark,
-        [(i, i + 1) for i in range(1, m)],
-        schema="id_a bigint, id_b bigint",
-    )
-    want = {r.v: r.component for r in
-            dedup.connected_components(short).collect()}
-    got = {r.v: r.component for r in
-           dedup.connected_components(short, checkpoint_interval=0).collect()}
-    assert want == got
-    assert all(want[v] == 1 for v in range(1, m + 1))
+def _union_find_components(edges):
+    """Reference: each vertex -> the smallest id in its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def test_connected_components_deep_path_matches_union_find(spark):
+    """Path graphs need several propagation rounds (each carried into
+    the next as a materialized frame); the labels must equal a plain
+    union-find on the same edges."""
+    for n in (21, 9):
+        edges = [(i, i + 1) for i in range(1, n)]
+        pairs = from_rows(spark, edges, schema="id_a bigint, id_b bigint")
+        got = {r.v: r.component for r in
+               dedup.connected_components(pairs).collect()}
+        assert got == _union_find_components(edges)
+        assert set(got.values()) == {1}
 
 
 def test_dedup_components_labels_all_docs(spark):
