@@ -10,6 +10,18 @@ Design: everything is hash-based and *pair-bounded* —
 - jaccard verify: array intersection on the candidate pairs.
 - simhash: bit-vote fingerprint, one narrow projection.
 
+The near-dup operators share one pipeline, sketch → candidates →
+verify, and each of its building blocks is written once, as a private
+helper (``tests/test_dedup_census.py`` fails on a copy):
+
+- ``_shingle_sets``: normalize, then the distinct char-shingle set;
+- ``_minhash_sketch``: shingle base hashes → K minhashes → band keys;
+- ``_all_pairs_sql``: every pair of a sorted bucket array;
+- ``_with_overlap``: ``inter`` / ``uni`` / round-6 ``jaccard``;
+- ``_exact_prepass``: md5 rollup → min id per text → survivors;
+- ``_gram_hash_sql``: the 64-bit word-gram hash (the n-gram signals
+  take the distinct set, ``_distinct_gram_hashes``).
+
 No Python UDFs; md5-based hashing keeps Spark and the DuckDB oracle
 bit-identical.
 
@@ -24,7 +36,7 @@ corpus is known clean.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from fuel_spark.functions import (
     ensure_parallelism,
@@ -54,6 +66,105 @@ from fuel_spark.functions import (
 DEFAULT_MAX_BUCKET: int | None = 512
 
 
+# --------------------------------------------------------------------------
+# The six building blocks of the near-dup pipeline, each written once.
+# --------------------------------------------------------------------------
+
+
+def _shingle_sets(
+    frame: DataFrame, keep: list[str], text_col: str, shingle_k: int,
+    out: str = "_sh",
+) -> DataFrame:
+    """``keep`` columns plus the distinct char-shingle set of
+    ``text_col`` as ``out``.  ``_norm`` gets its own projection:
+    inlining the normalize regex into the shingle lambda is
+    O(len²)/doc."""
+    keep_cols = [F.col(c) for c in keep]
+    frame = frame.select(*keep_cols, norm_text(F.col(text_col)).alias("_norm"))
+    return frame.select(*keep_cols, shingles_over_norm("_norm", shingle_k).alias(out))
+
+
+def _minhash_sketch(
+    frame: DataFrame, keep: list[str], text_col: str,
+    num_hashes: int, bands: int, shingle_k: int,
+) -> tuple[DataFrame, list[Column]]:
+    """The MinHash signature: ``frame`` widened, then shingles → one
+    md5 per shingle as ``_hs`` (its own projection) → K integer
+    rehashes of that array as ``_mh0..`` (see functions.minhash_expr).
+    Returns the frame (``keep``, ``_sh``, ``_mh*``) and the B band-key
+    Columns over it (``|``-joined minhashes of each band)."""
+    out = _shingle_sets(ensure_parallelism(frame), keep, text_col, shingle_k)
+    out = out.select(*keep, "_sh", shingle_hashes_expr("_sh").alias("_hs"))
+    mh = [minhash_expr("_hs", j).alias(f"_mh{j}") for j in range(num_hashes)]
+    out = out.select(*keep, "_sh", *mh)
+    rows = num_hashes // bands
+    keys = [
+        F.concat_ws("|", *[F.col(f"_mh{j}") for j in range(b * rows, (b + 1) * rows)])
+        for b in range(bands)
+    ]
+    return out, keys
+
+
+def _with_overlap(df: DataFrame, sh_a: str, sh_b: str) -> DataFrame:
+    """Add ``inter`` = |A∩B| and ``uni`` = |A∪B| (bigint) and the
+    round-6 ``jaccard`` of two shingle-set columns."""
+    return (
+        df.withColumn("inter", F.size(F.array_intersect(sh_a, sh_b)).cast("bigint"))
+        .withColumn("uni", (F.size(sh_a) + F.size(sh_b) - F.col("inter")).cast("bigint"))
+        .withColumn(
+            "jaccard",
+            F.round(F.col("inter").cast("double") / F.greatest(F.col("uni"), F.lit(1)), 6),
+        )
+    )
+
+
+def _exact_prepass(df: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame, DataFrame]:
+    """Exact-duplicate pre-pass on a 16-byte md5 rollup: returns the
+    survivors (``id_col``, ``text_col``; the min id of each exact-text
+    group), materialized, and the loser ids.  The survivors are read by
+    the bands and both sides of the shingle join; replaying the
+    digest-rollup + anti-join chain under each measured 12 scans, 19s
+    for a 5k-doc verify at the 20× smoke."""
+    hashed = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("_h"))
+    keepers = hashed.groupBy("_h").agg(F.min(id_col).alias("_keep"))
+    losers = (
+        hashed.join(keepers, "_h")
+        .where(F.col(id_col) != F.col("_keep"))
+        .select(id_col)
+    )
+    kept = materialize(
+        df.join(losers, id_col, "left_anti").select(F.col(id_col), F.col(text_col))
+    )
+    return kept, losers
+
+
+def _all_pairs_sql(arr: str, a: str = "id_a", b: str = "id_b") -> str:
+    """SQL: every (i < j) pair of the sorted array column ``arr`` as
+    structs (a, b), expanded JVM-side."""
+    return (
+        f"flatten(transform(sequence(1, size({arr}) - 1),"
+        f" i -> transform(slice({arr}, i + 1, size({arr}) - i),"
+        f" x -> struct(element_at({arr}, i) AS {a}, x AS {b}))))"
+    )
+
+
+def _gram_hash_sql(start: str, length: int | str) -> str:
+    """SQL: the word-gram hash, the 16-hex md5 prefix (a 64-bit key,
+    never raw strings on the wire) of the ``length`` words of ``_w``
+    from 1-based ``start``."""
+    return f"substring(md5(array_join(slice(_w, {start}, {length}), ' ')), 1, 16)"
+
+
+def _distinct_gram_hashes(k: int) -> Column:
+    """The distinct word k-gram hashes of ``_w``; empty below k words."""
+    return F.expr(
+        f"CASE WHEN size(_w) >= {k} THEN"
+        f" array_distinct(transform(sequence(1, size(_w) - {k - 1}),"
+        f" i -> {_gram_hash_sql('i', k)}))"
+        f" ELSE CAST(array() AS array<string>) END"
+    )
+
+
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact duplicate groups by md5(text): canonical (min-id) doc,
     duplicate count.  One shuffle on the digest; at 100 TB this is the
@@ -81,23 +192,14 @@ def with_minhash_bands(
     Output: id, band_id, band_key (concat of the band's minhashes).
     rows = docs × bands — linear, shuffle-free (narrow projection).
     """
-    rows_per_band = num_hashes // bands
-    # normalize once, then shingle over the materialized column —
-    # inlining the regex into the shingle lambda is O(len²)/doc.
-    # One md5 per shingle materialized as `_hs`; the K minhashes are
-    # integer rehashes of that array (see functions.minhash_expr).
-    out = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    out = out.select(F.col(id_col), norm_text(F.col(text_col)).alias("_norm"))
-    out = out.select(F.col(id_col), shingles_over_norm("_norm", shingle_k).alias("_sh"))
-    out = out.select(F.col(id_col), shingle_hashes_expr("_sh").alias("_hs"))
-    mh = [minhash_expr("_hs", j).alias(f"_mh{j}") for j in range(num_hashes)]
-    out = out.select(id_col, *mh)
-    band_structs = []
-    for b in range(bands):
-        cols = [F.col(f"_mh{j}") for j in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        band_structs.append(
-            F.struct(F.lit(b).alias("band_id"), F.concat_ws("|", *cols).alias("band_key"))
-        )
+    out, keys = _minhash_sketch(
+        df.select(F.col(id_col), F.col(text_col)), [id_col], text_col,
+        num_hashes, bands, shingle_k,
+    )
+    band_structs = [
+        F.struct(F.lit(b).alias("band_id"), key.alias("band_key"))
+        for b, key in enumerate(keys)
+    ]
     out = out.select(id_col, F.explode(F.array(*band_structs)).alias("_b"))
     return out.select(id_col, "_b.band_id", "_b.band_key")
 
@@ -115,30 +217,10 @@ def minhash_band_key_cols(
     row per band.  The wide shape keeps per-doc decisions row-local —
     required by streaming consumers (``streaming.near_dup_stream``),
     where an explode + re-aggregate would need streaming state."""
-    rows_per_band = num_hashes // bands
-    out = ensure_parallelism(df)
-    out = out.withColumn("_norm", norm_text(F.col(text_col)))
-    out = with_materialized_shingle_hashes(out, shingle_k)
-    mh = [minhash_expr("_hs", j).alias(f"_mh{j}") for j in range(num_hashes)]
-    out = out.select("*", *mh)
-    keys = [
-        F.concat_ws(
-            "|",
-            *[F.col(f"_mh{j}")
-              for j in range(b * rows_per_band, (b + 1) * rows_per_band)],
-        ).alias(f"band_key_{b}")
-        for b in range(bands)
-    ]
+    out, keys = _minhash_sketch(df, df.columns, text_col, num_hashes, bands, shingle_k)
     return out.select(
-        *[c for c in df.columns], *keys
+        *df.columns, *[key.alias(f"band_key_{b}") for b, key in enumerate(keys)]
     )
-
-
-def with_materialized_shingle_hashes(out: DataFrame, shingle_k: int) -> DataFrame:
-    """_norm -> shingles -> base hashes, each through its own
-    projection so none inlines into a downstream lambda."""
-    out = out.withColumn("_sh", shingles_over_norm("_norm", shingle_k))
-    return out.withColumn("_hs", shingle_hashes_expr("_sh")).drop("_norm", "_sh")
 
 
 def minhash_candidate_pairs(
@@ -177,11 +259,7 @@ def minhash_candidate_pairs(
         .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
         .where(F.size("ids") > 1)
     )
-    all_pairs = (
-        "flatten(transform(sequence(1, size(ids) - 1),"
-        " i -> transform(slice(ids, i + 1, size(ids) - i),"
-        " x -> struct(element_at(ids, i) AS id_a, x AS id_b))))"
-    )
+    all_pairs = _all_pairs_sql("ids")
     star_pairs = (
         "transform(slice(ids, 2, size(ids) - 1),"
         " x -> struct(element_at(ids, 1) AS id_a, x AS id_b))"
@@ -246,16 +324,7 @@ def ngram_jaccard_pairs(
             *[c.alias(f"_c_{n}") for n, c in carry.items()],
         )
     )
-    sh = sh.select(
-        F.col(id_col),
-        norm_text(F.col(text_col)).alias("_norm"),
-        *[F.col(f"_c_{n}") for n in carry],
-    )
-    sh = sh.select(
-        F.col(id_col),
-        shingles_over_norm("_norm", shingle_k).alias("sh"),
-        *[F.col(f"_c_{n}") for n in carry],
-    )
+    sh = _shingle_sets(sh, [id_col, *[f"_c_{n}" for n in carry]], text_col, shingle_k, "sh")
     # NOTE (r10, measured): a lazy checkpoint of `sh` here is NOT a
     # win — the shingle arrays are ~5x the text bytes, so
     # materializing them costs as much as the second compute pass
@@ -273,21 +342,11 @@ def ngram_jaccard_pairs(
         *[F.col(f"_c_{n}").alias(f"{n}_b") for n in carry],
     )
     carried = [f"{n}_{s}" for n in carry for s in ("a", "b")]
-    out = (
-        cands.join(a, "id_a").join(b, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint"))
-        .withColumn(
-            "uni",
-            (F.size("sh_a") + F.size("sh_b") - F.col("inter")).cast("bigint"),
-        )
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter").cast("double") / F.greatest(F.col("uni"), F.lit(1)), 6),
-        )
+    return (
+        _with_overlap(cands.join(a, "id_a").join(b, "id_b"), "sh_a", "sh_b")
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "inter", "uni", "jaccard", *carried)
     )
-    return out
 
 
 def apply_dedup(
@@ -337,20 +396,7 @@ def apply_dedup(
     exact_losers = None
     near_input = df
     if prededup_exact:
-        hashed = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("_h"))
-        keepers = hashed.groupBy("_h").agg(F.min(id_col).alias("_keep"))
-        exact_losers = (
-            hashed.join(keepers, "_h")
-            .where(F.col(id_col) != F.col("_keep"))
-            .select(id_col)
-        )
-        near_input = df.join(exact_losers, id_col, "left_anti")
-        # consumed 3x: the bands and both sides of the shingle join
-        # (replaying the digest-rollup + anti-join chain under each one
-        # measured 12 scans, 19s for a 5k-doc verify at the 20× smoke)
-        near_input = materialize(
-            near_input.select(F.col(id_col), F.col(text_col))
-        )
+        near_input, exact_losers = _exact_prepass(df, id_col, text_col)
     if keep == "min_id":
         pairs = ngram_jaccard_pairs(
             near_input, id_col, text_col, threshold, num_hashes, bands,
@@ -432,12 +478,6 @@ def cross_doc_ngram_dup(
     cuts it to fixed width.  Two map-side-combinable shuffles (per-doc
     distinct grams, corpus gram counts) + one join back on the hash.
     """
-    grams = F.expr(
-        f"CASE WHEN size(_w) >= {n} THEN"
-        f" array_distinct(transform(sequence(1, size(_w) - {n - 1}),"
-        f" i -> substring(md5(array_join(slice(_w, i, {n}), ' ')), 1, 16)))"
-        f" ELSE CAST(array() AS array<string>) END"
-    )
     from fuel_spark.functions import words
 
     # explode(array(words)) is a Generate node: a projection-collapse
@@ -451,7 +491,7 @@ def cross_doc_ngram_dup(
             F.col(id_col),
             F.explode(F.array(words(F.col(text_col)))).alias("_w"),
         )
-        .select(F.col(id_col), grams.alias("_g"))
+        .select(F.col(id_col), _distinct_gram_hashes(n).alias("_g"))
         .select(F.col(id_col), F.explode("_g").alias("gh"))
     )
     doc_counts = per_doc.groupBy("gh").agg(
@@ -503,17 +543,11 @@ def decontaminate(
     from fuel_spark.functions import words
 
     def grams_of(frame: DataFrame, key, text) -> DataFrame:
-        g = F.expr(
-            f"CASE WHEN size(_w) >= {n} THEN"
-            f" array_distinct(transform(sequence(1, size(_w) - {n - 1}),"
-            f" i -> substring(md5(array_join(slice(_w, i, {n}), ' ')), 1, 16)))"
-            f" ELSE CAST(array() AS array<string>) END"
-        )
         # explode(array(...)) Generate barrier: keep the normalize+split
         # out of the per-position lambda (see cross_doc_ngram_dup)
         return (
             frame.select(key.alias("_id"), F.explode(F.array(words(text))).alias("_w"))
-            .select(F.col("_id"), F.explode(g).alias("gh"))
+            .select(F.col("_id"), F.explode(_distinct_gram_hashes(n)).alias("gh"))
         )
 
     bench_grams = (
@@ -753,17 +787,7 @@ def containment_pairs(
         # representative (the 20× smoke's copy-heavy corpus emits
         # 1.14M raw verified pairs; representatives collapse it to
         # the distinct-text pair set)
-        h = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("_h"))
-        keep = h.groupBy("_h").agg(F.min(id_col).alias("_keep"))
-        losers = (
-            h.join(keep, "_h")
-            .where(F.col(id_col) != F.col("_keep"))
-            .select(id_col)
-        )
-        df = materialize(
-            df.join(losers, id_col, "left_anti")
-            .select(F.col(id_col), F.col(text_col))
-        )
+        df, _ = _exact_prepass(df, id_col, text_col)
     cands = minhash_candidate_pairs(
         df, id_col, text_col, num_hashes, bands, shingle_k,
         max_bucket=max_bucket, distinct_pairs=False,
@@ -771,15 +795,14 @@ def containment_pairs(
     # same width pin as the jaccard verify (see ngram_jaccard_pairs):
     # tiny pair bytes must not single-thread the set intersections
     cands = ensure_parallelism(cands)
-    sh = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    sh = sh.select(F.col(id_col), norm_text(F.col(text_col)).alias("_norm"))
-    sh = sh.select(F.col(id_col), shingles_over_norm("_norm", shingle_k).alias("sh"))
+    sh = _shingle_sets(
+        ensure_parallelism(df.select(F.col(id_col), F.col(text_col))),
+        [id_col], text_col, shingle_k, "sh",
+    )
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint")
     out = (
-        cands.join(a, "id_a").join(b, "id_b")
-        .withColumn("inter", inter)
+        _with_overlap(cands.join(a, "id_a").join(b, "id_b"), "sh_a", "sh_b")
         .withColumn(
             "containment_ab",
             F.round(
@@ -1404,21 +1427,8 @@ def fuzzy_join(
     Output: id_l, id_r, inter, uni, jaccard (>= threshold).
     """
     if prededup_exact:
-        def _canon(df, idc, txt):
-            h = df.select(F.col(idc), F.md5(F.col(txt)).alias("_h"))
-            keep = h.groupBy("_h").agg(F.min(idc).alias("_keep"))
-            losers = (
-                h.join(keep, "_h")
-                .where(F.col(idc) != F.col("_keep"))
-                .select(idc)
-            )
-            return materialize(
-                df.join(losers, idc, "left_anti")
-                .select(F.col(idc), F.col(txt))
-            )
-
-        left = _canon(left, left_id, left_text)
-        right = _canon(right, right_id, right_text)
+        left, _ = _exact_prepass(left, left_id, left_text)
+        right, _ = _exact_prepass(right, right_id, right_text)
     lb = with_minhash_bands(
         left.select(left_id, left_text), left_id, left_text,
         num_hashes, bands, shingle_k,
@@ -1445,11 +1455,8 @@ def fuzzy_join(
 
     def _sh(df, idc, txt, out_id, out_sh):
         d = ensure_parallelism(df.select(F.col(idc), F.col(txt)))
-        d = d.select(F.col(idc), norm_text(F.col(txt)).alias("_norm"))
-        return d.select(
-            F.col(idc).alias(out_id),
-            shingles_over_norm("_norm", shingle_k).alias(out_sh),
-        )
+        d = _shingle_sets(d, [idc], txt, shingle_k)
+        return d.select(F.col(idc).alias(out_id), F.col("_sh").alias(out_sh))
 
     a = _sh(left, left_id, left_text, "id_l", "_sh_l")
     b = _sh(right, right_id, right_text, "id_r", "_sh_r")
@@ -1457,22 +1464,7 @@ def fuzzy_join(
     # must not let AQE single-thread the set intersections
     cand = ensure_parallelism(cand)
     return (
-        cand.join(a, "id_l")
-        .join(b, "id_r")
-        .withColumn(
-            "inter", F.size(F.array_intersect("_sh_l", "_sh_r")).cast("bigint")
-        )
-        .withColumn(
-            "uni",
-            (F.size("_sh_l") + F.size("_sh_r") - F.col("inter")).cast("bigint"),
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double") / F.greatest(F.col("uni"), F.lit(1)),
-                6,
-            ),
-        )
+        _with_overlap(cand.join(a, "id_l").join(b, "id_r"), "_sh_l", "_sh_r")
         .where(F.col("jaccard") >= threshold)
         .select("id_l", "id_r", "inter", "uni", "jaccard")
     )
@@ -1536,11 +1528,7 @@ def hamming_near_dup(
         "_id", "_h", F.explode(F.array(*band_structs)).alias("_bk")
     ).select("_id", "_h", F.col("_bk._band").alias("_band"), F.col("_bk._key").alias("_key"))
 
-    all_pairs = (
-        "flatten(transform(sequence(1, size(ms) - 1),"
-        " i -> transform(slice(ms, i + 1, size(ms) - i),"
-        " x -> struct(element_at(ms, i) AS a, x AS b))))"
-    )
+    all_pairs = _all_pairs_sql("ms", "a", "b")
 
     if max_bucket is None:
         buckets = (
@@ -1768,50 +1756,34 @@ def minhash_calibration(
     6-dp decimal sums (engines disagree on double-rounding exact
     halves).
     """
-    from fuel_spark.functions import norm_text
-
-    out = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    out = out.select(F.col(id_col), norm_text(F.col(text_col)).alias("_norm"))
-    out = out.select(
-        F.col(id_col), shingles_over_norm("_norm", shingle_k).alias("_sh")
+    sk, _ = _minhash_sketch(
+        df.select(F.col(id_col), F.col(text_col)), [id_col], text_col,
+        num_hashes, bands, shingle_k,
     )
-    hashed = out.select(
-        F.col(id_col),
-        F.col("_sh"),
-        shingle_hashes_expr("_sh").alias("_hs"),
-    )
-    mh = [minhash_expr("_hs", j).alias(f"_m{j}") for j in range(num_hashes)]
-    sk = hashed.select(id_col, "_sh", *mh)
-
     cands = minhash_candidate_pairs(
         df, id_col, text_col, num_hashes, bands, shingle_k
     )
     a = sk.select(
         F.col(id_col).alias("id_a"),
         F.col("_sh").alias("_sa"),
-        *[F.col(f"_m{j}").alias(f"_ma{j}") for j in range(num_hashes)],
+        *[F.col(f"_mh{j}").alias(f"_ma{j}") for j in range(num_hashes)],
     )
     b = sk.select(
         F.col(id_col).alias("id_b"),
         F.col("_sh").alias("_sb"),
-        *[F.col(f"_m{j}").alias(f"_mb{j}") for j in range(num_hashes)],
+        *[F.col(f"_mh{j}").alias(f"_mb{j}") for j in range(num_hashes)],
     )
     agree = sum(
         F.when(F.col(f"_ma{j}") == F.col(f"_mb{j}"), 1).otherwise(0)
         for j in range(num_hashes)
     )
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    union = F.size("_sa") + F.size("_sb") - inter
     scored = (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
+        _with_overlap(cands.join(a, "id_a").join(b, "id_b"), "_sa", "_sb")
         .select(
             F.round(agree / F.lit(float(num_hashes)), 6)
             .cast("decimal(27,6)")
             .alias("est"),
-            F.round(
-                inter.cast("double") / F.greatest(union, F.lit(1)), 6
-            ).cast("decimal(27,6)").alias("exact"),
+            F.col("jaccard").cast("decimal(27,6)").alias("exact"),
         )
         .withColumn(
             "abs_err",
@@ -1920,9 +1892,7 @@ def substring_seeds(
             F.expr(
                 f"CASE WHEN size(_w) >= {seed_k} THEN"
                 f" transform(sequence(1, size(_w) - {seed_k - 1}),"
-                f" i -> struct(i AS pos,"
-                f" substring(md5(array_join(slice(_w, i, {seed_k}), ' ')), 1, 16)"
-                f" AS gh))"
+                f" i -> struct(i AS pos, {_gram_hash_sql('i', seed_k)} AS gh))"
                 f" ELSE CAST(array() AS array<struct<pos:int,gh:string>>) END"
             )
         ).alias("_s"),
@@ -2031,10 +2001,7 @@ def exact_substring_spans(
         .select(
             "doc_a", "doc_b", "start_a", "start_b",
             F.col("span_words").cast("bigint").alias("span_words"),
-            F.expr(
-                "substring(md5(array_join("
-                "slice(_w, start_a, CAST(span_words AS INT)), ' ')), 1, 16)"
-            ).alias("span_hash"),
+            F.expr(_gram_hash_sql("start_a", "CAST(span_words AS INT)")).alias("span_hash"),
         )
     )
 
@@ -2546,14 +2513,9 @@ def edit_distance_pairs(
             "dist",
         )
     )
-    all_pairs = (
-        "flatten(transform(sequence(1, size(_ids) - 1),"
-        " i -> transform(slice(_ids, i + 1, size(_ids) - i),"
-        " x -> struct(element_at(_ids, i) AS id_a, x AS id_b))))"
-    )
     dist0 = (
         groups.where(F.size("_ids") > 1)
-        .select(F.explode(F.expr(all_pairs)).alias("_p"))
+        .select(F.explode(F.expr(_all_pairs_sql("_ids"))).alias("_p"))
         .select("_p.id_a", "_p.id_b", F.lit(0).cast("long").alias("dist"))
     )
     return expanded.unionByName(dist0)
@@ -2631,32 +2593,13 @@ def lsh_scurve_calibration(
         for d in range(10)
     }
     scoped = df.filter(F.col(id_col) < max_id).select(id_col, text_col)
-    sh = scoped.select(
-        F.col(id_col), norm_text(F.col(text_col)).alias("_norm")
-    ).select(
-        F.col(id_col), shingles_over_norm("_norm", shingle_k).alias("sh")
-    )
+    # no width pin: the scope is <= max_id rows
+    sh = _shingle_sets(scoped, [id_col], text_col, shingle_k, "sh")
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    pairs = (
-        F.broadcast(a)
-        .join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "_i", F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint")
-        )
-        .withColumn(
-            "_u",
-            (F.size("sh_a") + F.size("sh_b") - F.col("_i")).cast("bigint"),
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("_i").cast("double") / F.greatest(F.col("_u"), F.lit(1)),
-                6,
-            ),
-        )
-        .select("id_a", "id_b", "jaccard")
-    )
+    pairs = _with_overlap(
+        F.broadcast(a).join(b, F.col("id_a") < F.col("id_b")), "sh_a", "sh_b"
+    ).select("id_a", "id_b", "jaccard")
     bnd = with_minhash_bands(
         scoped, id_col, text_col, num_hashes, bands, shingle_k
     )

@@ -2704,3 +2704,48 @@ def test_ab_power_sweep_scaling_laws(spark):
     rc = analytics.events_ab_power_sweep(const, (0.01,)).first()
     assert rc.var_per_user == 0.0 and rc.n_per_arm_required == 0
     assert rc.powered
+
+
+# Results must not depend on how wide Spark runs them: the near-dup
+# family's sorted rows hash the same under shuffle partitions 1 and 7,
+# each with adaptive execution on and off.  A difference is a defect
+# in the operator (an order- or partition-dependent pick).
+NEAR_DUP_FAMILY = (
+    "dedup_apply",
+    "dedup_apply_keep_longest",
+    "dedup_jaccard",
+    "dedup_containment",
+    "dedup_fuzzy_join",
+    "dedup_minhash_calibration",
+    "dedup_lsh_scurve",
+    "dedup_edit_distance",
+    "dedup_simhash_pairs",
+    "curation_pipeline",
+)
+
+
+def test_near_dup_family_is_width_invariant(spark):
+    import hashlib
+
+    import __spark_entry__ as E
+
+    def digest(df):
+        rows = sorted(repr(tuple(r)) for r in df.collect())
+        return hashlib.md5("\n".join(rows).encode()).hexdigest()
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    qs = E.queries()
+    digests = {name: {} for name in NEAR_DUP_FAMILY}
+    try:
+        for aqe in ("true", "false"):
+            for parts in ("1", "7"):
+                spark.conf.set("spark.sql.shuffle.partitions", parts)
+                spark.conf.set("spark.sql.adaptive.enabled", aqe)
+                for name in NEAR_DUP_FAMILY:
+                    digests[name][(parts, aqe)] = digest(qs[name](spark, SF))
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    varying = {n: d for n, d in digests.items() if len(set(d.values())) > 1}
+    assert varying == {}

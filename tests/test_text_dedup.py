@@ -674,6 +674,45 @@ def test_merge_into_index_catches_cross_batch_dups(spark):
     assert fresh.collect() == []
 
 
+def test_band_forms_agree_long_and_wide(spark):
+    """Screening (``near_dup_stream``) reads the WIDE band form and
+    index building the LONG one: a doc is caught only if both sketch
+    it identically.  The long rows equal the unpivot of the wide
+    columns, including a text shorter than ``shingle_k`` and an empty
+    text; the wide form keeps every input column."""
+    docs = from_rows(
+        spark,
+        [
+            (1, "the quick brown fox jumps over the lazy dog", "a"),
+            (2, "The quick brown fox jumped over the lazy dog!", "b"),
+            (3, "abc", "c"),
+            (4, "", "d"),
+            (5, "completely different words about spark engines", "e"),
+        ],
+        schema="doc_id bigint, text string, src string",
+    )
+    for num_hashes, bands, shingle_k in ((9, 3, 5), (8, 4, 3)):
+        long = {
+            tuple(r)
+            for r in dedup.with_minhash_bands(
+                docs, "doc_id", "text", num_hashes, bands, shingle_k
+            ).collect()
+        }
+        wide = dedup.minhash_band_key_cols(
+            docs, "doc_id", "text", num_hashes, bands, shingle_k
+        )
+        assert wide.columns == docs.columns + [f"band_key_{b}" for b in range(bands)]
+        rows = wide.collect()
+        unpivot = {
+            (r.doc_id, b, r[f"band_key_{b}"]) for r in rows for b in range(bands)
+        }
+        assert len(long) == 5 * bands
+        assert long == unpivot
+        assert {(r.doc_id, r.src) for r in rows} == {
+            (1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")
+        }
+
+
 def test_fuzzy_join_links_near_dups_across_corpora(spark):
     """A left doc links to its right-side near-copy above threshold;
     unrelated docs never pair; max_bucket skips boilerplate buckets."""

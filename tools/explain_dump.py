@@ -3,18 +3,38 @@
 Usage: python tools/explain_dump.py OUTDIR [suffix] [query ...]
 
 Writes OUTDIR/<query>_<suffix>.txt (suffix defaults to "before").
-Plans are captured lazily (no execution), so this is cheap and does
-not need a quiet machine.  The streaming special-case has no batch
-plan; it is skipped.
+Building a query runs no action, but it is not free: every
+``functions.materialize`` on the way runs the exchanges beneath it at
+call time, so a query with a pre-pass or a loop runs Spark jobs while
+its plan is built.  The printed plan starts at those materialized
+frames.  The streaming special-case has no batch plan; it is skipped.
+
+Expression, exchange and RDD ids (``#123``, ``plan_id=7``,
+``RDD[42]``) and temp paths are normalized, so diffing the output
+directories of two commits is a plan diff.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+_EXPR_ID = re.compile(r"#\d+")
+_PLAN_ID = re.compile(r"plan_id=\d+")
+_RDD_ID = re.compile(r"RDD\[\d+\]")
+_TMP = re.compile(re.escape(tempfile.gettempdir()) + r"/[^\s,\]\)]+")
+
+
+def normalize(plan: str) -> str:
+    """Drop what changes from run to run: expression, exchange and RDD
+    ids, temp paths."""
+    plan = _PLAN_ID.sub("plan_id=N", _EXPR_ID.sub("#N", plan))
+    return _TMP.sub("<tmp>", _RDD_ID.sub("RDD[N]", plan))
 
 
 def main() -> int:
@@ -45,8 +65,8 @@ def main() -> int:
             fn = qs[name]
         try:
             df = fn(spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted")
+            plan = normalize(df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"))
         except Exception as e:  # pragma: no cover - capture tool
             plan = f"EXPLAIN FAILED: {e}"
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
