@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
 
 from fuel_spark.functions import cosine_expr, materialize
+from fuel_spark.ops.similarity import _exact_topk, _top_k
 
 
 def to_ml_vector(df: DataFrame, array_col: str, out_col: str = "features") -> DataFrame:
@@ -128,27 +129,10 @@ def ivf_ann(
             " * (CAST(a AS DOUBLE) - b)), CAST(0.0 AS DOUBLE), (s, v) -> s + v)"
         ),
     )
-    pw = Window.partitionBy("query_id").orderBy("dist2", "bucket")
-    probes = (
-        qc.withColumn("_r", F.row_number().over(pw))
-        .where(F.col("_r") <= nprobe)
-        .select("query_id", "qvec", "bucket")
+    probes = _top_k(qc, nprobe, F.col("dist2").asc(), tie="bucket").select(
+        "query_id", "qvec", "bucket"
     )
-
-    scored = (
-        broadcast(probes)
-        .join(c, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(cosine_expr("qvec", "cvec"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _exact_topk(broadcast(probes).join(c, "bucket"), k)
 
 
 def fit_pca(

@@ -6,20 +6,149 @@ corpus, score with JVM-side lambda expressions (zip_with/aggregate —
 no Python), rank per query.  The scale path is LSH bucketing
 (random-hyperplane signs) so candidate generation touches only
 matching buckets.
+
+Every ANN tier (here and ``ml.ivf_ann``) has the same filter-and-verify
+shape: pick candidates, score them exactly, keep each query's top k.
+Each block of that shape is one private helper, and the tiers call
+them instead of writing their own copy:
+
+- ``_top_k``: the per-query window (score high first, ties to the
+  lower neighbor id, or pivot/bucket id for probe windows);
+- ``_exact_score`` / ``_exact_topk``: drop self-pairs, round-6 cosine
+  of ``qvec``/``cvec``, then the top-k output frame;
+- ``_probe``: multi-probe explode of a query bucket to Hamming radius
+  1 or 2 (its docstring states why no pair dedup is needed);
+- ``_pivots``: the lowest-id vectors as a broadcast constant (IVF
+  lists, PQ codewords, LSH planes);
+- ``_plane_bucket``: the sign bucket of a vector under pivot planes;
+- ``_rerank``: exact rerank of a (query, neighbor) shortlist.
+
+``tests/test_ann_census.py`` fails when a block is copied back into
+an operator.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
 
-from fuel_spark.functions import cosine_expr, ensure_parallelism, materialize
+from fuel_spark.functions import (
+    cosine_expr, dot_expr, ensure_parallelism, materialize,
+)
 
 # Default skew-guard cap for the pair-emitting block joins here,
 # mirroring ``ops.dedup.DEFAULT_MAX_BUCKET``: bounded BY DEFAULT so a
 # dominant block at 100 TB degrades to star pairs instead of going
 # quadratic on one reducer; pass ``None`` to opt out.
 DEFAULT_MAX_BLOCK: int | None = 512
+
+
+def _top_k(
+    df: DataFrame, k: int, score: str | Column, tie: str = "neighbor_id"
+) -> DataFrame:
+    """Keep each query's top ``k`` rows of ``df``.  ``rank`` (bigint)
+    is the row number within ``query_id`` ordered by ``score`` (a
+    column name ranked high first, or a sort Column) with ties to the
+    lower ``tie``.  Scores are rounded before they get here, so the
+    order is engine-exact.  Spark plans the rank filter as a
+    WindowGroupLimit, so the exchange carries at most k rows per query
+    and map task."""
+    order = F.col(score).desc() if isinstance(score, str) else score
+    w = Window.partitionBy("query_id").orderBy(order, F.col(tie))
+    return df.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
+        F.col("rank") <= k
+    )
+
+
+def _exact_score(pairs: DataFrame, out: str = "cosine") -> DataFrame:
+    """Exact score of candidate pairs (query_id, qvec, neighbor_id,
+    cvec): self-pairs dropped, ``out`` = cosine rounded to 6 dp."""
+    return pairs.where(F.col("query_id") != F.col("neighbor_id")).withColumn(
+        out, F.round(cosine_expr("qvec", "cvec"), 6)
+    )
+
+
+def _exact_topk(pairs: DataFrame, k: int, out: str = "cosine") -> DataFrame:
+    """Score candidate pairs exactly and keep each query's top k.
+    Output: query_id, neighbor_id, ``out``, rank."""
+    return _top_k(_exact_score(pairs, out), k, out).select(
+        "query_id", "neighbor_id", out, "rank"
+    )
+
+
+def _probe(df: DataFrame, bits: int, radius: int, col: str = "bucket") -> DataFrame:
+    """Multi-probe (Lv et al. 2007, "Multi-Probe LSH"): one row per
+    bucket within Hamming ``radius`` (0, 1 or 2) of ``col`` over
+    ``bits`` bits.  Explode the query side only; the corpus is
+    bucketed once.
+
+    The flip masks are nonzero and pairwise distinct, so one row's
+    probe buckets are pairwise distinct, and a corpus row matches at
+    most one of them.  With unique query ids a (query, candidate) pair
+    therefore meets at most once and needs no dedup.  A repeated query
+    id yields its pairs once per copy, as in :func:`cosine_topk`.
+    """
+    masks = [1 << p for p in range(bits)] if radius >= 1 else []
+    if radius >= 2:
+        masks += [
+            (1 << p) | (1 << q) for p in range(bits) for q in range(p + 1, bits)
+        ]
+    if not masks:
+        return df
+    flips = ", ".join(f"{col} ^ {m}L" for m in masks)
+    return df.withColumn(col, F.expr(f"explode(array({col}, {flips}))"))
+
+
+def _pivots(df: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:
+    """The ``n`` lowest-id vectors of ``df`` as (pivot_id, pvec): a
+    TakeOrdered constant, broadcast.  The data-dependent reference
+    points of the pivot tiers (IVF lists, PQ codewords, LSH planes)."""
+    return broadcast(
+        df.select(F.col(id_col).alias("pivot_id"), F.col(vec_col).alias("pvec"))
+        .orderBy("pivot_id")
+        .limit(n)
+    )
+
+
+def _plane_bucket(
+    v: DataFrame, planes: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """Sign bucket of each (``id_col``, ``vec_col``) row of ``v`` under
+    pivot ``planes`` (pvec, p): bit p is set iff the round-6 dot with
+    plane p is positive.  One broadcast nested-loop pass (rows x
+    planes) reduced onto the id by a map-side-combinable conditional
+    sum, no fact-wide window.  The vector rides along with
+    ``any_value``; Catalyst prunes that aggregate where only the
+    bucket is read.  Output: ``id_col``, bucket, ``vec_col``."""
+    return (
+        v.crossJoin(planes)
+        .withColumn("_dot", F.round(dot_expr(vec_col, "pvec"), 6))
+        .groupBy(id_col)
+        .agg(
+            F.sum(
+                F.when(
+                    F.col("_dot") > 0,
+                    # SQL shiftleft takes a column shift amount; the
+                    # pyspark wrapper would demand an int
+                    F.expr("shiftleft(1, p)").cast("long"),
+                ).otherwise(F.lit(0).cast("long"))
+            ).alias("bucket"),
+            F.any_value(F.col(vec_col)).alias(vec_col),
+        )
+    )
+
+
+def _rerank(
+    short: DataFrame, c: DataFrame, q: DataFrame, k: int, out: str = "cosine"
+) -> DataFrame:
+    """Exact rerank of a (query_id, neighbor_id) shortlist: the corpus
+    side ``c`` (neighbor_id, cvec) fetches its full vectors against
+    the broadcast shortlist, the broadcast queries ``q`` (query_id,
+    qvec) join by id, then :func:`_exact_topk`.  The shortlist holds no
+    self-pairs already; the repeated check is one comparison per
+    shortlist row, in the broadcast join's condition."""
+    pairs = c.join(broadcast(short), "neighbor_id").join(broadcast(q), "query_id")
+    return _exact_topk(pairs, k, out)
 
 
 def cosine_topk(
@@ -44,18 +173,7 @@ def cosine_topk(
     c = ensure_parallelism(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
     )
-    scored = q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id"))
-    scored = scored.withColumn(
-        "cosine", F.round(cosine_expr("qvec", "cvec"), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _exact_topk(q.crossJoin(c), k)
 
 
 def cosine_pairs_within(
@@ -213,8 +331,6 @@ def matryoshka_ann(
     round to 6 dp first so ties break on neighbor_id identically in
     any engine.
     """
-    from fuel_spark.functions import cosine_expr
-
     tq = matryoshka_truncate(queries, vec_col, dims, "_mq")
     tc = matryoshka_truncate(corpus, vec_col, dims, "_mc")
     q = broadcast(
@@ -236,21 +352,11 @@ def matryoshka_ann(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("_coarse", F.round(cosine_expr("qv", "cv"), 6))
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("_coarse").desc(), F.col("neighbor_id")
+    short = _top_k(scored, shortlist, "_coarse").withColumn(
+        "cosine", F.round(cosine_expr("qfull", "cfull"), 6)
     )
-    short = (
-        scored.withColumn("_cr", F.row_number().over(wc))
-        .where(F.col("_cr") <= shortlist)
-        .withColumn("cosine", F.round(cosine_expr("qfull", "cfull"), 6))
-    )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        short.withColumn("rank", F.row_number().over(wf).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _top_k(short, k, "cosine").select(
+        "query_id", "neighbor_id", "cosine", "rank"
     )
 
 
@@ -474,35 +580,13 @@ def sign_block_ann(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"),
         F.col("sign_bucket"),
     )
-    qb = sign_sketch(queries, vec_col, bits)
-    if probes >= 1:
-        flips = ", ".join(f"sign_bucket ^ {1 << b}" for b in range(bits))
-        qb = qb.withColumn(
-            "sign_bucket", F.expr(f"explode(array(sign_bucket, {flips}))")
-        )
-    qb = qb.select(
+    qb = _probe(
+        sign_sketch(queries, vec_col, bits), bits, min(probes, 1), "sign_bucket"
+    ).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
         F.col("sign_bucket"),
     )
-    scored = (
-        broadcast(qb)
-        .join(cb, "sign_bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-    )
-    if probes >= 1:
-        # a pair can meet once per probed block
-        scored = scored.dropDuplicates(["query_id", "neighbor_id"])
-    scored = scored.withColumn(
-        "cosine", F.round(cosine_expr("qvec", "cvec"), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _exact_topk(broadcast(qb).join(cb, "sign_bucket"), k)
 
 
 def lsh_bucket(
@@ -511,28 +595,22 @@ def lsh_bucket(
     num_planes: int = 8,
     seed: int = 42,
     out_col: str = "bucket",
-    dim: int | None = None,
 ) -> DataFrame:
     """Random-hyperplane LSH bucket id (sign pattern of dot products
     with seeded ±1 planes).
 
     Plane p's component i is ±1 from xxhash64(seed, p, i) parity —
     deterministic, needs no stored plane matrix, and evaluates as a
-    narrow JVM projection.  Scale path for ANN: join/bucket on this id
-    then verify with exact cosine (Spark-side; not SQL-oracle-able,
-    recorded rows-only).
-
-    Pass ``dim`` (the embedding width) to keep the plan fully lazy;
-    without it a one-row probe reads the first vector's length.
+    narrow JVM projection with no Spark job at build time.  Every
+    component of a vector counts, whatever its length.  Scale path
+    for ANN: join/bucket on this id then verify with exact cosine
+    (Spark-side; not SQL-oracle-able, recorded rows-only).
     """
-    if dim is None:
-        dim_probe = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = dim_probe["d"] if dim_probe else 0
     bucket = F.lit(0).cast("long")
     for p in range(num_planes):
         # sign_i = +1 if xxhash64(seed, p, i) even else -1; dot = Σ sign_i * v_i
         terms = F.expr(
-            f"aggregate(zip_with({vec_col}, sequence(0, {dim - 1}),"
+            f"aggregate(transform({vec_col},"
             f" (v, i) -> CASE WHEN pmod(xxhash64({seed}L, {p}L, i), 2) = 0"
             f"  THEN CAST(v AS DOUBLE) ELSE -CAST(v AS DOUBLE) END),"
             f" CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
@@ -549,7 +627,6 @@ def lsh_ann(
     k: int = 5,
     num_planes: int = 8,
     seed: int = 42,
-    dim: int | None = None,
     probes: int = 1,
 ) -> DataFrame:
     """Approximate top-k: candidates share one of the query's probed
@@ -570,16 +647,10 @@ def lsh_ann(
     shines as a near-dup blocker where near-identical vectors share
     every sign.
     """
-    if dim is None:
-        probe = queries.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = probe["d"] if probe else 0
-    cb = lsh_bucket(corpus, vec_col, num_planes, seed, dim=dim)
-    qb = lsh_bucket(queries, vec_col, num_planes, seed, dim=dim)
-    if probes >= 1:
-        flips = ", ".join(f"bucket ^ {1 << p}" for p in range(num_planes))
-        qb = qb.withColumn(
-            "bucket", F.expr(f"explode(array(bucket, {flips}))")
-        )
+    cb = lsh_bucket(corpus, vec_col, num_planes, seed)
+    qb = _probe(
+        lsh_bucket(queries, vec_col, num_planes, seed), num_planes, min(probes, 1)
+    )
     q = broadcast(
         qb.select(
             F.col(id_col).alias("query_id"),
@@ -588,19 +659,7 @@ def lsh_ann(
         )
     )
     c = cb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"), "bucket")
-    scored = (
-        q.join(c, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        # a pair can meet once per probed bucket: dedup before scoring
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cosine", F.round(cosine_expr("qvec", "cvec"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _exact_topk(q.join(c, "bucket"), k)
 
 
 def pivot_lsh_planes(
@@ -622,12 +681,9 @@ def pivot_lsh_planes(
     TakeOrdered constant (broadcast); the bit-position window runs
     over ≤ n_planes rows.
     """
-    return broadcast(
-        df.select(
-            F.col(id_col).alias("plane_id"), F.col(vec_col).alias("pvec")
-        )
-        .orderBy("plane_id")
-        .limit(n_planes)
+    return (
+        _pivots(df, id_col, vec_col, n_planes)
+        .withColumnRenamed("pivot_id", "plane_id")
         .withColumn(
             "p", F.row_number().over(Window.orderBy("plane_id")) - F.lit(1)
         )
@@ -668,13 +724,10 @@ def pivot_lsh_ann(
     query side only (×(1 + n_planes)), the corpus is bucketed once;
     the only wide exchange is the per-query top-k window over
     in-bucket candidates (~(1 + n_planes)/2^n_planes of the corpus
-    per query), the :func:`cosine_topk` shape.  Radius-1 probe
-    buckets are pairwise distinct, so a candidate pair meets at most
-    once — no dedup pass needed.  Output: query_id, neighbor_id,
-    cosine, rank.
+    per query), the :func:`cosine_topk` shape; a candidate pair meets
+    at most once (see :func:`_probe`), so there is no dedup pass.
+    Output: query_id, neighbor_id, cosine, rank.
     """
-    from fuel_spark.functions import dot_expr
-
     # Probe radii: 0 (exact bucket), 1 (flip each bit), 2 (also every
     # bit PAIR — Lv et al. 2007's next perturbation ring; query-side
     # explosion grows to 1 + n + C(n,2), the corpus side is
@@ -696,59 +749,22 @@ def pivot_lsh_ann(
         id_col, vec_col, n_planes,
     )
 
-    def bucketed(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
-        v = df.select(
-            F.col(id_col).alias(out_id), F.col(vec_col).alias(out_vec)
-        )
-        return (
-            v.crossJoin(planes)
-            .withColumn("_dot", F.round(dot_expr(out_vec, "pvec"), 6))
-            .groupBy(out_id)
-            .agg(
-                F.sum(
-                    F.when(
-                        F.col("_dot") > 0,
-                        # SQL shiftleft takes a column shift amount;
-                        # the pyspark wrapper would demand an int
-                        F.expr("shiftleft(1, p)").cast("long"),
-                    ).otherwise(F.lit(0).cast("long"))
-                ).alias("bucket"),
-                F.any_value(F.col(out_vec)).alias(out_vec),
-            )
-        )
-
     # width pin: the bucketed corpus is bytes-small after the agg and
     # AQE would coalesce it, single-threading the CPU-heavy candidate
     # cosines (the pivot-IVF lesson)
-    cb = ensure_parallelism(bucketed(corpus, "neighbor_id", "cvec"), "neighbor_id")
-    qb = bucketed(queries, "query_id", "qvec")
-    if probes >= 1:
-        masks = [1 << p for p in range(n_planes)]
-        if probes >= 2:
-            masks += [
-                (1 << p) | (1 << q)
-                for p in range(n_planes)
-                for q in range(p + 1, n_planes)
-            ]
-        # masks are pairwise-distinct nonzero XORs, so probe buckets
-        # never collide and a candidate pair still meets at most once
-        flips = ", ".join(f"bucket ^ {m}L" for m in masks)
-        qb = qb.withColumn(
-            "bucket", F.expr(f"explode(array(bucket, {flips}))")
-        )
-    scored = (
-        cb.join(broadcast(qb), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(cosine_expr("qvec", "cvec"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    cb = ensure_parallelism(_plane_bucket(
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
+        ),
+        planes, "neighbor_id", "cvec",
+    ), "neighbor_id")
+    qb = _probe(_plane_bucket(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+        ),
+        planes, "query_id", "qvec",
+    ), n_planes, probes)
+    return _exact_topk(cb.join(broadcast(qb), "bucket"), k)
 
 
 def label_centroids(
@@ -887,13 +903,8 @@ def quantized_ann(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dot").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "approx_dot", "rank")
+    return _top_k(scored, k, "approx_dot").select(
+        "query_id", "neighbor_id", "approx_dot", "rank"
     )
 
 
@@ -1145,13 +1156,8 @@ def pq_ann(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    top = (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= max(k, rerank))
-        .select("query_id", "neighbor_id", "score", "rank")
+    top = _top_k(scored, max(k, rerank), "score").select(
+        "query_id", "neighbor_id", "score", "rank"
     )
     if rerank <= 0:
         return top
@@ -1159,26 +1165,13 @@ def pq_ann(
     # refine: exact cosine over the R*|queries| shortlist only — the
     # shortlist is broadcast, so the corpus-side fetch of full vectors
     # is one broadcast hash join (no shuffle of the corpus)
-    cand = broadcast(top.select("query_id", "neighbor_id"))
-    full = cand.join(
+    return _rerank(
+        top.select("query_id", "neighbor_id"),
         corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
         ),
-        "neighbor_id",
-    )
-    qfull = broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    )
-    rer = full.join(qfull, "query_id").withColumn(
-        "score", F.round(cosine_expr("qvec", "cvec"), 6)
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")),
+        k, "score",
     )
 
 
@@ -1234,13 +1227,8 @@ def hard_negatives(
         .where(F.col("_qlab") != F.col("neighbor_label"))
         .withColumn("cosine", F.round(cosine_expr("qvec", "cvec"), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "neighbor_label", "cosine", "rank")
+    return _top_k(scored, k, "cosine").select(
+        "query_id", "neighbor_id", "neighbor_label", "cosine", "rank"
     )
 
 
@@ -1675,13 +1663,7 @@ def pivot_ivf_ann(
     (~nprobe/n_pivots of the corpus per query), same shape as
     :func:`cosine_topk`.  Output: query_id, neighbor_id, cosine, rank.
     """
-    pivots = broadcast(
-        corpus.select(
-            F.col(id_col).alias("pivot_id"), F.col(vec_col).alias("pvec")
-        )
-        .orderBy("pivot_id")
-        .limit(n_pivots)
-    )
+    pivots = _pivots(corpus, id_col, vec_col, n_pivots)
     c = ensure_parallelism(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
     )
@@ -1708,27 +1690,13 @@ def pivot_ivf_ann(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("_pcos").desc(), F.col("pivot_id")
-    )
-    probes = (
-        q.crossJoin(pivots)
-        .withColumn("_pcos", F.round(cosine_expr("qvec", "pvec"), 6))
-        .withColumn("_pr", F.row_number().over(w_probe))
-        .where(F.col("_pr") <= nprobe)
-        .select("query_id", "qvec", F.col("pivot_id").alias("bucket"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        assigned.join(broadcast(probes), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(cosine_expr("qvec", "cvec"), 6))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    probes = _top_k(
+        q.crossJoin(pivots).withColumn(
+            "_pcos", F.round(cosine_expr("qvec", "pvec"), 6)
+        ),
+        nprobe, "_pcos", tie="pivot_id",
+    ).select("query_id", "qvec", F.col("pivot_id").alias("bucket"))
+    return _exact_topk(assigned.join(broadcast(probes), "bucket"), k)
 
 
 def pivot_pq_ann(
@@ -1767,16 +1735,12 @@ def pivot_pq_ann(
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     sub = dim // m
-    from fuel_spark.functions import dot_expr, l2sq_expr
+    from fuel_spark.functions import l2sq_expr
 
     subspaces = F.array([F.lit(j) for j in range(m)])
     # codebook: (pivot_id, j, sub_vec) — n_codes*m tiny rows
     books = broadcast(
-        corpus.select(
-            F.col(id_col).alias("pivot_id"), F.col(vec_col).alias("pvec")
-        )
-        .orderBy("pivot_id")
-        .limit(n_codes)
+        _pivots(corpus, id_col, vec_col, n_codes)
         .select("pivot_id", F.explode(subspaces).alias("j"), "pvec")
         .select(
             "pivot_id",
@@ -1830,26 +1794,11 @@ def pivot_pq_ann(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("_dot").cast("double").alias("coarse"))
     )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("coarse").desc(), F.col("neighbor_id")
-    )
-    short = (
-        coarse.where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("_sr", F.row_number().over(w_short))
-        .where(F.col("_sr") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        c.join(broadcast(short), "neighbor_id")
-        .join(broadcast(q), "query_id")
-        .withColumn("cosine", F.round(cosine_expr("qvec", "cvec"), 6))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    short = _top_k(
+        coarse.where(F.col("query_id") != F.col("neighbor_id")),
+        shortlist, "coarse",
+    ).select("query_id", "neighbor_id")
+    return _rerank(short, c, q, k)
 
 
 def silhouette_by_label(
@@ -2085,13 +2034,13 @@ def cosine_range_search(
     fixed k either truncates dense neighborhoods or pads sparse ones.
 
     Same scale shape as top-k: broadcast queries × one parallel
-    corpus scan, no shuffle at all (the filter replaces the per-query
-    rank window — strictly cheaper).  The threshold compares the
-    ROUNDED cosine, so the cut is engine-exact.  Output: query_id,
-    neighbor_id, cosine (round 6), a row per in-range pair.
+    corpus scan, with the threshold filter in place of the per-query
+    rank window and its hash exchange.  The output is sorted by
+    (query_id, cosine desc, neighbor_id), which is one range exchange.
+    The threshold compares the ROUNDED cosine, so the cut is
+    engine-exact.  Output: query_id, neighbor_id, cosine (round 6), a
+    row per in-range pair.
     """
-    from fuel_spark.functions import cosine_expr, ensure_parallelism
-
     q = broadcast(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
@@ -2103,13 +2052,8 @@ def cosine_range_search(
         )
     )
     return (
-        q.crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_expr("qvec", "cvec"), 6).alias("cosine"),
-        )
+        _exact_score(q.crossJoin(c))
+        .select("query_id", "neighbor_id", "cosine")
         .where(F.col("cosine") >= F.lit(float(threshold)))
         .orderBy("query_id", F.desc("cosine"), "neighbor_id")
     )
@@ -2478,22 +2422,10 @@ def pivot_lsh_index(
     reduced by a map-side-combinable conditional SUM — no fact-wide
     window, one shuffle onto the id.
     """
-    from fuel_spark.functions import dot_expr
-
-    return (
-        df.select(F.col(id_col), F.col(vec_col).alias("_v"))
-        .crossJoin(planes)
-        .withColumn("_dot", F.round(dot_expr("_v", "pvec"), 6))
-        .groupBy(id_col)
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("_dot") > 0,
-                    F.expr("shiftleft(1, p)").cast("long"),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias("bucket")
-        )
-    )
+    return _plane_bucket(
+        df.select(F.col(id_col), F.col(vec_col).alias("_v")), planes,
+        id_col, "_v",
+    ).select(id_col, "bucket")
 
 
 def ann_merge_into_index(
@@ -2746,12 +2678,7 @@ def ann_incremental_summary(
     # consumed 3x: the screen join, the merge and the certificate
     index_before = materialize(index_before)
 
-    nb = pivot_lsh_index(new_batch, planes, id_col, vec_col)
-    if n_planes > 0:
-        flips = ", ".join(f"bucket ^ {1 << p}L" for p in range(n_planes))
-        nb = nb.withColumn(
-            "bucket", F.expr(f"explode(array(bucket, {flips}))")
-        )
+    nb = _probe(pivot_lsh_index(new_batch, planes, id_col, vec_col), n_planes, 1)
     cand = (
         nb.withColumnRenamed(id_col, "_nid")
         .join(index_before, "bucket")
@@ -2837,7 +2764,7 @@ def snapshot_drift_certificate(
     one posexplode per side feeding a (group, side, dim)-keyed
     map-side-combinable agg; everything after is aggregate-sized.
     """
-    from fuel_spark.functions import dot_expr, round6_ratio
+    from fuel_spark.functions import round6_ratio
 
     # exact-rational 6-dp mean: round(double_quotient, 6) flips at
     # half-way boundaries between engines (the round6_ratio contract)

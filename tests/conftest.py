@@ -67,7 +67,7 @@ SLOW_TESTS = {
     "test_plans.py::test_attribution_linear_hand_computed",
     "test_plans.py::test_cohort_retention_offsets",
     "test_plans.py::test_events_funnel_counts",
-    "test_plans.py::test_near_dup_family_is_width_invariant",
+    "test_plans.py::test_registry_family_is_width_invariant",
     "test_plans.py::test_registry_single_partition_regression",
     "test_plans.py::test_registry_wide_no_cartesian_product",
     "test_profile.py::test_calibration_bins_perfect_and_miscalibrated",

@@ -1,5 +1,6 @@
 """MLlib integration: vector interop + IVF ANN quality vs brute force."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from fuel_spark import ml
@@ -600,3 +601,65 @@ def test_ann_planes_sweep_monotone_buckets(spark):
     assert (rows[2].expected_candidates
             >= rows[4].expected_candidates
             >= rows[6].expected_candidates)
+
+
+def test_lsh_ann_builds_without_a_spark_job(spark):
+    """Building the seeded-LSH search runs no Spark job: the plane dots
+    fold over each vector's own components, with no driver-side probe
+    of the embedding width."""
+    e = load_tables(spark, SF)["embeddings"]
+    q = e.where(F.col("vec_id") < 5)
+    sc = spark.sparkContext
+    group = "test-ml-lsh-ann-build"
+    sc.setJobGroup(group, "build lsh_ann")
+    try:
+        similarity.lsh_ann(e, q, k=5, num_planes=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_lsh_ann_plan_has_no_pair_dedup(spark):
+    """Multi-probe candidates meet once per pair, so the plan has no
+    aggregate keyed on (query_id, neighbor_id): no shuffle carrying
+    both vectors to deduplicate them."""
+    import re
+
+    e = _tiny_corpus(spark)
+    ann = similarity.lsh_ann(e, e.where(F.col("vec_id") < 4), k=3, num_planes=4)
+    plan = ann._jdf.queryExecution().optimizedPlan().toString()
+    keyed = [
+        {re.sub(r"#\d+L?$", "", k.strip()) for k in m.split(",")}
+        for m in re.findall(r"Aggregate \[([^\]]*)\]", plan)
+    ]
+    assert not [k for k in keyed if {"query_id", "neighbor_id"} <= k], plan
+
+
+@pytest.mark.parametrize("radius", [1, 2])
+def test_probe_candidates_are_unique(spark, radius):
+    """Probe buckets of one query are pairwise distinct, so joining the
+    probed queries to a bucketed corpus yields each (query, neighbor)
+    pair once, at radius 1 and 2."""
+    bits = 4
+    corpus = spark.range(64).select(
+        F.col("id").alias("neighbor_id"), (F.col("id") % 16).alias("bucket")
+    )
+    queries = spark.range(16).select(
+        F.col("id").alias("query_id"), F.col("id").alias("bucket")
+    )
+    probed = similarity._probe(queries, bits, radius)
+    per_query = 1 + bits + (bits * (bits - 1) // 2 if radius == 2 else 0)
+    assert probed.count() == 16 * per_query
+    pairs = probed.join(corpus, "bucket").select("query_id", "neighbor_id")
+    assert pairs.count() == pairs.distinct().count() == 16 * per_query * 4
+
+
+def test_pivot_lsh_index_plan_carries_no_vector(spark):
+    """The shared bucketing carries the vector with any_value for the
+    search path; the index keeps only (id, bucket), and Catalyst prunes
+    that aggregate from its plan."""
+    e = _tiny_corpus(spark)
+    idx = similarity.pivot_lsh_index(e, similarity.pivot_lsh_planes(e, n_planes=4))
+    assert idx.columns == ["vec_id", "bucket"]
+    plan = idx._jdf.queryExecution().optimizedPlan().toString()
+    assert "any_value" not in plan, plan

@@ -2706,10 +2706,10 @@ def test_ab_power_sweep_scaling_laws(spark):
     assert rc.powered
 
 
-# Results must not depend on how wide Spark runs them: the near-dup
-# family's sorted rows hash the same under shuffle partitions 1 and 7,
-# each with adaptive execution on and off.  A difference is a defect
-# in the operator (an order- or partition-dependent pick).
+# Results must not depend on how wide Spark runs them: each family's
+# sorted rows hash the same under shuffle partitions 1 and 7, each
+# with adaptive execution on and off.  A difference is a defect in
+# the operator (an order- or partition-dependent pick).
 NEAR_DUP_FAMILY = (
     "dedup_apply",
     "dedup_apply_keep_longest",
@@ -2722,9 +2722,28 @@ NEAR_DUP_FAMILY = (
     "dedup_simhash_pairs",
     "curation_pipeline",
 )
+# ann_ivf and ann_pq are left out: each fits a model inside the query
+# (MLlib KMeans, pq_fit), so it tests the fit as much as the search,
+# and ann_pq memoizes its codebooks and encoded index per process, so
+# only the first setting would build them
+ANN_FAMILY = (
+    "ann_topk_cosine",
+    "ann_sign_block",
+    "ann_int8",
+    "ann_lsh",
+    "ann_lsh_pivot_r2",
+    "ann_ivf_pivot",
+    "ann_pq_pivot",
+    "ann_matryoshka",
+    "embedding_hard_negatives",
+    "ann_incremental_pipeline",
+)
 
 
-def test_near_dup_family_is_width_invariant(spark):
+@pytest.mark.parametrize(
+    "family", [NEAR_DUP_FAMILY, ANN_FAMILY], ids=["near_dup", "ann"]
+)
+def test_registry_family_is_width_invariant(spark, family):
     import hashlib
 
     import __spark_entry__ as E
@@ -2736,13 +2755,13 @@ def test_near_dup_family_is_width_invariant(spark):
     keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     saved = {k: spark.conf.get(k) for k in keys}
     qs = E.queries()
-    digests = {name: {} for name in NEAR_DUP_FAMILY}
+    digests = {name: {} for name in family}
     try:
         for aqe in ("true", "false"):
             for parts in ("1", "7"):
                 spark.conf.set("spark.sql.shuffle.partitions", parts)
                 spark.conf.set("spark.sql.adaptive.enabled", aqe)
-                for name in NEAR_DUP_FAMILY:
+                for name in family:
                     digests[name][(parts, aqe)] = digest(qs[name](spark, SF))
     finally:
         for k, v in saved.items():

@@ -786,7 +786,7 @@ def test_multiprobe_lsh_improves_recall_on_random_corpus(spark):
         return {
             (r.query_id, r.neighbor_id)
             for r in similarity.lsh_ann(
-                e, q, "vec_id", "embedding", k=3, num_planes=5, dim=16,
+                e, q, "vec_id", "embedding", k=3, num_planes=5,
                 probes=probes,
             ).collect()
         }

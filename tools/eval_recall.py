@@ -88,11 +88,11 @@ def main() -> int:
         sim.sign_block_ann(e, q, "vec_id", "embedding", k=k, probes=1)
     )
     out["ann_recall@5_lsh_probe0"] = recall(
-        sim.lsh_ann(e, q, "vec_id", "embedding", k=k, num_planes=6, dim=64,
+        sim.lsh_ann(e, q, "vec_id", "embedding", k=k, num_planes=6,
                     probes=0)
     )
     out["ann_recall@5_lsh_probe1"] = recall(
-        sim.lsh_ann(e, q, "vec_id", "embedding", k=k, num_planes=6, dim=64)
+        sim.lsh_ann(e, q, "vec_id", "embedding", k=k, num_planes=6)
     )
     out["ann_recall@5_ivf"] = recall(
         ml.ivf_ann(e, q, k=k, k_clusters=8, nprobe=4, seed=7)
