@@ -1976,9 +1976,7 @@ def q_bpe_encode(spark, sf):
     single-first-occurrence replaces, which is provably the same
     left-to-right greedy pass."""
     d = _t(spark, sf)["documents"]
-    enc = text_ops.bpe_encode(
-        d, "doc_id", "text", list(BPE_FIXED_MERGES), vocab_dedup=True
-    )
+    enc = text_ops.bpe_encode(d, "doc_id", "text", list(BPE_FIXED_MERGES))
     return enc.select(
         "doc_id",
         F.col("n_tokens").cast("bigint").alias("n_tokens"),

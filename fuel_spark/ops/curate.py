@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from fuel_spark.functions import materialize, words
+from fuel_spark.ops.text import _doc_stats
 
 
 def domain_mixture_weights(
@@ -171,15 +172,8 @@ def curation_funnel(
     Output: stage, stage_name, rows_in, rows_out.
     """
     t = F.col(text_col)
-    w = words(t)
     n_chars = F.length(t)
-    n_words = F.size(w)
-    mwl = F.length(F.concat_ws("", w)).cast("double") / F.greatest(
-        n_words, F.lit(1)
-    ).cast("double")
-    alpha_ratio = F.length(
-        F.regexp_replace(F.lower(t), "[^a-z]", "")
-    ).cast("double") / F.greatest(n_chars, F.lit(1)).cast("double")
+    n_words, mwl, alpha_ratio = _doc_stats(t, words(t))
 
     p1 = n_chars >= 200
     p2 = n_words >= 30
@@ -587,15 +581,8 @@ def funnel_threshold_sweep(
     Output: min_words, rows_in, rows_out, drop_rate.
     """
     t = F.col(text_col)
-    w = words(t)
     n_chars = F.length(t)
-    n_words = F.size(w)
-    mwl = F.length(F.concat_ws("", w)).cast("double") / F.greatest(
-        n_words, F.lit(1)
-    ).cast("double")
-    alpha_ratio = F.length(
-        F.regexp_replace(F.lower(t), "[^a-z]", "")
-    ).cast("double") / F.greatest(n_chars, F.lit(1)).cast("double")
+    n_words, mwl, alpha_ratio = _doc_stats(t, words(t))
     base = (
         (n_chars >= 200)
         & (mwl >= 3.0) & (mwl <= 10.0)
@@ -690,15 +677,8 @@ def curation_funnel_by_group(
     Output: group, n_docs, n_survivors, survival_rate.
     """
     t = F.col(text_col)
-    w = words(t)
     n_chars = F.length(t)
-    n_words = F.size(w)
-    mwl = F.length(F.concat_ws("", w)).cast("double") / F.greatest(
-        n_words, F.lit(1)
-    ).cast("double")
-    alpha_ratio = F.length(
-        F.regexp_replace(F.lower(t), "[^a-z]", "")
-    ).cast("double") / F.greatest(n_chars, F.lit(1)).cast("double")
+    n_words, mwl, alpha_ratio = _doc_stats(t, words(t))
     keep = (
         (n_chars >= 200) & (n_words >= 30)
         & (mwl >= 3.0) & (mwl <= 10.0)

@@ -5,6 +5,23 @@ these are the training-data-pipeline extensions: language ID, quality
 scoring, token counting, fingerprinting.  All pure
 ``pyspark.sql.functions`` — no Python in the hot path, so a 100 TB
 documents table streams through whole-stage codegen.
+
+Every operator runs one chain — tokenize, then count, then score —
+and each block of that chain is one private helper, which
+``ops.curate`` calls too:
+
+- ``_doc_words``: the word front end (normalize, split, drop the
+  empty word), a document's word array; explode it in place for word
+  rows.  ``_doc_tf`` (per-document term frequencies) and
+  ``_word_freq`` (corpus word frequencies) count on top of it.
+- ``_word_ngrams_sql``: the word n-grams of a word array;
+  ``_BIGRAMS_SQL`` and ``_cooccur_pairs_sql`` are its ordered-pair and
+  windowed-pair forms.
+- ``_doc_stats``: word count, mean word length, alpha ratio (the
+  Gopher/C4 document statistics); ``_ws_tokens``: whitespace tokens.
+- ``_bpe_symbols``, ``_bpe_merge`` and ``_bpe_fold_vocab``: the BPE
+  start state, one merge, and the merge table folded over a vocabulary
+  with a Generate barrier every 4 merges.
 """
 
 from __future__ import annotations
@@ -41,6 +58,152 @@ def _stopword_hits(words_col, lang: str):
     # matching the oracle's list_filter/len semantics.
     arr = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     return F.size(F.filter(words_col, lambda w: F.array_contains(arr, w)))
+
+
+def _doc_words(text) -> F.Column:
+    """The word front end: the normalized words of text column
+    ``text``, in order — :func:`fuel_spark.functions.words` without the
+    ``""`` an empty normalized text splits into.
+
+    Explode it in place for one row per word occurrence.  A frame that
+    projects it as a column and then explodes that column needs a
+    Generate barrier (``with_materialized``): Spark infers a
+    ``size > 0`` filter on an exploded column and pushes it below the
+    projection, so the normalize regex would run twice per row."""
+    return F.array_remove(words(text), "")
+
+
+def _doc_tf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document term frequencies: ``(id_col, word, tf)``."""
+    return (
+        df.select(id_col, F.explode(_doc_words(F.col(text_col))).alias("word"))
+        .groupBy(id_col, "word")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+
+
+def _word_freq(df: DataFrame, text_col: str) -> DataFrame:
+    """Corpus word-frequency table: (word, freq) — the tokenizer-
+    economics spine.  One corpus pass; every table built on it is
+    vocab-sized after this."""
+    return (
+        ensure_parallelism(df.select(F.col(text_col)))
+        .select(F.explode(_doc_words(F.col(text_col))).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
+
+
+def _word_ngrams_sql(n: int) -> str:
+    """SQL for the word ``n``-grams of the array column ``_w``, in
+    order, each joined by one space; empty when ``_w`` holds fewer than
+    ``n`` words (``sequence(1, 0)`` would count DOWN in Spark)."""
+    return (
+        f"CASE WHEN size(_w) >= {n} THEN"
+        f" transform(sequence(1, size(_w) - {n - 1}),"
+        f" i -> array_join(slice(_w, i, {n}), ' '))"
+        f" ELSE CAST(array() AS array<string>) END"
+    )
+
+
+# ordered adjacent word pairs (w1, w2) of the array ``_w``; the filter
+# runs before any element_at, so a doc of 0 or 1 words yields none
+_BIGRAMS_SQL = (
+    "transform(filter(sequence(1, greatest(size(_w) - 1, 1)),"
+    " i -> i <= size(_w) - 1),"
+    " i -> struct(element_at(_w, i) AS w1, element_at(_w, i + 1) AS w2))"
+)
+
+
+def _cooccur_pairs_sql(window: int) -> str:
+    """SQL for the unordered word pairs ``(w_a <= w_b)`` of the array
+    ``_w`` within ``window`` positions of each other, one per pair of
+    positions."""
+    return (
+        # filter-over-greatest keeps the 1-token doc an empty TYPED
+        # array (sequence(1, 0) would descend, not stay empty)
+        f"flatten(transform("
+        f"filter(sequence(1, greatest(size(_w) - 1, 1)), i -> i <= size(_w) - 1), "
+        f"i -> transform(sequence(i + 1, least(i + {int(window)}, size(_w))), "
+        f"j -> struct(least(element_at(_w, i), element_at(_w, j)) AS w_a, "
+        f"greatest(element_at(_w, i), element_at(_w, j)) AS w_b))))"
+    )
+
+
+def _doc_stats(t, w) -> tuple:
+    """Gopher-style document statistics of text ``t`` over its word
+    array ``w``: (word count, mean word length, alpha ratio).  The
+    ratios are unrounded doubles; a zero denominator counts as 1."""
+    n_words = F.size(w)
+    mean_wl = F.length(F.concat_ws("", w)).cast("double") / F.greatest(
+        n_words, F.lit(1)
+    )
+    alpha = F.length(F.regexp_replace(F.lower(t), "[^a-z]", ""))
+    alpha_ratio = alpha.cast("double") / F.greatest(F.length(t), F.lit(1))
+    return n_words, mean_wl, alpha_ratio
+
+
+def _ws_tokens(t):
+    """Whitespace token count of text ``t``: 0 for a blank text."""
+    return F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(
+        F.size(F.split(F.trim(t), "\\s+"))
+    )
+
+
+def _bpe_symbols(end_of_word: str):
+    """A word's BPE start state, from column ``word``: its characters,
+    then the end-of-word marker."""
+    return F.expr(
+        "concat(transform(sequence(1, length(word)),"
+        f" i -> substring(word, i, 1)), array('{end_of_word}'))"
+    )
+
+
+def _bpe_merge(merge):
+    """One merge ``(a, b, ...)`` applied to the symbol array ``syms``:
+    a left-to-right fold, so an ``a b`` pair merges and the symbol after
+    it starts afresh (``a a a`` with merge ``(a, a)`` gives ``aa a``)."""
+    qa, qb = merge[0].replace("'", "\\'"), merge[1].replace("'", "\\'")
+    return F.expr(
+        f"""aggregate(syms, CAST(array() AS ARRAY<STRING>),
+            (acc, x) -> CASE WHEN size(acc) > 0
+                              AND element_at(acc, -1) = '{qa}'
+                              AND x = '{qb}'
+                        THEN concat(slice(acc, 1, size(acc) - 1),
+                                    array('{qa}{qb}'))
+                        ELSE concat(acc, array(x)) END)"""
+    )
+
+
+def _bpe_fold_vocab(vocab: DataFrame, merges, end_of_word: str) -> DataFrame:
+    """Apply the merge table to one distinct word per row (input column
+    ``word``): ``(word, syms, sizes)`` with ``syms`` the word's final
+    BPE symbols and ``sizes[k]`` (0-based; element k+1 in SQL) its
+    symbol count after the first k merges — ``sizes[0]`` is
+    len(word)+1, the last element is ``size(syms)``.
+
+    One projection per merge, with a Generate barrier
+    (``with_materialized``) every 4 merges: Catalyst would otherwise
+    collapse the chained folds into one exponentially-nested
+    expression.  Vocab grain: the sizes cost one ``size()`` per merge
+    per distinct word."""
+    v = vocab.select(
+        "word",
+        _bpe_symbols(end_of_word).alias("syms"),
+        F.array(F.length("word") + F.lit(1)).alias("sizes"),
+    )
+    for i, m in enumerate(merges):
+        if (i + 1) % 4 == 0:
+            v = with_materialized(
+                v.select("word", "sizes", _bpe_merge(m).alias("_pre")),
+                "syms", F.col("_pre"),
+            ).drop("_pre")
+        else:
+            v = v.select("word", "sizes", _bpe_merge(m).alias("syms"))
+        v = v.select(
+            "word", "syms", F.concat("sizes", F.array(F.size("syms"))).alias("sizes"),
+        )
+    return v
 
 
 def lang_id(df: DataFrame, text_col: str, out_col: str = "pred_lang") -> DataFrame:
@@ -85,25 +248,13 @@ def quality_score(df: DataFrame, text_col: str) -> DataFrame:
     # regex for each (see functions.with_materialized)
     df = with_materialized(df, "_w", words(t))
     w = F.col("_w")
-    n_chars = F.length(t)
-    n_words = F.size(w)
-    alpha = F.length(F.regexp_replace(F.lower(t), "[^a-z]", ""))
+    n_words, mean_wl, alpha_ratio = _doc_stats(t, w)
     en_hits = _stopword_hits(w, "en")
     out = (
-        df.withColumn("n_chars_q", n_chars.cast("bigint"))
+        df.withColumn("n_chars_q", F.length(t).cast("bigint"))
         .withColumn("n_words", n_words.cast("bigint"))
-        .withColumn(
-            "mean_word_len",
-            F.round(
-                F.length(F.concat_ws("", w)).cast("double")
-                / F.greatest(n_words, F.lit(1)),
-                6,
-            ),
-        )
-        .withColumn(
-            "alpha_ratio",
-            F.round(alpha.cast("double") / F.greatest(n_chars, F.lit(1)), 6),
-        )
+        .withColumn("mean_word_len", F.round(mean_wl, 6))
+        .withColumn("alpha_ratio", F.round(alpha_ratio, 6))
         .withColumn(
             "stopword_ratio",
             F.round(en_hits.cast("double") / F.greatest(n_words, F.lit(1)), 6),
@@ -121,11 +272,8 @@ def quality_score(df: DataFrame, text_col: str) -> DataFrame:
 def token_counts(df: DataFrame, text_col: str) -> DataFrame:
     """Whitespace token count + BPE-ish pre-token count (regex)."""
     t = F.col(text_col)
-    ws = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(
-        F.size(F.split(F.trim(t), "\\s+"))
-    )
     bpe = F.regexp_count(t, F.lit(BPE_RE))
-    return df.withColumn("ws_tokens", ws.cast("bigint")).withColumn(
+    return df.withColumn("ws_tokens", _ws_tokens(t).cast("bigint")).withColumn(
         "bpe_tokens", bpe.cast("bigint")
     )
 
@@ -200,19 +348,14 @@ def tfidf_similar_docs(
     Output: one row per (doc_id, rank ≤ k): neighbor_id, cosine.
     """
     out = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    terms = out.select(
-        F.col(id_col), F.explode(words(F.col(text_col))).alias("term")
-    ).where(F.col("term") != "")
     # tf is consumed 2x (the df count, the weighting join); unit 2x
     # (both sides of the term self-join)
-    tf = materialize(
-        terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    tf = materialize(_doc_tf(out, id_col, text_col))
+    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     DEC9 = "decimal(27,9)"
     weighted = (
-        tf.join(dfreq.where(F.col("df") <= max_df), "term")
+        tf.join(dfreq.where(F.col("df") <= max_df), "word")
         .crossJoin(F.broadcast(n_docs))
         .withColumn(
             "w", F.col("tf") * F.log(F.col("n_docs") / F.col("df"))
@@ -229,17 +372,17 @@ def tfidf_similar_docs(
         weighted.join(norms, id_col)
         .where(F.col("_nrm") > 0)
         .select(
-            F.col(id_col), "term", (F.col("w") / F.col("_nrm")).alias("u")
+            F.col(id_col), "word", (F.col("w") / F.col("_nrm")).alias("u")
         )
     )
     a = unit.select(
-        F.col(id_col).alias("id_a"), "term", F.col("u").alias("ua")
+        F.col(id_col).alias("id_a"), "word", F.col("u").alias("ua")
     )
     b = unit.select(
-        F.col(id_col).alias("id_b"), "term", F.col("u").alias("ub")
+        F.col(id_col).alias("id_b"), "word", F.col("u").alias("ub")
     )
     pair = (
-        a.join(b, "term")
+        a.join(b, "word")
         .where(F.col("id_a") != F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(
@@ -283,9 +426,7 @@ def source_divergence(
     aggregate is deterministic at any parallelism.
     """
     out = ensure_parallelism(df.select(F.col(group_col).alias("g"), F.col(text_col)))
-    w = out.select("g", F.explode(words(F.col(text_col))).alias("w")).where(
-        F.col("w") != ""
-    )
+    w = out.select("g", F.explode(_doc_words(F.col(text_col))).alias("w"))
     gw = w.groupBy("g", "w").agg(F.count(F.lit(1)).alias("n_gw"))
     cw = w.groupBy("w").agg(F.count(F.lit(1)).alias("n_w"))
     gt = w.groupBy("g").agg(F.count(F.lit(1)).alias("n_g"))
@@ -383,12 +524,11 @@ def feature_hashing(
     map-side-combinable rollup; no shuffle carries raw text.
     """
     out = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    out = out.select(F.col(id_col), words(F.col(text_col)).alias("_ws"))
     out = out.select(
-        F.col(id_col), F.explode("_ws").alias("_w")
-    ).where(F.col("_w") != "")
+        F.col(id_col), F.explode(_doc_words(F.col(text_col))).alias("word")
+    )
     slot = F.expr(
-        f"CAST(conv(substring(md5(_w), 1, 8), 16, 10) AS BIGINT) % {n_features}"
+        f"CAST(conv(substring(md5(word), 1, 8), 16, 10) AS BIGINT) % {n_features}"
     )
     return (
         out.select(F.col(id_col), slot.alias("slot"))
@@ -412,12 +552,7 @@ def tf_idf_top_terms(
     from pyspark.sql import Window
 
     n_df = df.select(F.count(F.lit(1)).cast("double").alias("_n"))
-    terms = (
-        df.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy(id_col, "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    terms = _doc_tf(df, id_col, text_col)
     dfreq = terms.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy(id_col).orderBy(
         F.col("tfidf").desc(), F.col("word")
@@ -501,13 +636,7 @@ def ngram_counts(
     Output: gram (words joined by space), cnt.
     """
     w = words(F.col(text_col))
-    # guard short docs: sequence(1, 0) would count DOWN in Spark
-    grams = F.expr(
-        f"CASE WHEN size(_w) >= {n} THEN"
-        f" transform(sequence(1, size(_w) - {n - 1}),"
-        f" i -> array_join(slice(_w, i, {n}), ' '))"
-        f" ELSE CAST(array() AS array<string>) END"
-    )
+    grams = F.expr(_word_ngrams_sql(n))
     out = (
         df.withColumn("_w", w)
         .select(F.explode(grams).alias("gram"))
@@ -542,12 +671,7 @@ def top_ngrams_by_group(
     from pyspark.sql import Window
 
     w = words(F.col(text_col))
-    grams = F.expr(
-        f"CASE WHEN size(_w) >= {n} THEN"
-        f" transform(sequence(1, size(_w) - {n - 1}),"
-        f" i -> array_join(slice(_w, i, {n}), ' '))"
-        f" ELSE CAST(array() AS array<string>) END"
-    )
+    grams = F.expr(_word_ngrams_sql(n))
     counted = (
         df.withColumn("_w", w)
         .select(F.col(group_col), F.explode(grams).alias("gram"))
@@ -588,9 +712,10 @@ def source_vocab_overlap(
     from pyspark.sql import Window
 
     counted = (
-        df.withColumn("_w", words(F.col(text_col)))
-        .select(F.col(group_col).alias("_g"), F.explode("_w").alias("_t"))
-        .where(F.col("_t") != "")
+        df.select(
+            F.col(group_col).alias("_g"),
+            F.explode(_doc_words(F.col(text_col))).alias("_t"),
+        )
         .groupBy("_g", "_t")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
@@ -654,9 +779,7 @@ def snapshot_vocab_churn(
     """
     def vocab(df: DataFrame, cname: str) -> DataFrame:
         return (
-            df.withColumn("_w", words(F.col(text_col)))
-            .select(F.explode("_w").alias("_t"))
-            .where(F.col("_t") != "")
+            df.select(F.explode(_doc_words(F.col(text_col))).alias("_t"))
             .groupBy("_t")
             .agg(F.count(F.lit(1)).alias(cname))
         )
@@ -693,13 +816,7 @@ def repetition_stats(df: DataFrame, text_col: str) -> DataFrame:
     bounded by document length, never by corpus size.
     """
     out = df.withColumn("_w", words(F.col(text_col)))
-    bigrams = F.expr(
-        "CASE WHEN size(_w) >= 2 THEN"
-        " transform(sequence(1, size(_w) - 1),"
-        " i -> array_join(slice(_w, i, 2), ' '))"
-        " ELSE CAST(array() AS array<string>) END"
-    )
-    out = out.withColumn("_bg", bigrams)
+    out = out.withColumn("_bg", F.expr(_word_ngrams_sql(2)))
     nw = F.size("_w").cast("double")
     nbg = F.size("_bg").cast("double")
     top_bg = F.expr(
@@ -779,12 +896,9 @@ def unigram_logprob(
     at any parallelism.
     Output: id, n_tokens, mean_logprob.
     """
-    tf = (
-        ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), F.explode(words(F.col(text_col))).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy(id_col, "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
+    tf = _doc_tf(
+        ensure_parallelism(df.select(F.col(id_col), F.col(text_col))),
+        id_col, text_col,
     )
     counts = tf.groupBy("word").agg(F.sum("tf").alias("cnt"))
     total = counts.select(F.sum("cnt").cast("double").alias("_total"))
@@ -831,12 +945,9 @@ def lexical_diversity(
     ``dictionary_encode``.
     Output: id, n_words, n_distinct, ttr, hapax_frac, entropy.
     """
-    tf = (
-        ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), F.explode(words(F.col(text_col))).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy(id_col, "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
+    tf = _doc_tf(
+        ensure_parallelism(df.select(F.col(id_col), F.col(text_col))),
+        id_col, text_col,
     )
     per_doc = tf.groupBy(id_col).agg(
         F.sum("tf").alias("n_words"),
@@ -897,10 +1008,7 @@ def corpus_stats(
     contractual.
     """
     t = F.col(text_col)
-    ws = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(
-        F.size(F.split(F.trim(t), "\\s+"))
-    )
-    out = df.withColumn("_tok", ws.cast("bigint"))
+    out = df.withColumn("_tok", _ws_tokens(t).cast("bigint"))
     return (
         out.groupBy(*[F.col(c) for c in group_cols])
         .agg(
@@ -987,20 +1095,14 @@ def bm25_scores(
 
     q = F.array(*[F.lit(t) for t in query_terms])
     lengths = df.select(
-        F.col(id_col),
-        F.size(F.filter(words(F.col(text_col)), lambda x: x != "")).alias("_len"),
+        F.col(id_col), F.size(_doc_words(F.col(text_col))).alias("_len")
     )
     stats = lengths.agg(
         F.count(F.lit(1)).cast("double").alias("_n"),
         (F.sum(F.col("_len").cast("decimal(27,6)")).cast("double")
          / F.count(F.lit(1))).alias("_avglen"),
     )
-    terms = (
-        df.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("word"))
-        .where(F.array_contains(q, F.col("word")))
-        .groupBy(id_col, "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    terms = _doc_tf(df, id_col, text_col).where(F.array_contains(q, F.col("word")))
     dfreq = terms.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log(
         1.0 + (F.col("_n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
@@ -1050,7 +1152,7 @@ def chunk_documents(
     LLM-pipeline extension (no fuel analogue; the closest reference
     surface is fuel/transformers/sequences.py Window, which slides
     over a flat stream — this chunks WITHIN each document).  All JVM
-    expressions: words once (barrier-materialized), ``sequence`` for
+    expressions: words once (:func:`_doc_words`), ``sequence`` for
     the start offsets, ``slice`` per chunk — no Python, no shuffle;
     the explode is the only row expansion and it is bounded by
     len/stride per doc.  A trailing window that is fully contained in
@@ -1066,22 +1168,21 @@ def chunk_documents(
     """
     if stride <= 0 or chunk_size <= 0:
         raise ValueError("chunk_size and stride must be positive")
-    base = df.select(F.col(id_col), F.col(text_col).alias("_t"))
-    base = with_materialized(base, "_words", words(F.col("_t")))
-    n = F.size("_words")
-    starts = F.when(
-        F.length(F.trim(norm_text(F.col("_t")))) == 0,
-        F.array().cast("array<int>"),
-    ).otherwise(
+    base = with_materialized(
+        df.select(F.col(id_col), F.col(text_col)), "_w",
+        _doc_words(F.col(text_col)),
+    )
+    n = F.size("_w")
+    starts = F.when(n == 0, F.array().cast("array<int>")).otherwise(
         F.sequence(F.lit(0), n - 1, F.lit(stride)).cast("array<int>")
     )
     exploded = base.select(
-        id_col, "_words", F.explode(starts).alias("start")
+        id_col, "_w", F.explode(starts).alias("start")
     ).where(
         (F.col("start") == 0)
-        | (F.col("start") - stride + chunk_size < F.size("_words"))
+        | (F.col("start") - stride + chunk_size < F.size("_w"))
     )
-    chunk = F.slice("_words", F.col("start") + 1, F.lit(chunk_size))
+    chunk = F.slice("_w", F.col("start") + 1, F.lit(chunk_size))
     return exploded.select(
         F.col(id_col),
         (F.col("start") / stride).cast("int").alias("chunk_id"),
@@ -1118,20 +1219,15 @@ def dsir_weights(
 
     Output: id, n_tokens, log_weight (higher = more target-like).
     """
+    d = ensure_parallelism(
+        df.select(F.col(id_col), F.col(text_col), is_target.alias("_tgt"))
+    )
     toks = (
-        ensure_parallelism(
-            df.select(F.col(id_col), F.col(text_col), is_target.alias("_tgt"))
-        )
-        .select(
-            F.col(id_col),
-            "_tgt",
-            F.explode(words(F.col(text_col))).alias("_w"),
-        )
-        .where(F.col("_w") != "")
+        d.select(F.col(id_col), "_tgt", F.explode(_doc_words(F.col(text_col))).alias("word"))
         .withColumn(
             "_b",
             F.expr(
-                f"CAST(conv(substring(md5(_w), 1, 8), 16, 10) AS BIGINT) % {buckets}"
+                f"CAST(conv(substring(md5(word), 1, 8), 16, 10) AS BIGINT) % {buckets}"
             ),
         )
     )
@@ -1234,10 +1330,8 @@ def oov_rate(
 
     Output: id, n_tokens, n_oov, oov_rate (round 6).
     """
-    toks = (
-        ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), F.explode(words(F.col(text_col))).alias("word"))
-        .where(F.col("word") != "")
+    toks = ensure_parallelism(df.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col), F.explode(_doc_words(F.col(text_col))).alias("word")
     )
     vocab = dictionary.select("word").withColumn("_in", F.lit(1))
     return (
@@ -1278,21 +1372,10 @@ def train_bpe(
     Returns the merge table: [(sym_a, sym_b, pair_count), ...] in
     merge order — feed to a tokenizer or inspect as the vocab.
     """
-    wf = (
-        ensure_parallelism(df.select(F.col(text_col)))
-        .select(F.explode(words(F.col(text_col))).alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
     # word → symbol array: chars + end-of-word marker
     wf = materialize(
-        wf.select(
-            F.expr(
-                f"concat(transform(sequence(1, length(w)),"
-                f" i -> substring(w, i, 1)), array('{end_of_word}'))"
-            ).alias("syms"),
-            "freq",
+        _word_freq(df, text_col).select(
+            _bpe_symbols(end_of_word).alias("syms"), "freq"
         )
     )
 
@@ -1317,21 +1400,9 @@ def train_bpe(
         )
         if not top or top[0]["n"] < 2:
             break
-        a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-        merges.append((a, b, n))
-        qa, qb = a.replace("'", "\\'"), b.replace("'", "\\'")
-        wf = wf.select(
-            F.expr(
-                f"""aggregate(syms, CAST(array() AS ARRAY<STRING>),
-                    (acc, x) -> CASE WHEN size(acc) > 0
-                                      AND element_at(acc, -1) = '{qa}'
-                                      AND x = '{qb}'
-                                THEN concat(slice(acc, 1, size(acc) - 1),
-                                            array('{qa}{qb}'))
-                                ELSE concat(acc, array(x)) END)"""
-            ).alias("syms"),
-            "freq",
-        )
+        merge = (top[0]["a"], top[0]["b"], int(top[0]["n"]))
+        merges.append(merge)
+        wf = wf.select(_bpe_merge(merge).alias("syms"), "freq")
         if (it + 1) % 4 == 0:
             # the loop carries wf: a round replays at most 3 folds
             wf = materialize(wf)
@@ -1344,141 +1415,43 @@ def bpe_encode(
     text_col: str,
     merges: list[tuple[str, str, int]] | list[tuple[str, str]],
     end_of_word: str = "</w>",
-    vocab_dedup: bool = False,
 ) -> DataFrame:
     """Apply trained BPE merges (:func:`train_bpe`) to a corpus: each
     word starts as chars + end-of-word marker and every merge applies
     in training order via the same left-to-right JVM aggregate fold.
+    Output: id, tokens (the per-doc BPE symbol sequence, words
+    flattened in order), n_tokens.
 
-    One projection per merge, with a Generate barrier
-    (``with_materialized``) every 4 merges — Catalyst would otherwise
-    collapse the chained folds into one exponentially-nested
-    expression (the projection-collapse trap this engine already pins
-    for regex pipelines).  Output: id, tokens (the per-doc BPE symbol
-    sequence, words flattened in order), n_tokens.
-
-    ``vocab_dedup=True`` is the scale tier: the fold runs once per
-    DISTINCT word (natural-language vocabularies are ~1e4-1e6 rows
-    while word occurrences are the corpus), the encoded vocab joins
-    back as a BROADCAST (so hub words like "the" never become a
-    shuffle hot key), and per-doc order is restored with one
-    groupBy(doc) sort of (pos, tokens) structs — the single corpus
-    shuffle in the plan.  Same output, bit for bit (tested); the 20x
-    smoke measured 46.8s inline vs 5.5s deduped on 100k docs under an
-    honest all-column force (a bare count() reads 1.5s because
-    Catalyst elides the unique-keyed spine join — don't trust it).
+    The fold runs once per DISTINCT word (:func:`_bpe_fold_vocab`;
+    natural-language vocabularies are ~1e4-1e6 rows while word
+    occurrences are the corpus), the encoded vocab joins back as a
+    BROADCAST (so hub words like "the" never become a shuffle hot
+    key), and per-doc order is restored with one groupBy(doc) sort of
+    (pos, tokens) structs — the single corpus shuffle in the plan.
+    The 20x smoke measured 46.8s for a per-occurrence fold vs 5.5s for
+    this one on 100k docs under an honest all-column force (a bare
+    count() reads 1.5s because Catalyst elides the unique-keyed spine
+    join — don't trust it).
     """
-    if vocab_dedup:
-        return _bpe_encode_vocab(df, id_col, text_col, merges, end_of_word)
-    d = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    d = with_materialized(d, "_ws", words(F.col(text_col)))
-    d = d.select(
-        F.col(id_col),
-        F.expr(
-            f"""transform(filter(_ws, w -> w <> ''),
-                w -> concat(transform(sequence(1, length(w)),
-                                      i -> substring(w, i, 1)),
-                            array('{end_of_word}')))"""
-        ).alias("_sw"),
+    base = with_materialized(
+        ensure_parallelism(df.select(F.col(id_col), F.col(text_col))),
+        "_w", _doc_words(F.col(text_col)),
     )
-    for i, m in enumerate(merges):
-        a, b = m[0], m[1]
-        qa, qb = a.replace("'", "\\'"), b.replace("'", "\\'")
-        fold = (
-            f"""transform(_sw, syms -> aggregate(syms,
-                CAST(array() AS ARRAY<STRING>),
-                (acc, x) -> CASE WHEN size(acc) > 0
-                                  AND element_at(acc, -1) = '{qa}'
-                                  AND x = '{qb}'
-                            THEN concat(slice(acc, 1, size(acc) - 1),
-                                        array('{qa}{qb}'))
-                            ELSE concat(acc, array(x)) END))"""
-        )
-        if (i + 1) % 4 == 0:
-            d = with_materialized(
-                d.select(id_col, F.expr(fold).alias("_sw0")).withColumnRenamed(
-                    "_sw0", "_pre"
-                ),
-                "_sw",
-                F.col("_pre"),
-            ).drop("_pre")
-        else:
-            d = d.select(id_col, F.expr(fold).alias("_sw"))
-    return d.select(
-        F.col(id_col),
-        F.flatten("_sw").alias("tokens"),
-        F.size(F.flatten("_sw")).alias("n_tokens"),
+    wpos = base.select(id_col, F.posexplode("_w").alias("pos", "word"))
+    enc_vocab = _bpe_fold_vocab(
+        wpos.select("word").distinct(), merges, end_of_word
     )
-
-
-def _bpe_fold_vocab(vocab: DataFrame, merges, end_of_word: str) -> DataFrame:
-    """Apply the merge table to one word per row (the shared
-    vocab-grain fold behind ``bpe_encode(vocab_dedup=True)`` and
-    :func:`bpe_fertility`): same left-to-right JVM aggregate as the
-    inline tier, with the Generate barrier every 4 merges.
-    Input column ``word``; output (word, _toks)."""
-    v = vocab.select(
-        "word",
-        F.expr(
-            f"""array(concat(transform(sequence(1, length(word)),
-                                       i -> substring(word, i, 1)),
-                             array('{end_of_word}')))"""
-        ).alias("_sw"),
-    )
-    for i, m in enumerate(merges):
-        a, b = m[0], m[1]
-        qa, qb = a.replace("'", "\\'"), b.replace("'", "\\'")
-        fold = (
-            f"""transform(_sw, syms -> aggregate(syms,
-                CAST(array() AS ARRAY<STRING>),
-                (acc, x) -> CASE WHEN size(acc) > 0
-                                  AND element_at(acc, -1) = '{qa}'
-                                  AND x = '{qb}'
-                            THEN concat(slice(acc, 1, size(acc) - 1),
-                                        array('{qa}{qb}'))
-                            ELSE concat(acc, array(x)) END))"""
-        )
-        if (i + 1) % 4 == 0:
-            v = with_materialized(
-                v.select("word", F.expr(fold).alias("_pre")), "_sw",
-                F.col("_pre"),
-            ).drop("_pre")
-        else:
-            v = v.select("word", F.expr(fold).alias("_sw"))
-    return v.select("word", F.col("_sw")[0].alias("_toks"))
-
-
-def _bpe_encode_vocab(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    merges,
-    end_of_word: str,
-) -> DataFrame:
-    """Vocab-deduped tier of :func:`bpe_encode` (see its docstring)."""
-    from pyspark.sql.functions import broadcast
-
-    base = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    base = with_materialized(base, "_ws", words(F.col(text_col)))
-    wpos = base.select(
-        F.col(id_col),
-        F.posexplode(F.expr("filter(_ws, w -> w <> '')")).alias(
-            "pos", "word"
-        ),
-    )
-    vocab = wpos.select("word").distinct()
-    enc_vocab = _bpe_fold_vocab(vocab, merges, end_of_word)
-    joined = wpos.join(broadcast(enc_vocab), "word")
+    joined = wpos.join(F.broadcast(enc_vocab.select("word", "syms")), "word")
     per_doc = joined.groupBy(id_col).agg(
         F.flatten(
             F.expr(
-                "transform(array_sort(collect_list(struct(pos, _toks))),"
-                " s -> s._toks)"
+                "transform(array_sort(collect_list(struct(pos, syms))),"
+                " s -> s.syms)"
             )
         ).alias("tokens")
     )
     # id spine: documents whose every word normalizes away still get a
-    # row (empty tokens), matching the inline tier
+    # row (empty tokens)
     spine = base.select(F.col(id_col))
     return (
         spine.join(per_doc, id_col, "left")
@@ -1529,15 +1502,16 @@ def span_corruption(
 
     start_ppm = int(round(rate / mean_span * 1_000_000))
     span_mod = 2 * mean_span - 1
-    d = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    d = with_materialized(d, "_ws", words(F.col(text_col)))
-    base = d.select(id_col, F.expr("filter(_ws, w -> w <> '')").alias("_fw"))
+    base = with_materialized(
+        ensure_parallelism(df.select(F.col(id_col), F.col(text_col))),
+        "_w", _doc_words(F.col(text_col)),
+    )
     spine = base.select(
-        F.col(id_col), F.size("_fw").cast("bigint").alias("n_words")
+        F.col(id_col), F.size("_w").cast("bigint").alias("n_words")
     )
     pos = base.select(
-        id_col, F.size("_fw").alias("_n"),
-        F.posexplode("_fw").alias("_p0", "word"),
+        id_col, F.size("_w").alias("_n"),
+        F.posexplode("_w").alias("_p0", "word"),
     ).select(
         id_col, "_n", (F.col("_p0") + 1).alias("p"), "word",
         F.expr(
@@ -1668,14 +1642,15 @@ def mlm_masking(
     from fuel_spark.sources.text import FIRST_WORD_ID, build_dictionary
 
     sel_ppm = int(round(rate * 1_000_000))
-    d = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    d = with_materialized(d, "_ws", words(F.col(text_col)))
-    base = d.select(id_col, F.expr("filter(_ws, w -> w <> '')").alias("_fw"))
+    base = with_materialized(
+        ensure_parallelism(df.select(F.col(id_col), F.col(text_col))),
+        "_w", _doc_words(F.col(text_col)),
+    )
     spine = base.select(
-        F.col(id_col), F.size("_fw").cast("bigint").alias("n_words")
+        F.col(id_col), F.size("_w").cast("bigint").alias("n_words")
     )
     pos = base.select(
-        id_col, F.posexplode("_fw").alias("_p0", "word")
+        id_col, F.posexplode("_w").alias("_p0", "word")
     ).select(
         id_col, (F.col("_p0") + 1).alias("p"), "word",
         *[
@@ -1775,13 +1750,7 @@ def c4_filters(
         df.select(F.col(id_col), t, *[F.col(c) for c in keep_cols]),
         "_w", words(t),
     )
-    w = F.col("_w")
-    n_words = F.size(w)
-    mean_wl = F.length(F.concat_ws("", w)).cast("double") / F.greatest(
-        n_words, F.lit(1)
-    )
-    alpha = F.length(F.regexp_replace(F.lower(t), "[^a-z]", ""))
-    alpha_ratio = alpha.cast("double") / F.greatest(F.length(t), F.lit(1))
+    n_words, mean_wl, alpha_ratio = _doc_stats(t, F.col("_w"))
     lower = F.lower(t)
     flags = {
         "too_short": n_words < 10,
@@ -1890,14 +1859,7 @@ def quality_classifier(
         df.select(F.col(id_col), t), "_w", words(t)
     )
     w = F.col("_w")
-    n_words = F.size(w).cast("double")
-    mean_wl = F.length(F.concat_ws("", w)).cast("double") / F.greatest(
-        F.size(w), F.lit(1)
-    )
-    alpha_ratio = (
-        F.length(F.regexp_replace(F.lower(t), "[^a-z]", "")).cast("double")
-        / F.greatest(F.length(t), F.lit(1))
-    )
+    n_words, mean_wl, alpha_ratio = _doc_stats(t, w)
     stop_ratio = _stopword_hits(w, "en").cast("double") / F.greatest(
         F.size(w), F.lit(1)
     )
@@ -1905,7 +1867,7 @@ def quality_classifier(
     # alpha-heavy, mid-length words) score high
     z = (
         F.lit(-3.0)
-        + F.lit(0.01) * F.least(n_words, F.lit(300.0))
+        + F.lit(0.01) * F.least(n_words.cast("double"), F.lit(300.0))
         + F.lit(4.0) * alpha_ratio
         + F.lit(8.0) * stop_ratio
         - F.lit(0.4) * F.abs(mean_wl - F.lit(5.0))
@@ -2051,10 +2013,10 @@ def doc_frequency_ngrams(
     """
     d = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
     d = with_materialized(d, "_w", words(F.col(text_col)))
+    # a doc shorter than n words votes its whole text as one gram
     grams = F.array_distinct(
-        F.expr(
-            f"transform(sequence(1, greatest(size(_w) - {n - 1}, 1)),"
-            f" i -> array_join(slice(_w, i, {n}), ' '))"
+        F.when(F.size("_w") >= n, F.expr(_word_ngrams_sql(n))).otherwise(
+            F.array(F.array_join("_w", " "))
         )
     )
     n_docs = d.select(F.count(F.lit(1)).alias("_n_docs"))
@@ -2169,8 +2131,7 @@ def word_length_histogram(df: DataFrame, text_col: str) -> DataFrame:
 
     d = ensure_parallelism(df.select(F.col(text_col)))
     lens = (
-        d.select(F.explode(words(F.col(text_col))).alias("w"))
-        .where(F.col("w") != "")
+        d.select(F.explode(_doc_words(F.col(text_col))).alias("w"))
         .select(F.length("w").alias("word_len"))
         .groupBy("word_len")
         .agg(F.count(F.lit(1)).alias("n_words"))
@@ -2202,21 +2163,15 @@ def vocab_coverage_curve(
     from pyspark.sql import Window as W
 
     max_n = max(checkpoints)
-    counts = (
-        ensure_parallelism(df.select(F.col(text_col)))
-        .select(F.explode(words(F.col(text_col))).alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    counts = _word_freq(df, text_col)
     total = counts.groupBy().agg(
-        F.sum("cnt").cast("double").alias("_total")
+        F.sum("freq").cast("double").alias("_total")
     )
-    top = counts.orderBy(F.desc("cnt"), F.asc("w")).limit(max_n)
-    w = W.orderBy(F.desc("cnt"), F.asc("w"))
+    top = counts.orderBy(F.desc("freq"), F.asc("word")).limit(max_n)
+    w = W.orderBy(F.desc("freq"), F.asc("word"))
     ranked = top.withColumn("rank", F.row_number().over(w)).withColumn(
         "cum",
-        F.sum("cnt").over(w.rowsBetween(W.unboundedPreceding, 0)),
+        F.sum("freq").over(w.rowsBetween(W.unboundedPreceding, 0)),
     )
     marks = F.array(*[F.lit(c) for c in checkpoints])
     return (
@@ -2253,29 +2208,20 @@ def bigram_logprob(
     per-doc mean is bit-deterministic at any parallelism.
     Output: id, n_bigrams, mean_logprob2.
     """
-    d = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    d = with_materialized(d, "_w", words(F.col(text_col)))
-    # the size(_w) >= 2 guard inside the lambda drops the spurious
-    # element the greatest(...) floor creates for single-word docs
-    # (an untyped empty-array CASE branch would not type-unify)
-    grams = F.expr(
-        "filter(transform(sequence(1, greatest(size(_w) - 1, 1)),"
-        "   i -> struct(element_at(_w, i) AS w1,"
-        "               element_at(_w, least(i + 1, size(_w))) AS w2)),"
-        "   g -> size(_w) >= 2 AND g.w1 != '' AND g.w2 != '')"
+    d = with_materialized(
+        ensure_parallelism(df.select(F.col(id_col), F.col(text_col))),
+        "_w", _doc_words(F.col(text_col)),
     )
     doc_bi = (
-        d.select(F.col(id_col), F.explode(grams).alias("g"))
-        .select(F.col(id_col), F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
+        d.select(F.col(id_col), F.explode(F.expr(_BIGRAMS_SQL)).alias("_p"))
+        .select(F.col(id_col), "_p.w1", "_p.w2")
         .groupBy(id_col, "w1", "w2")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     bi_counts = doc_bi.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
     uni_counts = bi_counts.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    vocab = (
-        d.select(F.explode(F.col("_w")).alias("w"))
-        .where(F.col("w") != "")
-        .agg(F.count_distinct("w").cast("double").alias("_v"))
+    vocab = d.select(F.explode("_w").alias("w")).agg(
+        F.count_distinct("w").cast("double").alias("_v")
     )
     lp6 = F.round(
         F.log10(
@@ -2346,25 +2292,12 @@ def pmi_cooccurrence(
     Output: w_a <= w_b, pair_count, pmi — pairs with
     ``pair_count >= min_count``.
     """
-    base = (
-        df.select(norm_text(F.col(text_col)).alias("_t"))
-        .where(F.length("_t") >= 1)
-        .select(F.split("_t", " ").alias("_w"))
-    )
     # consumed 2x: pairs and unigrams
+    base = df.select(_doc_words(F.col(text_col)).alias("_w"))
     base = materialize(ensure_parallelism(base))
-    pair_expr = (
-        # filter-over-greatest keeps the 1-token doc an empty TYPED
-        # array (sequence(1, 0) would descend, not stay empty)
-        f"flatten(transform("
-        f"filter(sequence(1, greatest(size(_w) - 1, 1)), i -> i <= size(_w) - 1), "
-        f"i -> transform(sequence(i + 1, least(i + {int(window)}, size(_w))), "
-        f"j -> struct(least(element_at(_w, i), element_at(_w, j)) AS w_a, "
-        f"greatest(element_at(_w, i), element_at(_w, j)) AS w_b))))"
-    )
-    pairs = base.select(F.explode(F.expr(pair_expr)).alias("_p")).select(
-        "_p.w_a", "_p.w_b"
-    )
+    pairs = base.select(
+        F.explode(F.expr(_cooccur_pairs_sql(window))).alias("_p")
+    ).select("_p.w_a", "_p.w_b")
     pairs = materialize(pairs)  # counted twice (P, pc)
     pc = pairs.groupBy("w_a", "w_b").agg(F.count(F.lit(1)).alias("pair_count"))
     uc = materialize(  # consumed 3x (both joins + T)
@@ -2421,20 +2354,9 @@ def textrank_keywords(
     """
     from fuel_spark.ops.graph import pagerank
 
-    base = (
-        df.select(norm_text(F.col(text_col)).alias("_t"))
-        .where(F.length("_t") >= 1)
-        .select(F.split("_t", " ").alias("_w"))
-    )
-    pair_expr = (
-        f"flatten(transform("
-        f"filter(sequence(1, greatest(size(_w) - 1, 1)), i -> i <= size(_w) - 1), "
-        f"i -> transform(sequence(i + 1, least(i + {int(window)}, size(_w))), "
-        f"j -> struct(least(element_at(_w, i), element_at(_w, j)) AS w_a, "
-        f"greatest(element_at(_w, i), element_at(_w, j)) AS w_b))))"
-    )
     edges = (
-        base.select(F.explode(F.expr(pair_expr)).alias("_p"))
+        df.select(_doc_words(F.col(text_col)).alias("_w"))
+        .select(F.explode(F.expr(_cooccur_pairs_sql(window))).alias("_p"))
         .select("_p.w_a", "_p.w_b")
         .where(F.col("w_a") != F.col("w_b"))
         .distinct()
@@ -2479,11 +2401,7 @@ def zipf_slope(df: DataFrame, text_col: str, min_count: int = 2) -> DataFrame:
     from pyspark.sql import Window as W
 
     DEC = "decimal(38,12)"
-    tok = (
-        df.select(norm_text(F.col(text_col)).alias("_t"))
-        .where(F.length("_t") >= 1)
-        .select(F.explode(F.split("_t", " ")).alias("w"))
-    )
+    tok = df.select(F.explode(_doc_words(F.col(text_col))).alias("w"))
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("freq")).where(
         F.col("freq") >= int(min_count)
     )
@@ -2529,19 +2447,15 @@ def term_burstiness(
 
     Output: w, cf, df, burstiness, df_vs_poisson (round 6).
     """
-    tok = (
-        df.select(F.col(id_col).alias("_id"), norm_text(F.col(text_col)).alias("_t"))
-        .where(F.length("_t") >= 1)
-        .select("_id", F.explode(F.split("_t", " ")).alias("w"))
+    tok = df.select(
+        F.col(id_col).alias("_id"), F.explode(_doc_words(F.col(text_col))).alias("w")
     )
     stats = tok.groupBy("w").agg(
         F.count(F.lit(1)).alias("cf"),
         F.countDistinct("_id").alias("df"),
     ).where(F.col("cf") >= int(min_cf))
-    n_docs = (
-        df.select(norm_text(F.col(text_col)).alias("_t"))
-        .where(F.length("_t") >= 1)
-        .agg(F.count(F.lit(1)).cast("double").alias("_nd"))
+    n_docs = df.where(F.size(_doc_words(F.col(text_col))) >= 1).agg(
+        F.count(F.lit(1)).cast("double").alias("_nd")
     )
     out = stats.crossJoin(F.broadcast(n_docs))
     poisson_df = F.col("_nd") * (
@@ -2584,11 +2498,9 @@ def heaps_fit(
     """
     from pyspark.sql import Window as W
 
-    base = (
-        df.select(F.col(id_col).alias("_id"), norm_text(F.col(text_col)).alias("_t"))
-        .where(F.length("_t") >= 1)
-        .select("_id", F.split("_t", " ").alias("_w"))
-    )
+    base = df.select(
+        F.col(id_col).alias("_id"), _doc_words(F.col(text_col)).alias("_w")
+    ).where(F.size("_w") >= 1)
     base = materialize(ensure_parallelism(base))
     bounds = base.agg(
         F.min("_id").alias("_lo"), F.max("_id").alias("_hi")
@@ -2666,11 +2578,7 @@ def good_turing_counts(
     The unseen-mass estimate P(unseen) = N_1/N is the r=1 row's n_r
     over the corpus token total (available from corpus_stats).
     """
-    tok = (
-        df.select(norm_text(F.col(text_col)).alias("_t"))
-        .where(F.length("_t") >= 1)
-        .select(F.explode(F.split("_t", " ")).alias("w"))
-    )
+    tok = df.select(F.explode(_doc_words(F.col(text_col))).alias("w"))
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("r"))
     nr = freq.groupBy("r").agg(F.count(F.lit(1)).alias("n_r")).where(
         F.col("r") <= int(max_r)
@@ -2727,12 +2635,7 @@ def gt_logprob(
     if ref is None:
         ref = df
     rtext = ref_text_col or text_col
-    rtok = (
-        ensure_parallelism(ref.select(F.col(rtext)))
-        .select(F.explode(words(F.col(rtext))).alias("word"))
-        .where(F.col("word") != "")
-    )
-    counts = rtok.groupBy("word").agg(F.count(F.lit(1)).alias("r"))
+    counts = _word_freq(ref, rtext).withColumnRenamed("freq", "r")
     nr = counts.groupBy("r").agg(F.count(F.lit(1)).alias("n_r"))
     shifted = nr.select(
         (F.col("r") - 1).alias("r"), F.col("n_r").alias("_n_next")
@@ -2762,12 +2665,9 @@ def gt_logprob(
             F.sum(F.when(F.col("r") == 1, 1).otherwise(0)), F.lit(1)
         ).cast("double").alias("_n1"),
     )
-    tf = (
-        ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), F.explode(words(F.col(text_col))).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy(id_col, "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
+    tf = _doc_tf(
+        ensure_parallelism(df.select(F.col(id_col), F.col(text_col))),
+        id_col, text_col,
     )
     lp6 = F.round(
         F.log10(
@@ -2816,19 +2716,9 @@ def bigram_llr(
 
     Output: w1, w2, n11 (bigram count ≥ min_count), llr.
     """
-    base = (
-        df.select(norm_text(F.col(text_col)).alias("_t"))
-        .where(F.length("_t") >= 1)
-        .select(F.split("_t", " ").alias("_w"))
-    )
-    pair_expr = (
-        "transform(filter(sequence(1, greatest(size(_w) - 1, 1)),"
-        " i -> i <= size(_w) - 1),"
-        " i -> struct(element_at(_w, i) AS w1,"
-        " element_at(_w, i + 1) AS w2))"
-    )
     bi = (
-        base.select(F.explode(F.expr(pair_expr)).alias("_p"))
+        df.select(_doc_words(F.col(text_col)).alias("_w"))
+        .select(F.explode(F.expr(_BIGRAMS_SQL)).alias("_p"))
         .select("_p.w1", "_p.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n11"))
@@ -2880,10 +2770,8 @@ def diversity_profile(
     n_tokens, hill0, hill1 (round 6), hill2 (round 6).
     """
     DECD = "decimal(27,18)"
-    tok = (
-        df.select(F.col(group_col).alias("g"), norm_text(F.col(text_col)).alias("_t"))
-        .where(F.length("_t") >= 1)
-        .select("g", F.explode(F.split("_t", " ")).alias("w"))
+    tok = df.select(
+        F.col(group_col).alias("g"), F.explode(_doc_words(F.col(text_col))).alias("w")
     )
     wc = tok.groupBy("g", "w").agg(F.count(F.lit(1)).alias("_c"))
     gt = wc.groupBy("g").agg(F.sum("_c").cast("double").alias("_T"))
@@ -2926,11 +2814,7 @@ def chao1_richness(df: DataFrame, text_col: str) -> DataFrame:
 
     Output: one row — s_obs, n1, n2, chao1 (round 6).
     """
-    tok = (
-        df.select(norm_text(F.col(text_col)).alias("_t"))
-        .where(F.length("_t") >= 1)
-        .select(F.explode(F.split("_t", " ")).alias("w"))
-    )
+    tok = df.select(F.explode(_doc_words(F.col(text_col))).alias("w"))
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("_r"))
     m = freq.agg(
         F.count(F.lit(1)).alias("s_obs"),
@@ -2962,10 +2846,8 @@ def burrows_delta(
     panel size.  Output: source_a < source_b, delta (round 6).
     """
     DECB = "decimal(27,18)"
-    tok = (
-        df.select(F.col(group_col).alias("g"), norm_text(F.col(text_col)).alias("_t"))
-        .where(F.length("_t") >= 1)
-        .select("g", F.explode(F.split("_t", " ")).alias("w"))
+    tok = df.select(
+        F.col(group_col).alias("g"), F.explode(_doc_words(F.col(text_col))).alias("w")
     )
     tok = materialize(tok)  # panel + group counts
     panel = F.broadcast(
@@ -3066,12 +2948,8 @@ def bray_curtis_sources(
     Output: source_a < source_b, shared_mass, n_a, n_b,
     bray_curtis (round 6).
     """
-    tok = (
-        df.select(
-            F.col(group_col).alias("g"), norm_text(F.col(text_col)).alias("_t")
-        )
-        .where(F.length("_t") >= 1)
-        .select("g", F.explode(F.split("_t", " ")).alias("w"))
+    tok = df.select(
+        F.col(group_col).alias("g"), F.explode(_doc_words(F.col(text_col))).alias("w")
     )
     cnt = tok.groupBy("g", "w").agg(F.count(F.lit(1)).alias("_c"))
     cnt = materialize(cnt)  # feeds totals + both join sides
@@ -3135,11 +3013,10 @@ def vocab_novelty_slices(
         )
         .cast("bigint")
         .alias("slice"),
-        norm_text(F.col(text_col)).alias("_t"),
+        F.col(text_col),
     )
     tok = (
-        sliced.where(F.length("_t") >= 1)
-        .select("slice", F.explode(F.split("_t", " ")).alias("w"))
+        sliced.select("slice", F.explode(_doc_words(F.col(text_col))).alias("w"))
         .distinct()
     )
     tok = materialize(tok)  # feeds per-slice + first-seen
@@ -3246,13 +3123,8 @@ def tfidf_top_terms(
     Output: source, term, term_count, df, tfidf (round 6), rank —
     top_k rows per source, ordered (source, rank).
     """
-    tok = (
-        df.select(
-            F.col(group_col).alias("source"),
-            norm_text(F.col(text_col)).alias("_t"),
-        )
-        .where(F.length("_t") >= 1)
-        .select("source", F.explode(F.split("_t", " ")).alias("term"))
+    tok = df.select(
+        F.col(group_col).alias("source"), F.explode(_doc_words(F.col(text_col))).alias("term")
     )
     cnt = tok.groupBy("source", "term").agg(
         F.count(F.lit(1)).cast("bigint").alias("term_count")
@@ -3320,13 +3192,8 @@ def fightin_words(
     Output: source, term, term_count, rest_count, z_score (round 6),
     rank — top_k rows per source.
     """
-    tok = (
-        df.select(
-            F.col(group_col).alias("source"),
-            norm_text(F.col(text_col)).alias("_t"),
-        )
-        .where(F.length("_t") >= 1)
-        .select("source", F.explode(F.split("_t", " ")).alias("term"))
+    tok = df.select(
+        F.col(group_col).alias("source"), F.explode(_doc_words(F.col(text_col))).alias("term")
     )
     cnt = tok.groupBy("source", "term").agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")
@@ -3478,8 +3345,8 @@ def bpe_fertility(
     needs only PER-WORD token counts, never the per-doc token
     sequence, so the corpus reduces to a (group, word) frequency
     table (one shuffle), the merge fold runs once per DISTINCT word
-    (:func:`_bpe_fold_vocab`, the ``bpe_encode(vocab_dedup=True)``
-    fold — bit-identical by construction), the encoded vocab joins
+    (:func:`_bpe_fold_vocab`, the :func:`bpe_encode` fold), the
+    encoded vocab joins
     back as a broadcast, and the rollup is Σ count·per-word-stats.
     No doc-grain join, no order-restoring groupBy anywhere
     (measured: 18.1s → 2.7s at the 20× smoke vs the encode-based
@@ -3495,17 +3362,13 @@ def bpe_fertility(
         df.select(F.col(group_col).alias("group"), F.col(text_col))
     )
     wf = (
-        base.select(
-            "group",
-            F.explode(words(F.col(text_col))).alias("word"),
-        )
-        .where(F.col("word") != "")
+        base.select("group", F.explode(_doc_words(F.col(text_col))).alias("word"))
         .groupBy("group", "word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     encv = _bpe_fold_vocab(
         wf.select("word").distinct(), merges, end_of_word
-    ).select("word", F.size("_toks").cast("long").alias("_ntok"))
+    ).select("word", F.size("syms").cast("long").alias("_ntok"))
     per = wf.join(F.broadcast(encv), "word")
     counts = per.groupBy("group").agg(
         F.sum("cnt").cast("bigint").alias("n_words"),
@@ -3570,21 +3433,9 @@ def corpus_compressibility(
         df.select(F.col(id_col), F.col(group_col).alias("group"),
                   F.col(text_col))
     )
-    w = F.filter(words(F.col(text_col)), lambda x: x != "")
-    # sequence(a, b) runs DESCENDING when b < a, so a short doc must
-    # produce an explicitly empty index array, not sequence(0, -1)
-    idx = F.when(
-        F.size(w) >= int(n), F.sequence(F.lit(0), F.size(w) - int(n))
-    ).otherwise(F.expr("CAST(array() AS ARRAY<INT>)"))
     grams = base.select(
-        "group",
-        F.explode(
-            F.transform(
-                idx,
-                lambda i: F.concat_ws(" ", F.slice(w, i + 1, int(n))),
-            )
-        ).alias("gram"),
-    )
+        "group", _doc_words(F.col(text_col)).alias("_w")
+    ).select("group", F.explode(F.expr(_word_ngrams_sql(int(n)))).alias("gram"))
     per_gram = grams.groupBy("group", "gram").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -3718,16 +3569,9 @@ def ngram_novelty_by_decile(
         ((dnum - F.pmod(dnum, F.col("_n"))) / F.col("_n"))
         .cast("int").alias("_dec"),
     )
-    w = words(F.col(text_col))
-    grams = F.expr(
-        f"CASE WHEN size(_w) >= {n} THEN"
-        f" transform(sequence(1, size(_w) - {n - 1}),"
-        f" i -> array_join(slice(_w, i, {n}), ' '))"
-        f" ELSE CAST(array() AS array<string>) END"
-    )
     sg = (
-        p.withColumn("_w", w)
-        .select("_dec", F.explode(grams).alias("gram"))
+        p.withColumn("_w", words(F.col(text_col)))
+        .select("_dec", F.explode(F.expr(_word_ngrams_sql(n))).alias("gram"))
         .distinct()
     )
     first = sg.groupBy("gram").agg(F.min("_dec").alias("_first"))
@@ -3770,68 +3614,6 @@ def _word_class(col) -> F.Column:
     )
 
 
-def _word_freq(df: DataFrame, text_col: str) -> DataFrame:
-    """Corpus word-frequency table: (word, freq) — the tokenizer-
-    economics spine.  One corpus pass; every economics table below is
-    vocab-sized after this."""
-    return (
-        ensure_parallelism(df.select(F.col(text_col)))
-        .select(F.explode(words(F.col(text_col))).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-
-
-def _bpe_fold_vocab_sizes(
-    vocab: DataFrame, merges, end_of_word: str = "</w>"
-) -> DataFrame:
-    """Per-word token counts after EVERY merge prefix: (word, sizes)
-    where sizes[k] (0-based element k+1 in SQL terms) is the token
-    count after applying merges[0..k-1] — sizes[0] = len(word)+1 (the
-    char + end-of-word init), sizes[n_merges] = the final count.
-
-    Same left-to-right JVM aggregate fold as :func:`_bpe_fold_vocab`
-    (bit-identical states by construction), with the Generate barrier
-    every 4 merges; the extra cost over the plain fold is one
-    ``size()`` per merge per distinct word — vocab-grain, never
-    corpus-grain."""
-    v = vocab.select(
-        "word",
-        F.expr(
-            f"""array(concat(transform(sequence(1, length(word)),
-                                       i -> substring(word, i, 1)),
-                             array('{end_of_word}')))"""
-        ).alias("_sw"),
-        F.array(F.length("word") + F.lit(1)).alias("_szs"),
-    )
-    for i, m in enumerate(merges):
-        a, b = m[0], m[1]
-        qa, qb = a.replace("'", "\\'"), b.replace("'", "\\'")
-        fold = (
-            f"""transform(_sw, syms -> aggregate(syms,
-                CAST(array() AS ARRAY<STRING>),
-                (acc, x) -> CASE WHEN size(acc) > 0
-                                  AND element_at(acc, -1) = '{qa}'
-                                  AND x = '{qb}'
-                            THEN concat(slice(acc, 1, size(acc) - 1),
-                                        array('{qa}{qb}'))
-                            ELSE concat(acc, array(x)) END))"""
-        )
-        if (i + 1) % 4 == 0:
-            v = with_materialized(
-                v.select("word", "_szs", F.expr(fold).alias("_pre")),
-                "_sw", F.col("_pre"),
-            ).drop("_pre")
-        else:
-            v = v.select("word", "_szs", F.expr(fold).alias("_sw"))
-        v = v.select(
-            "word", "_sw",
-            F.concat("_szs", F.array(F.size(F.col("_sw")[0]))).alias("_szs"),
-        )
-    return v.select("word", F.col("_szs").alias("sizes"))
-
-
 def bpe_merge_utilization(
     df: DataFrame, text_col: str, merges, end_of_word: str = "</w>"
 ) -> DataFrame:
@@ -3842,8 +3624,9 @@ def bpe_merge_utilization(
 
     Each application of merge k removes exactly one token, so
     n_applications(k) = Σ_word freq · (sizes[k-1] − sizes[k]) — pure
-    arithmetic on the prefix-size table (:func:`_bpe_fold_vocab_sizes`,
-    vocab grain, broadcast back onto the word-frequency table).
+    arithmetic on the prefix-size table (the ``sizes`` of
+    :func:`_bpe_fold_vocab`, vocab grain, broadcast back onto the
+    word-frequency table).
 
     Output per merge rank (1-based, training order): merge_rank,
     sym_a, sym_b, n_applications, tokens_after, reduction_share
@@ -3852,9 +3635,9 @@ def bpe_merge_utilization(
     from fuel_spark.functions import round6_ratio
 
     wf = _word_freq(df, text_col)
-    sizes = _bpe_fold_vocab_sizes(
+    sizes = _bpe_fold_vocab(
         wf.select("word").distinct(), merges, end_of_word
-    )
+    ).select("word", "sizes")
     per = wf.join(F.broadcast(sizes), "word")
     n = len(merges)
     ranks = per.select(
@@ -3920,9 +3703,9 @@ def bpe_compression_curve(
     from fuel_spark.functions import round6_ratio
 
     wf = _word_freq(df, text_col)
-    sizes = _bpe_fold_vocab_sizes(
+    sizes = _bpe_fold_vocab(
         wf.select("word").distinct(), merges, end_of_word
-    )
+    ).select("word", "sizes")
     per = wf.join(F.broadcast(sizes), "word")
     n = len(merges)
     curve = (
@@ -3970,9 +3753,9 @@ def bpe_fertility_by_class(
     from fuel_spark.functions import round6_ratio
 
     wf = _word_freq(df, text_col)
-    sizes = _bpe_fold_vocab_sizes(
+    sizes = _bpe_fold_vocab(
         wf.select("word").distinct(), merges, end_of_word
-    )
+    ).select("word", "sizes")
     lb = (
         F.when(F.length("word") <= 2, F.lit("1-2"))
         .when(F.length("word") <= 5, F.lit("3-5"))
@@ -4027,9 +3810,9 @@ def bpe_token_length_hist(
     from fuel_spark.functions import round6_ratio
 
     wf = _word_freq(df, text_col)
-    sizes = _bpe_fold_vocab_sizes(
+    sizes = _bpe_fold_vocab(
         wf.select("word").distinct(), merges, end_of_word
-    )
+    ).select("word", "sizes")
     per = wf.join(F.broadcast(sizes), "word").select(
         "freq", F.element_at("sizes", len(merges) + 1).alias("n_tok")
     )

@@ -3,18 +3,18 @@
 ``functions.materialize`` is the only materialization call in the
 library and the driver contract: ``localCheckpoint`` is called nowhere
 else, and ``cache``/``persist``/``unpersist`` only where Spark's own
-semantics need them.  Pure AST/token scan, no Spark session.
+semantics need them.  Pure AST/token scan (``tests/census.py``), no
+Spark session.
 """
 
-import ast
 import inspect
 import io
-import pathlib
 import tokenize
+
+from census import ROOT, scan
 
 from fuel_spark import functions
 
-ROOT = pathlib.Path(__file__).resolve().parents[1]
 SOURCES = sorted((ROOT / "fuel_spark").rglob("*.py")) + [ROOT / "__spark_entry__.py"]
 
 # (file, enclosing function, method) -> why it is not materialize
@@ -29,31 +29,12 @@ METHODS = {"localCheckpoint", "cache", "persist", "unpersist"}
 GONE = {"checkpoint_if_narrow", "checkpoint_interval", "est_row_bytes"}
 
 
-class _Census(ast.NodeVisitor):
-    """Collect (file, innermost enclosing function, method, line)."""
-
-    def __init__(self, rel):
-        self.rel, self.stack, self.found = rel, ["<module>"], []
-
-    def visit_FunctionDef(self, node):
-        self.stack.append(node.name)
-        self.generic_visit(node)
-        self.stack.pop()
-
-    visit_AsyncFunctionDef = visit_FunctionDef
-
-    def visit_Call(self, node):
-        if isinstance(node.func, ast.Attribute) and node.func.attr in METHODS:
-            self.found.append((self.rel, self.stack[-1], node.func.attr, node.lineno))
-        self.generic_visit(node)
-
-
 def test_materialize_is_the_only_checkpoint_and_cache_site():
-    calls = []
-    for path in SOURCES:
-        census = _Census(path.relative_to(ROOT).as_posix())
-        census.visit(ast.parse(path.read_text()))
-        calls += census.found
+    calls = [
+        (h.file, h.func, h.value[0], h.line)
+        for h in scan(SOURCES)
+        if h.kind == "call" and h.value[0] in METHODS
+    ]
     stray = [c for c in calls if c[:3] not in ALLOWED]
     assert stray == []
     assert {c[:3] for c in calls} == ALLOWED

@@ -2708,8 +2708,9 @@ def test_ab_power_sweep_scaling_laws(spark):
 
 # Results must not depend on how wide Spark runs them: each family's
 # sorted rows hash the same under shuffle partitions 1 and 7, each
-# with adaptive execution on and off.  A difference is a defect in
-# the operator (an order- or partition-dependent pick).
+# with adaptive execution off, on, and on without partition
+# coalescing.  A difference is a defect in the operator (an order- or
+# partition-dependent pick).
 NEAR_DUP_FAMILY = (
     "dedup_apply",
     "dedup_apply_keep_longest",
@@ -2738,10 +2739,26 @@ ANN_FAMILY = (
     "embedding_hard_negatives",
     "ann_incremental_pipeline",
 )
+# the text pipeline's blocks (front end, n-grams, doc statistics, BPE
+# fold) and the curate funnel that shares its statistics
+TEXT_FAMILY = (
+    "text_bpe_merges",
+    "text_bpe_encode",
+    "text_bpe_fertility",
+    "text_zipf_slope",
+    "text_term_burstiness",
+    "text_pmi_cooccurrence",
+    "text_top_ngrams_by_source",
+    "text_c4_filters",
+    "text_quality_classifier",
+    "curation_funnel_by_source",
+)
 
 
 @pytest.mark.parametrize(
-    "family", [NEAR_DUP_FAMILY, ANN_FAMILY], ids=["near_dup", "ann"]
+    "family",
+    [NEAR_DUP_FAMILY, ANN_FAMILY, TEXT_FAMILY],
+    ids=["near_dup", "ann", "text"],
 )
 def test_registry_family_is_width_invariant(spark, family):
     import hashlib
@@ -2752,17 +2769,25 @@ def test_registry_family_is_width_invariant(spark, family):
         rows = sorted(repr(tuple(r)) for r in df.collect())
         return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
-    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    # (adaptive execution, AQE partition coalescing): at sf0.001 AQE
+    # coalesces 7 shuffle partitions back to 1, so only the setting
+    # with coalescing off runs adaptive plans at width 7
+    settings = (("true", "true"), ("true", "false"), ("false", "true"))
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
     saved = {k: spark.conf.get(k) for k in keys}
     qs = E.queries()
     digests = {name: {} for name in family}
     try:
-        for aqe in ("true", "false"):
+        for setting in settings:
             for parts in ("1", "7"):
-                spark.conf.set("spark.sql.shuffle.partitions", parts)
-                spark.conf.set("spark.sql.adaptive.enabled", aqe)
+                for k, v in zip(keys, (parts, *setting)):
+                    spark.conf.set(k, v)
                 for name in family:
-                    digests[name][(parts, aqe)] = digest(qs[name](spark, SF))
+                    digests[name][(parts, *setting)] = digest(qs[name](spark, SF))
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)

@@ -1451,28 +1451,41 @@ def test_bpe_encode_fixed_merges_fold_semantics(spark):
     assert enc[2][:6] == ["i", "n", "n", "e", "r", "</w>"]
 
 
-def test_bpe_encode_vocab_tier_bit_identical(spark):
-    """The vocab-deduped scale tier must reproduce the inline fold
-    bit for bit, including empty-normalization docs via the spine."""
-    docs = from_rows(
-        spark,
-        [(1, "the thin thing in the inn"), (2, "!!!"), (3, "another other")],
-        schema="doc_id bigint, text string",
-    )
+def test_bpe_encode_matches_python_greedy(spark):
+    """bpe_encode against a pure-Python encoder: each normalized word
+    starts as its characters plus the end-of-word marker, and each
+    merge, in training order, is one greedy left-to-right pass that
+    joins every non-overlapping matching pair."""
+    import re
+
+    rows = [(1, "the thin thing in the inn"), (2, "!!!"), (3, "another other")]
+    docs = from_rows(spark, rows, schema="doc_id bigint, text string")
     merges = [("t", "h"), ("th", "e"), ("i", "n"), ("the", "</w>")]
-    inline = {
+
+    def encode(text):
+        toks = []
+        for word in re.sub("[^a-z0-9]+", " ", text.lower()).split():
+            syms = list(word) + ["</w>"]
+            for a, b in merges:
+                out, i = [], 0
+                while i < len(syms):
+                    if i + 1 < len(syms) and (syms[i], syms[i + 1]) == (a, b):
+                        out.append(a + b)
+                        i += 2
+                    else:
+                        out.append(syms[i])
+                        i += 1
+                syms = out
+            toks += syms
+        return toks, len(toks)
+
+    got = {
         r.doc_id: (r.tokens, r.n_tokens)
         for r in text_ops.bpe_encode(docs, "doc_id", "text", merges).collect()
     }
-    vocab = {
-        r.doc_id: (r.tokens, r.n_tokens)
-        for r in text_ops.bpe_encode(
-            docs, "doc_id", "text", merges, vocab_dedup=True
-        ).collect()
-    }
-    assert inline == vocab
+    assert got == {i: encode(t) for i, t in rows}
     # "!!!" normalizes to nothing: empty token list, not a missing row
-    assert vocab[2] == ([], 0)
+    assert got[2] == ([], 0)
 
 
 def test_self_repetition_spans_periodic_and_block(spark):

@@ -21,6 +21,11 @@ import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# the Python workers the JVM starts inherit this environment, so they
+# import fuel_spark from any working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -100,8 +105,9 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
-            fails.append((name, f"SPARK ERROR: {e}"))
-            print(f"FAIL {name}: spark error {str(e)[:300]}")
+            why = str(e) or type(e).__name__
+            fails.append((name, f"SPARK ERROR: {why}"))
+            print(f"FAIL {name}: spark error {why[:300]}")
             continue
         if name not in oracles:
             nosql.append(name)
@@ -110,8 +116,9 @@ def main() -> int:
         try:
             odf = con.sql(oracles[name]).df()
         except Exception as e:
-            fails.append((name, f"ORACLE ERROR: {e}"))
-            print(f"FAIL {name}: oracle error {str(e)[:300]}")
+            why = str(e) or type(e).__name__
+            fails.append((name, f"ORACLE ERROR: {why}"))
+            print(f"FAIL {name}: oracle error {why[:300]}")
             continue
         if not driver_canon_ok(sdf) or not driver_canon_ok(odf):
             fails.append((name, "driver canonicalizer cannot sort cells"))

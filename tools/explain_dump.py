@@ -10,7 +10,8 @@ its plan is built.  The printed plan starts at those materialized
 frames.  The streaming special-case has no batch plan; it is skipped.
 
 Expression, exchange and RDD ids (``#123``, ``plan_id=7``,
-``RDD[42]``) and temp paths are normalized, so diffing the output
+``RDD[42]``), the numbers PySpark appends to lambda variables
+(``x_40``) and temp paths are normalized, so diffing the output
 directories of two commits is a plan diff.
 """
 
@@ -28,13 +29,16 @@ _EXPR_ID = re.compile(r"#\d+")
 _PLAN_ID = re.compile(r"plan_id=\d+")
 _RDD_ID = re.compile(r"RDD\[\d+\]")
 _TMP = re.compile(re.escape(tempfile.gettempdir()) + r"/[^\s,\]\)]+")
+# PySpark names a Python lambda's variable from a process-wide counter
+_LAMBDA_VAR = re.compile(r"(lambda \w+?)_\d+\b")
 
 
 def normalize(plan: str) -> str:
     """Drop what changes from run to run: expression, exchange and RDD
-    ids, temp paths."""
+    ids, lambda variable numbers, temp paths."""
     plan = _PLAN_ID.sub("plan_id=N", _EXPR_ID.sub("#N", plan))
-    return _TMP.sub("<tmp>", _RDD_ID.sub("RDD[N]", plan))
+    plan = _LAMBDA_VAR.sub(r"\1_N", _RDD_ID.sub("RDD[N]", plan))
+    return _TMP.sub("<tmp>", plan)
 
 
 def main() -> int:
