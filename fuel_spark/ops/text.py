@@ -2498,10 +2498,11 @@ def heaps_fit(
     """
     from pyspark.sql import Window as W
 
-    base = df.select(
+    # filter after the materialize: pushed below the projection, the
+    # non-empty test would re-run the normalize regex per document
+    base = materialize(ensure_parallelism(df.select(
         F.col(id_col).alias("_id"), _doc_words(F.col(text_col)).alias("_w")
-    ).where(F.size("_w") >= 1)
-    base = materialize(ensure_parallelism(base))
+    ))).where(F.size("_w") >= 1)
     bounds = base.agg(
         F.min("_id").alias("_lo"), F.max("_id").alias("_hi")
     )

@@ -13,10 +13,15 @@ An epoch is ONE range-partitioned parallel sort of the payload by the
 scheme's total order (:func:`fuel_spark.schemes.scheme_order`): no
 positions pass, no checkpoint, no broadcast, no second exchange, and no
 Spark job until the first batch is asked for.  Rows reach the driver in
-that order through ``toLocalIterator(prefetchPartitions=True)``, which
-ships pickled rows one partition at a time with the next partition
-prefetched — so the driver holds at most two partitions, never the
-dataset — and the driver cuts them into minibatches as they arrive.
+that order as the JVM's Arrow record batches (``toArrowBatchRdd``),
+streamed through ``toLocalIterator(prefetchPartitions=True)`` one
+partition at a time with the next partition prefetched — so the driver
+holds at most two partitions, never the dataset.  Each Arrow message
+is decoded once, column by column: a numeric column, or a fixed-width
+list of numbers, with no NULL becomes one numpy view; any other column
+becomes the Python values the Row path gives.  Minibatches are then
+cut by slicing, and only a batch that straddles two messages joins
+the rows carried over from the first.
 
 Shuffled epochs re-key per epoch (seed + epoch), matching fuel's
 fresh-permutation-per-epoch contract without any driver-side index
@@ -28,7 +33,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
+import pyarrow as pa
+from pyspark.rdd import RDD
+from pyspark.serializers import NoOpSerializer
 from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from fuel_spark import schemes
 
@@ -51,16 +61,87 @@ def _stored_dtype(t: T.DataType):
     return _NUMPY_DTYPES.get(type(t))
 
 
-def _to_array(values: tuple, dtype) -> np.ndarray:
+def _to_array(values: list, dtype) -> np.ndarray:
     """One source's minibatch in its stored dtype (smallint -> int16,
     float -> float32, ...).  A NULL in a float or double column (or
     inside a float array) becomes NaN.  A NULL in an integer column has
     no numpy value, so that batch keeps numpy's inferred (object)
-    array with None in it."""
+    array with None in it.  Variable-length sequences (a ragged array
+    column) become a 1-D object array of per-example arrays, as fuel
+    yields a variable-length source."""
     try:
         return np.asarray(values, dtype=dtype)
     except TypeError:
-        return np.asarray(values)
+        if dtype is None:
+            raise
+        return _to_array(values, None)
+    except ValueError:  # inhomogeneous shape: ragged sequences
+        out = np.empty(len(values), dtype=object)
+        for i, v in enumerate(values):
+            out[i] = None if v is None else _to_array(v, dtype)
+        return out
+
+
+def _decoder(field: T.StructField):
+    """Decode one column of an Arrow message: a numpy view in the
+    stored dtype when the column has no NULL and is numeric, or a
+    fixed-width list of numbers (one ``(n, width)`` view); else the
+    list of Python values the Row path gives (naive local datetimes,
+    Rows for structs, dicts for maps), for :func:`_to_array` to
+    convert per minibatch."""
+    t = field.dataType
+    dtype = _stored_dtype(t)
+    scalar = type(t) in _NUMPY_DTYPES
+    fixed = isinstance(t, T.ArrayType) and type(t.elementType) in _NUMPY_DTYPES
+    conv = ArrowTableToRowsConversion._create_converter(t, none_on_identity=True)
+
+    def decode(col: pa.Array):
+        if scalar and col.null_count == 0:
+            return col.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+        if fixed and col.null_count == 0:
+            flat, n = col.flatten(), len(col)
+            width = len(flat) // n
+            if flat.null_count == 0 and (np.diff(col.offsets.to_numpy()) == width).all():
+                values = flat.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+                return values.reshape(n, width)
+        values = col.to_pylist()
+        return values if conv is None else [conv(v) for v in values]
+
+    return decode
+
+
+def _join(pieces: list, dtype) -> np.ndarray:
+    """One minibatch from its pieces (one per message it spans) as a
+    new, writable array: numpy pieces of one row shape concatenate;
+    otherwise every piece is brought to Python values first, so the
+    batch decodes as if its rows had arrived together."""
+    if all(isinstance(p, np.ndarray) for p in pieces) and len(
+        {p.shape[1:] for p in pieces}
+    ) == 1:
+        return np.concatenate(pieces)
+    values = []
+    for p in pieces:
+        values.extend(p.tolist() if isinstance(p, np.ndarray) else p)
+    return _to_array(values, dtype)
+
+
+def _arrow_messages(df: DataFrame) -> Iterator[pa.RecordBatch]:
+    """``df``'s rows in order as the JVM's Arrow record batches, one
+    partition at a time with the next one prefetched.
+
+    ``Dataset.toArrowBatchRdd`` is ``private[sql]``: reachable over
+    py4j on Spark Classic only (tests/test_streams.py pins it)."""
+    jconf = df.sparkSession._jconf
+    schema = to_arrow_schema(
+        df.schema, prefers_large_types=jconf.arrowUseLargeVarTypes()
+    )
+    rdd = RDD(
+        df._jdf.toArrowBatchRdd().toJavaRDD(),
+        df.sparkSession.sparkContext,
+        NoOpSerializer(),
+    )
+    for message in rdd.toLocalIterator(prefetchPartitions=True):
+        yield pa.ipc.read_record_batch(pa.py_buffer(message), schema)
 
 
 def _at_or_after(order: list[str], cursor: tuple) -> Column:
@@ -132,20 +213,38 @@ class DataStream:
 
     def _batched_iter(self, epoch: int, from_batch: int, as_dict: bool) -> Iterator:
         cols = self.df.columns
-        dtypes = [_stored_dtype(f.dataType) for f in self.df.schema.fields]
+        fields = self.df.schema.fields
+        dtypes = [_stored_dtype(f.dataType) for f in fields]
+        decoders = [_decoder(f) for f in fields]
+        size = self.batch_size
+
+        def batch(spans):
+            arrays = [
+                _join([chunks[c][a:b] for chunks, a, b in spans], dt)
+                for c, dt in enumerate(dtypes)
+            ]
+            return dict(zip(cols, arrays)) if as_dict else tuple(arrays)
 
         def gen():
             df = self._epoch_df(epoch, from_batch)
             if df is None:
                 return
-            buf: list[tuple] = []
-            for row in df.toLocalIterator(prefetchPartitions=True):
-                buf.append(tuple(row))
-                if len(buf) == self.batch_size:
-                    yield self._to_batch(buf, cols, dtypes, as_dict)
-                    buf = []
-            if buf:
-                yield self._to_batch(buf, cols, dtypes, as_dict)
+            spans, held = [], 0  # rows carried toward the next batch
+            for message in _arrow_messages(df):
+                n = message.num_rows
+                if not n:
+                    continue
+                chunks = [d(col) for d, col in zip(decoders, message.columns)]
+                i = 0
+                while i < n:
+                    take = min(size - held, n - i)
+                    spans.append((chunks, i, i + take))
+                    held, i = held + take, i + take
+                    if held == size:
+                        yield batch(spans)
+                        spans, held = [], 0
+            if spans:
+                yield batch(spans)
 
         return gen()
 
@@ -177,10 +276,3 @@ class DataStream:
 
     def reset(self) -> None:
         self._epoch = 0
-
-    @staticmethod
-    def _to_batch(rows: list[tuple], cols: list[str], dtypes: list, as_dict: bool):
-        arrays = [_to_array(col, dt) for col, dt in zip(zip(*rows), dtypes)]
-        if as_dict:
-            return dict(zip(cols, arrays))
-        return tuple(arrays)

@@ -1,12 +1,17 @@
 """DataStream epoch iteration — parity with reference
 tests/test_streams.py behaviors (epoch order, shuffling, batching)."""
 
+import datetime
+import decimal
+import itertools
+
 import numpy as np
 import pytest
+from py4j.protocol import Py4JError
 
 from fuel_spark import schemes
 from fuel_spark.sources import from_rows
-from fuel_spark.streams import DataStream
+from fuel_spark.streams import DataStream, _arrow_messages, _stored_dtype
 
 
 def _df(spark, n=10):
@@ -168,3 +173,150 @@ def test_batches_keep_stored_dtypes(spark):
     assert batch["f"].dtype == np.float32 and batch["fa"].dtype == np.float32
     assert np.isnan(batch["f"][0]) and batch["f"][1] == 2.5
     assert np.isnan(batch["fa"][0, 0]) and batch["fa"].tolist()[1] == [0.5, 1.5]
+
+
+def test_ragged_sequences_are_object_arrays_of_examples(spark):
+    """A variable-length source (the input of fuel's Padding) yields a
+    1-D object array of per-example arrays in the stored dtype; a NULL
+    element is NaN and a NULL sequence is None."""
+    seqs = [[0.5], [1.0, 2.0, None], None, [], [3.0, 4.0]]
+    df = from_rows(
+        spark, [(i, s) for i, s in enumerate(seqs)],
+        schema="k bigint, seq array<float>",
+    )
+    batches = list(DataStream(df, "k", batch_size=4).get_epoch_iterator())
+    got = [x for b in batches for x in b["seq"]]
+    assert [b["seq"].dtype for b in batches] == [object, np.float32]
+    assert batches[0]["seq"].shape == (4,) and batches[1]["seq"].shape == (1, 2)
+    assert got[2] is None
+    for x, want in zip(got, seqs):
+        if want is None:
+            continue
+        assert x.dtype == np.float32 and x.ndim == 1
+        assert np.array_equal(x, np.array(want, dtype=np.float32), equal_nan=True)
+
+
+def _row_path_to_array(values: tuple, dtype) -> np.ndarray:
+    """The pickled-Row decoder DataStream used before Arrow delivery."""
+    try:
+        return np.asarray(values, dtype=dtype)
+    except TypeError:
+        return np.asarray(values)
+
+
+def _row_path_batches(ds: DataStream, epoch: int, from_batch: int = 0) -> list:
+    """Reference batches: the epoch frame's pickled Rows through
+    ``toLocalIterator``, cut and converted column by column."""
+    df = ds._epoch_df(epoch, from_batch)
+    if df is None:
+        return []
+    dtypes = [_stored_dtype(f.dataType) for f in ds.df.schema.fields]
+    rows = [tuple(r) for r in df.toLocalIterator(prefetchPartitions=True)]
+    return [
+        {c: _row_path_to_array(v, dt) for c, v, dt in zip(ds.sources, zip(*chunk), dtypes)}
+        for chunk in (rows[i:i + ds.batch_size] for i in range(0, len(rows), ds.batch_size))
+    ]
+
+
+def _assert_same_batches(got: list, want: list) -> None:
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert list(g) == list(w)
+        for c in w:
+            a, b = g[c], w[c]
+            assert (c, a.dtype, a.shape) == (c, b.dtype, b.shape)
+            if a.dtype.kind == "f":
+                assert np.array_equal(a, b, equal_nan=True), c
+            else:
+                assert a.tolist() == b.tolist(), c
+            if a.dtype == object:
+                assert [type(x) for x in a.ravel()] == [type(x) for x in b.ravel()], c
+
+
+def _assert_owned(batches: list) -> None:
+    """Every array is writable, owns its data and overlaps no other."""
+    arrays = [a for b in batches for a in b.values()]
+    for a in arrays:
+        assert a.flags.writeable and a.flags.owndata
+    for a, b in itertools.combinations(arrays, 2):
+        assert not np.may_share_memory(a, b)
+
+
+def _mixed_rows(n: int) -> list:
+    day, t0 = datetime.date(2021, 3, 1), datetime.datetime(2021, 3, 1, 12, 0, 0)
+    return [
+        (
+            i,
+            None if i % 11 == 4 else i * 3,
+            i / 4.0,
+            None if i % 9 == 2 else i * 0.1,
+            i % 3 == 0,
+            f"s{i}" * (i % 4),
+            day + datetime.timedelta(days=i),
+            t0 + datetime.timedelta(seconds=37 * i, microseconds=i),
+            decimal.Decimal(i) / 8,
+            [i, -i, i % 5],
+            [None if i % 7 == 3 else i * 0.5, 1.0],
+            bytes([i % 256]) * (i % 3),
+            (i, f"n{i % 5}"),
+            {f"m{i % 2}": i},
+        )
+        for i in range(n)
+    ]
+
+
+MIXED = (
+    "k bigint, i int, f float, d double, b boolean, s string, dt date, "
+    "ts timestamp, dec decimal(10,3), px array<smallint>, fa array<float>, "
+    "bin binary, st struct<x: bigint, y: string>, m map<string, bigint>"
+)
+
+
+def test_arrow_batches_match_the_row_path(spark):
+    """Arrow delivery gives the Row path's batches, value for value and
+    dtype for dtype, when a batch straddles Arrow messages (3 rows per
+    message) and partitions (7 range partitions, some possibly empty),
+    for shuffled and sequential epochs, resumes and an empty frame."""
+    conf = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "3",
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        df = from_rows(spark, _mixed_rows(43), schema=MIXED)
+        for shuffled in (True, False):
+            ds = DataStream(df, "k", batch_size=5, shuffled=shuffled, seed=7)
+            for epoch in (0, 1):
+                got = list(ds.get_epoch_iterator())
+                _assert_same_batches(got, _row_path_batches(ds, epoch))
+                _assert_owned(got)
+            for k in (1, 4, 8, 9):
+                got = list(ds.resume(0, k))
+                _assert_same_batches(got, _row_path_batches(ds, 0, k))
+                _assert_owned(got)
+        empty = DataStream(df.where("k < 0"), "k", batch_size=5, shuffled=True)
+        assert list(empty.get_epoch_iterator()) == []
+        assert list(empty.resume(0, 0)) == []
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_arrow_batch_rdd_is_reachable(spark):
+    """DataStream reads epochs through ``Dataset.toArrowBatchRdd``. It
+    is ``private[sql]``, reachable over py4j only on Spark Classic, so a
+    Spark upgrade may drop or rename it: this test names that cause."""
+    df = _df(spark, 10)
+    try:
+        df._jdf.toArrowBatchRdd()
+    except Py4JError as e:
+        pytest.fail(
+            "Dataset.toArrowBatchRdd (private[sql], Spark Classic) is no "
+            f"longer reachable over py4j; DataStream delivery needs it: {e}"
+        )
+    messages = list(_arrow_messages(df.orderBy("k")))
+    assert sum(m.num_rows for m in messages) == 10
+    assert [x for m in messages for x in m.column("k").to_pylist()] == list(range(10))

@@ -1917,6 +1917,32 @@ def test_heaps_fit_growth_and_saturation(spark):
     assert r2.beta == 0.0 and str(r2.beta) == "0.0"
 
 
+def test_heaps_fit_normalizes_each_document_once(spark, monkeypatch):
+    """The frame heaps_fit materializes evaluates the normalize regex
+    once per document, and empty documents (dropped after the
+    materialize) still stay out of the id bounds."""
+    from fuel_spark.ops import text as text_mod
+
+    seen = []
+
+    def spy(df):
+        seen.append(df)
+        return real(df)
+
+    real = text_mod.materialize
+    monkeypatch.setattr(text_mod, "materialize", spy)
+    docs = [(i, " ".join(f"w{j}" for j in range(i + 1))) for i in range(1, 17)]
+    empties = [(0, "..."), (40, "")]
+    df = spark.createDataFrame(docs + empties, ["doc_id", "text"])
+    r = text_mod.heaps_fit(df, "doc_id", "text", grid=4).collect()
+    plan = seen[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_replace(lower(") == 1
+    want = text_mod.heaps_fit(
+        spark.createDataFrame(docs, ["doc_id", "text"]), "doc_id", "text", grid=4
+    ).collect()
+    assert r == want
+
+
 def test_good_turing_hand_computed(spark):
     """N_1=2, N_2=1, N_3=1 -> r*(1) = 2*N_2/N_1 = 1.0,
     r*(2) = 3*N_3/N_2 = 3.0, r*(3) undefined (no N_4)."""
