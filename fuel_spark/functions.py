@@ -63,8 +63,17 @@ def materialize(df: DataFrame) -> DataFrame:
     consumers, or one that a loop carries into the next round (which
     also keeps the loop's plan from growing with the round count).
 
+    The static side of a stream-static join is such a frame: every
+    micro-batch reads it (``streaming.serve``'s screens).  Materialized
+    when the stream is built, it is a snapshot of its sources at that
+    time, no micro-batch re-runs the aggregate behind it, and joins
+    that read the identical frame share one exchange per micro-batch
+    (ReuseExchange).  Its blocks live as long as the streaming frame
+    references them.
+
     The storage is executor-local with no lineage fallback: losing an
-    executor loses the blocks and fails the job that reads them.
+    executor loses the blocks and fails the job that reads them (for a
+    stream, that fails the query).
 
     The checkpoint is lazy in name only.  Under AQE the call runs the
     exchanges beneath it at once, while the caller's plan is still

@@ -456,11 +456,17 @@ def near_dup_stream(
 
     Stream-compatible by construction: band keys are WIDE columns
     (``minhash_band_key_cols``), so the collision check is B chained
-    stream-static LEFT OUTER joins (supported in append mode, no
-    streaming state) + a row-local null filter.  The static per-band
-    key sets broadcast when small; at scale they shuffle-join against
-    the micro-batch.  ``index`` comes from ``with_minhash_bands`` over
-    the reference corpus (materialize to parquet and reload).  Exact
+    stream-static LEFT ANTI joins (supported in append mode, no
+    streaming state).  All B joins read one static frame, the index's
+    band-qualified keys ``<band_id>:<band_key>``, materialized when the
+    stream is built (a snapshot of ``index``, see
+    ``functions.materialize``).  A doc's key ``<b>:<band_key_b>`` meets
+    only index keys of band b, and ``concat`` keeps a NULL key NULL, so
+    it never matches.  When the key set is small the B joins broadcast
+    the identical frame, so ReuseExchange runs one broadcast per
+    micro-batch, not B; at scale it shuffle-joins against the
+    micro-batch.  ``index`` comes from ``with_minhash_bands`` over the
+    reference corpus (materialize to parquet and reload).  Exact
     duplicates compose upstream via ``dedup_stream``.
     """
     from fuel_spark.ops.dedup import minhash_band_key_cols
@@ -468,21 +474,18 @@ def near_dup_stream(
     wide = minhash_band_key_cols(
         docs, id_col, text_col, num_hashes, bands, shingle_k
     )
-    # consumed once per band's static join (B times)
-    keys = materialize(index.select("band_id", "band_key"))
-    for b in range(bands):
-        idx_b = (
-            keys.where(F.col("band_id") == b)
-            .select(F.col("band_key").alias(f"_ik_{b}"))
-            .distinct()
-        )
-        wide = wide.join(
-            idx_b, wide[f"band_key_{b}"] == idx_b[f"_ik_{b}"], "left"
-        )
-    clean = wide.where(
-        " AND ".join(f"_ik_{b} IS NULL" for b in range(bands))
+    keys = materialize(
+        index.select(
+            F.concat("band_id", F.lit(":"), "band_key").alias("_ik")
+        ).distinct()
     )
-    return clean.select(*docs.columns)
+    for b in range(bands):
+        wide = wide.join(
+            keys,
+            F.concat(F.lit(f"{b}:"), f"band_key_{b}") == F.col("_ik"),
+            "left_anti",
+        )
+    return wide.select(*docs.columns)
 
 
 CMS_OUT_SCHEMA = "row_id int, counts array<long>, batch_total long"
@@ -573,20 +576,25 @@ def bloom_screen_stream(
     O(1) state instead of a growing seen-set.
 
     ``k_hashes`` chained stream-static LEFT joins (append-mode legal,
-    no state) + a row-local flag; the ≤ m_bits position table
-    broadcasts.  No false negatives by construction (Bloom 1970); the
+    no state) + a row-local flag.  All k joins read ONE static frame,
+    the distinct position set, materialized when the stream is built
+    (a snapshot of ``bloom``, see ``functions.materialize``): the
+    ≤ m_bits positions broadcast once per micro-batch, the other
+    k - 1 joins reuse that exchange, and no micro-batch re-aggregates
+    the table.  No false negatives by construction (Bloom 1970); the
     false-positive rate is the planner's
     (``ops.sketch.bloom_size_planner``).  Output: input columns +
     bloom_hit.
     """
     from fuel_spark.functions import hash_mod
 
+    pos = materialize(bloom.select("pos").distinct())
     out = candidates
     for i in range(k_hashes):
         out = out.withColumn(
             f"_pos{i}", hash_mod(f"bl{seed}h{i}", F.col(key_col), m_bits)
         )
-        b_i = bloom.select(F.col("pos").alias(f"_bp{i}")).distinct()
+        b_i = pos.select(F.col("pos").alias(f"_bp{i}"))
         out = out.join(b_i, out[f"_pos{i}"] == b_i[f"_bp{i}"], "left")
     hit = None
     for i in range(k_hashes):
@@ -699,16 +707,18 @@ def segment_screen_stream(
     FLAGGED segments (id, chunk_id, seg_hash); per-doc verdicts
     aggregate downstream where a watermark is available (keeping the
     emission segment-level is what keeps the operator stateless).
-    ``seg_index`` is the distinct seg_hash set of the reference corpus
-    (materialize from ``segment_dedup`` output or build with the same
-    chunk+md5 projection; parquet-reload in production).
+    ``seg_index`` holds the seg_hash set of the reference corpus
+    (from ``segment_dedup`` output or built with the same chunk+md5
+    projection; parquet-reload in production).  Its distinct set is
+    materialized when the stream is built, a snapshot that no
+    micro-batch re-aggregates (see ``functions.materialize``).
     """
     from fuel_spark.ops.text import chunk_documents
 
     segs = chunk_documents(
         docs, text_col, id_col, chunk_size=segment_words, stride=segment_words
     ).select(id_col, "chunk_id", F.md5(F.col("chunk_text")).alias("seg_hash"))
-    idx = seg_index.select("seg_hash").distinct()
+    idx = materialize(seg_index.select("seg_hash").distinct())
     return segs.join(idx, "seg_hash", "left_semi")
 
 
@@ -738,6 +748,11 @@ def substring_screen_stream(
     is ``substring_seeds`` over the reference corpus with columns
     renamed (ref_doc, ref_pos, gh) — materialize to parquet and
     reload in production.
+
+    Unlike the other stream-static screens, the static side is NOT
+    materialized at build time: the postings are a plain scan with no
+    per-batch aggregate to save, and materializing them would copy the
+    whole index into executor blocks.
     """
     from fuel_spark.ops.dedup import substring_seeds
 
@@ -806,11 +821,12 @@ def anomaly_screen_stream(
     production shape for online outlier triage (retrain the baseline
     batch-side, swap it under the stream).
 
-    ``baseline`` columns: ``<type_col>``, ``mean``, ``std``.
+    ``baseline`` columns: ``<type_col>``, ``mean``, ``std``.  It is
+    materialized when the stream is built, so every micro-batch reads
+    the same snapshot instead of recomputing the profile behind it
+    (see ``functions.materialize``).
     """
-    from pyspark.sql.functions import broadcast
-
-    scored = events.join(broadcast(baseline), type_col, "left")
+    scored = events.join(F.broadcast(materialize(baseline)), type_col, "left")
     z = (F.col(value_col) - F.col("mean")) / F.col("std")
     return scored.withColumn(
         "z_score", F.when(F.col("std") > 0, F.round(z, 6))

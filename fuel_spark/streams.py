@@ -55,7 +55,11 @@ _NUMPY_DTYPES = {
 
 def _stored_dtype(t: T.DataType):
     """numpy dtype of a column (array columns: of their elements), or
-    None to let numpy infer it."""
+    None to let numpy infer it.  A binary column is ``object``: numpy's
+    ``S`` items drop trailing zero bytes, so its batches are 1-D object
+    arrays of ``bytes``."""
+    if isinstance(t, T.BinaryType):
+        return object
     while isinstance(t, T.ArrayType):
         t = t.elementType
     return _NUMPY_DTYPES.get(type(t))

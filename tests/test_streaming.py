@@ -1,7 +1,9 @@
 """Structured Streaming equivalents of fuel.server — file-source micro
 batches with availableNow, and the stateful sessionizer."""
 
+import collections
 import os
+import re
 import shutil
 import tempfile
 
@@ -341,6 +343,188 @@ def test_near_dup_screen_streaming(spark, workdir):
     q.awaitTermination(120)
     kept = sorted(r.doc_id for r in spark.read.parquet(sink).collect())
     assert kept == [11]          # both index collisions screened out
+
+
+def _run_to_sink(frame, workdir, name):
+    """Run a file-source stream to a parquet sink with ``availableNow``.
+    Returns the sink path, the last micro-batch's executed plan as node
+    names (AQE's final plan), and the number of jobs of each batch in
+    the query's ``runId`` job group."""
+    sink = os.path.join(workdir, f"{name}_sink")
+    q = (
+        frame.writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", os.path.join(workdir, f"{name}_ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    nodes = [
+        re.match(r"[\s:+\-]*(?:\*\(\d+\) )?(\w+)", line).group(1)
+        for line in plan.toString().splitlines()
+    ]
+    jobs = frame.sparkSession.sparkContext._jsc.sc().statusStore().jobsList(None)
+    per_batch = collections.Counter()
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobGroup().isDefined() and job.jobGroup().get() == str(q.runId):
+            batch = re.search(r"batch = (\d+)", job.description().get())
+            per_batch[int(batch.group(1))] += 1
+    return sink, nodes, per_batch
+
+
+def _write_files(src, files):
+    """One parquet file per entry of ``files`` (a list of row dicts),
+    written without Spark, in name order."""
+    import pandas as pd
+
+    os.makedirs(src, exist_ok=True)
+    for i, rows in enumerate(files):
+        pd.DataFrame(rows).to_parquet(os.path.join(src, f"{i:03d}.parquet"))
+
+
+def test_near_dup_screen_band_qualified_keys(spark, workdir):
+    """A doc's band-b key matches index keys of band b only: a key that
+    sits in the index under another band keeps the doc, a collision on
+    any one band drops it, and a NULL index key never matches.  Batch
+    and stream both equal a pure-Python set reference: a doc is kept
+    iff no (b, band_key_b) pair is in the index, under SQL equality
+    (a NULL text sketches to empty band keys, which match the empty
+    keys of a NULL-text reference doc)."""
+    from fuel_spark.ops.dedup import minhash_band_key_cols
+
+    texts = {
+        10: "cross band key only appears under another band here",
+        11: "collides on band zero only with the reference index",
+        12: "collides on band one only with the reference index",
+        13: "collides on band two only with the reference index",
+        14: None,
+        15: "a fresh document that collides with nothing at all",
+        16: "its band two key sits under band one in the index",
+    }
+    incoming = spark.createDataFrame(
+        sorted(texts.items()), "doc_id long, text string"
+    )
+    keys = {
+        r.doc_id: (r.band_key_0, r.band_key_1, r.band_key_2)
+        for r in minhash_band_key_cols(incoming, "doc_id", "text").collect()
+    }
+    entries = [
+        (0, keys[10][1]), (1, keys[16][2]),
+        (0, keys[11][0]), (1, keys[12][1]), (2, keys[13][2]),
+        (1, ""),  # a NULL-text reference doc's band-1 key
+        (0, None), (1, None), (2, None),
+    ]
+    index = spark.createDataFrame(
+        [(100 + i, b, k) for i, (b, k) in enumerate(entries)],
+        "doc_id long, band_id int, band_key string",
+    )
+    known = {(b, k) for b, k in entries if k is not None}
+    want = {
+        d for d, ks in keys.items()
+        if not any((b, k) in known for b, k in enumerate(ks))
+    }
+    assert want == {10, 15, 16}
+    assert keys[14] == ("", "", "")
+
+    got = {r.doc_id for r in serve.near_dup_stream(incoming, index).collect()}
+    assert got == want
+
+    src = os.path.join(workdir, "bq_src")
+    _write_files(src, [[{"doc_id": d, "text": t} for d, t in sorted(texts.items())]])
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    sink, _, _ = _run_to_sink(serve.near_dup_stream(stream, index), workdir, "bq")
+    assert {r.doc_id for r in spark.read.parquet(sink).collect()} == want
+
+
+def test_near_dup_stream_shares_one_broadcast_per_micro_batch(spark, workdir):
+    """The B band joins read one materialized key set: each micro-batch
+    plan holds one BroadcastExchange, B - 1 ReusedExchanges and no
+    aggregate, and runs at most 2 jobs (the broadcast and the write)
+    after the first batch.  The index is reloaded from parquet, as in
+    production: the planner's size estimate of an in-memory
+    ``with_minhash_bands`` plan is too large to broadcast, and AQE then
+    shuffles each micro-batch before it switches to the broadcast."""
+    bands = 3
+    _, index = _corpus_and_index(spark)
+    index.write.parquet(os.path.join(workdir, "nd_index"))
+    index = spark.read.parquet(os.path.join(workdir, "nd_index"))
+    src = os.path.join(workdir, "nd_src")
+    _write_files(src, [
+        [{"doc_id": 10 * f + j, "text": f"file {f} doc {j} with a few words"}
+         for j in range(3)]
+        for f in range(3)
+    ])
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    sink, nodes, per_batch = _run_to_sink(
+        serve.near_dup_stream(stream, index, bands=bands), workdir, "nd"
+    )
+    assert nodes.count("BroadcastExchange") == 1
+    assert nodes.count("ReusedExchange") == bands - 1
+    assert not [n for n in nodes if n.endswith("Aggregate")]
+    assert sorted(per_batch) == [0, 1, 2]
+    assert all(per_batch[b] <= 2 for b in (1, 2)), per_batch
+    assert spark.read.parquet(sink).count() == 9
+
+
+def test_static_side_screens_aggregate_only_at_build(spark, workdir):
+    """bloom, segment and anomaly screens materialize their static side
+    when the stream is built: no micro-batch plan aggregates it."""
+    from fuel_spark.ops import sketch
+    from fuel_spark.ops.dedup import segment_dedup
+
+    members = spark.createDataFrame([(i,) for i in range(20)], "k bigint")
+    bloom = sketch.bloom_build(members, "k", m_bits=512, k_hashes=3)
+    _write_files(os.path.join(workdir, "k_src"), [[{"k": i} for i in range(0, 40, 3)]])
+    keys = spark.readStream.schema("k long").parquet(os.path.join(workdir, "k_src"))
+
+    ref = spark.createDataFrame(
+        [(1, "alpha beta gamma delta tail words here now")], "doc_id long, text string"
+    )
+    seg_index = segment_dedup(ref, segment_words=4).select("seg_hash")
+    _write_files(os.path.join(workdir, "d_src"), [[
+        {"doc_id": 10, "text": "x y z w alpha beta gamma delta"},
+        {"doc_id": 11, "text": "totally fresh words only every token unique"},
+    ]])
+    docs = spark.readStream.schema("doc_id long, text string").parquet(
+        os.path.join(workdir, "d_src")
+    )
+
+    history = spark.createDataFrame(
+        [("buy", 8.0 + i % 5) for i in range(20)], "event_type string, value double"
+    )
+    baseline = history.groupBy("event_type").agg(
+        F.avg("value").alias("mean"), F.stddev("value").alias("std")
+    )
+    _write_files(os.path.join(workdir, "e_src"), [[
+        {"event_type": "buy", "value": 10.0}, {"event_type": "buy", "value": 90.0},
+    ]])
+    events = spark.readStream.schema("event_type string, value double").parquet(
+        os.path.join(workdir, "e_src")
+    )
+
+    screens = {
+        "bloom": serve.bloom_screen_stream(keys, bloom, "k", 512, 3),
+        "segment": serve.segment_screen_stream(docs, seg_index, segment_words=4),
+        "anomaly": serve.anomaly_screen_stream(events, baseline),
+    }
+    got = {}
+    for name, frame in screens.items():
+        sink, nodes, _ = _run_to_sink(frame, workdir, name)
+        assert not [n for n in nodes if n.endswith("Aggregate")], (name, nodes)
+        got[name] = spark.read.parquet(sink).collect()
+    assert all(r.bloom_hit for r in got["bloom"] if r.k < 20)
+    assert [(r.doc_id, r.chunk_id) for r in got["segment"]] == [(10, 1)]
+    assert sorted((r.value, r.is_anomaly) for r in got["anomaly"]) == [
+        (10.0, False), (90.0, True)
+    ]
 
 
 def test_pack_tokens_stateful_spans_micro_batches(spark, workdir):

@@ -8,6 +8,7 @@ import itertools
 import numpy as np
 import pytest
 from py4j.protocol import Py4JError
+from pyspark.sql import types as T
 
 from fuel_spark import schemes
 from fuel_spark.sources import from_rows
@@ -196,6 +197,23 @@ def test_ragged_sequences_are_object_arrays_of_examples(spark):
         assert np.array_equal(x, np.array(want, dtype=np.float32), equal_nan=True)
 
 
+def test_binary_batches_keep_trailing_zero_bytes(spark):
+    """A binary source yields 1-D object arrays of ``bytes``, value for
+    value, trailing zero bytes and NULLs included."""
+    values = [b"ab\x00\x00", b"\x00", b"", None, b"c"]
+    df = from_rows(
+        spark, list(enumerate(values)), schema="k bigint, bin binary"
+    )
+    for frame in (df, df.where("bin IS NOT NULL")):
+        want = [v for v in values if frame is df or v is not None]
+        batches = list(DataStream(frame, "k", batch_size=3).get_epoch_iterator())
+        for b in batches:
+            assert b["bin"].dtype == object and b["bin"].ndim == 1
+        got = [x for b in batches for x in b["bin"]]
+        assert got == want
+        assert {type(x) for x in got} <= {bytes, type(None)}
+
+
 def _row_path_to_array(values: tuple, dtype) -> np.ndarray:
     """The pickled-Row decoder DataStream used before Arrow delivery."""
     try:
@@ -210,7 +228,12 @@ def _row_path_batches(ds: DataStream, epoch: int, from_batch: int = 0) -> list:
     df = ds._epoch_df(epoch, from_batch)
     if df is None:
         return []
-    dtypes = [_stored_dtype(f.dataType) for f in ds.df.schema.fields]
+    # a binary column is an object array of bytes: numpy's S items
+    # would drop trailing zero bytes
+    dtypes = [
+        object if isinstance(f.dataType, T.BinaryType) else _stored_dtype(f.dataType)
+        for f in ds.df.schema.fields
+    ]
     rows = [tuple(r) for r in df.toLocalIterator(prefetchPartitions=True)]
     return [
         {c: _row_path_to_array(v, dt) for c, v, dt in zip(ds.sources, zip(*chunk), dtypes)}
