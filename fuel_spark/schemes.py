@@ -23,7 +23,7 @@ within each partition with zero shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from fuel_spark.functions import det_key
 
@@ -44,6 +44,17 @@ def scheme_order(
     if shuffled:
         return df.withColumn("_ord", det_key(seed, F.col(key))), ["_ord", key]
     return df, [key]
+
+
+def shuffled_partition(n: int) -> Column:
+    """The partition in ``[0, n)`` of a row of a shuffled
+    :func:`scheme_order`: the top 32 bits of its md5 key ``_ord``,
+    scaled to ``n``.  md5 is uniform, so ``repartitionById(n, ...)``
+    spreads rows evenly with no range-bound sample, and the id never
+    falls as ``_ord`` rises, so the partitions in id order, each
+    sorted by the order columns, are the scheme's order."""
+    top = F.conv(F.substring("_ord", 1, 8), 16, 10).cast("bigint")
+    return F.shiftright(top * F.lit(n), 32).cast("int")
 
 
 def with_positions(

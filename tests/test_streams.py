@@ -1,18 +1,25 @@
 """DataStream epoch iteration — parity with reference
 tests/test_streams.py behaviors (epoch order, shuffling, batching)."""
 
+import contextlib
 import datetime
 import decimal
+import gc
+import hashlib
 import itertools
+import sys
+import threading
+import time
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from py4j.protocol import Py4JError
 from pyspark.sql import types as T
 
-from fuel_spark import schemes
+from fuel_spark import schemes, streams
 from fuel_spark.sources import from_rows
-from fuel_spark.streams import DataStream, _arrow_messages, _stored_dtype
+from fuel_spark.streams import DataStream, _arrow_partitions, _stored_dtype
 
 
 def _df(spark, n=10):
@@ -129,9 +136,11 @@ def test_resume_at_a_null_key(spark, shuffled):
 
 @pytest.mark.parametrize("shuffled", [True, False])
 def test_epoch_is_one_sort_built_without_jobs(spark, shuffled):
-    """An epoch's frame is one range-partitioned sort of the payload:
-    building it runs no Spark job (no positions pass, no checkpoint),
-    and its plan has one range exchange and no broadcast."""
+    """An epoch's frame is one parallel sort of the payload: building
+    it runs no Spark job (no positions pass, no checkpoint), and its
+    plan has one exchange and no broadcast.  A shuffled epoch's
+    exchange goes by its md5 key's partition, so it needs no range
+    sample; a sequential epoch is range-partitioned."""
     sc = spark.sparkContext
     ds = DataStream(_df(spark, 50), "k", batch_size=8, shuffled=shuffled)
     group = f"test-streams-build-{shuffled}"
@@ -142,9 +151,186 @@ def test_epoch_is_one_sort_built_without_jobs(spark, shuffled):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     plan = epoch._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("rangepartitioning") == 1
+    assert plan.count("Exchange") == 1
+    assert plan.count("rangepartitioning") == (0 if shuffled else 1)
     assert "BroadcastExchange" not in plan
     assert epoch.columns == ["k", "v"]
+
+
+def _jobs(sc) -> list[tuple]:
+    """``(group, tags, status)`` of every job Spark's status store holds."""
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.length()):
+        j = jobs.apply(i)
+        group = j.jobGroup().get() if j.jobGroup().isDefined() else None
+        tags = set(j.jobTags().mkString("\n").split("\n"))
+        out.append((group, tags, j.status().toString()))
+    return out
+
+
+def _settled_jobs(sc, tag: str, timeout: float = 30.0) -> list[tuple]:
+    """The jobs carrying ``tag``, once none of them is running (the
+    status store hears of a job's end a moment after the job ends)."""
+    deadline = time.monotonic() + timeout
+    while True:
+        jobs = [j for j in _jobs(sc) if tag in j[1]]
+        if all(status != "RUNNING" for _, _, status in jobs):
+            return jobs
+        assert time.monotonic() < deadline, f"jobs tagged {tag} still running"
+        time.sleep(0.1)
+
+
+@contextlib.contextmanager
+def _conf(spark, **conf):
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_shuffled_epoch_runs_one_shuffle_and_one_job_per_partition(spark):
+    """A shuffled epoch at width 4 runs 5 jobs: the shuffle, then one per
+    partition, and no range-bound sample job."""
+    sc = spark.sparkContext
+    with _conf(spark, **{"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+        ds = DataStream(_df(spark, 200), "k", batch_size=16, shuffled=True)
+        assert len([k for b in ds.get_epoch_iterator() for k in b["k"]]) == 200
+        assert len(_settled_jobs(sc, f"{ds.job_tag}-0")) == 1 + 4
+
+
+def test_abandoned_epoch_leaves_no_job_or_thread(spark):
+    """Abandon an epoch halfway, reset and drop the stream: within a
+    bounded wait no job carrying the stream's tag runs and no producer
+    thread is alive."""
+    sc = spark.sparkContext
+    with _conf(spark, **{"spark.sql.shuffle.partitions": "7",
+                         "spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+        ds = DataStream(_df(spark, 400), "k", batch_size=10, shuffled=True)
+        tag = ds.job_tag
+        it = ds.get_epoch_iterator()
+        for _ in range(20):
+            next(it)
+        assert any(t.name.startswith(tag) for t in threading.enumerate())
+        del it
+        ds.reset()
+        del ds
+        gc.collect()
+        assert _settled_jobs(sc, tag)  # the stream did run jobs
+        _wait_for_no_producer(tag)
+
+
+def _wait_for_no_producer(*tags: str, timeout: float = 30.0) -> None:
+    deadline = time.monotonic() + timeout
+    while any(t.name.startswith(tags) for t in threading.enumerate()):
+        assert time.monotonic() < deadline, "a producer thread outlived its stream"
+        time.sleep(0.1)
+
+
+def test_producer_error_reaches_the_consumer_at_its_batch(spark, monkeypatch):
+    """Batches from the partitions read before a producer raised come
+    out; the exception is raised at the next batch."""
+    schema = pa.schema([("k", pa.int64()), ("v", pa.float64())])
+
+    def failing(df):
+        yield [pa.record_batch([pa.array(range(10)), pa.array([0.5] * 10)], schema=schema)]
+        raise RuntimeError("partition 1 failed")
+
+    monkeypatch.setattr(streams, "_arrow_partitions", failing)
+    it = DataStream(_df(spark, 20), "k", batch_size=4).get_epoch_iterator()
+    assert [next(it)["k"].tolist() for _ in range(2)] == [[0, 1, 2, 3], [4, 5, 6, 7]]
+    with pytest.raises(RuntimeError, match="partition 1 failed"):
+        next(it)
+
+
+def test_next_epoch_runs_under_the_callers_job_group(spark):
+    """Epoch e + 1 is built ahead under the job group of the caller of
+    epoch e, and the lookahead is the epoch handed out next, whatever
+    its ``as_dict``."""
+    sc = spark.sparkContext
+    ds = DataStream(_df(spark, 60), "k", batch_size=8, shuffled=True, seed=9)
+    sc.setJobGroup("test-streams-epoch-0", "epoch 0")
+    try:
+        e0 = [b["k"].tolist() for b in ds.get_epoch_iterator()]
+        ahead = ds._ahead[1]
+        sc.setJobGroup("test-streams-epoch-1", "epoch 1")
+        e1 = [b[0].tolist() for b in ds.get_epoch_iterator(as_dict=False)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert e0 != e1
+    jobs = _settled_jobs(sc, ahead.tag)
+    assert jobs and {group for group, _, _ in jobs} == {"test-streams-epoch-0"}
+    assert all(ds.job_tag in tags for _, tags, _ in jobs)
+
+
+def _digest(keys) -> str:
+    return hashlib.sha256(np.asarray(keys, dtype=np.int64).tobytes()).hexdigest()
+
+
+def _order_by_digest(df, seed: int, skip: int = 0) -> str:
+    """The scheme order as one global ``orderBy`` gives it."""
+    d, order = schemes.scheme_order(df, "k", True, seed)
+    return _digest([r["k"] for r in d.orderBy(*order).collect()][skip:])
+
+
+def test_concurrent_streams_under_fast_thread_switching(spark):
+    """More consumer threads than cores, each with its own stream, and
+    the interpreter switching threads every few microseconds: every
+    epoch keeps its order, and no producer thread outlives its stream,
+    an abandoned epoch's included."""
+    df = _df(spark, 40)
+    want = [_order_by_digest(df, 5 + e) for e in range(2)]
+    errors, tags = [], []
+
+    def consume():
+        try:
+            ds = DataStream(df, "k", batch_size=3, shuffled=True, seed=5)
+            tags.append(ds.job_tag)
+            for e in range(2):
+                got = [k for b in ds.get_epoch_iterator() for k in b["k"]]
+                assert _digest(got) == want[e], e
+            next(ds.get_epoch_iterator())  # epoch 2 is abandoned
+        except Exception as e:  # reported by the main thread
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=consume) for _ in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(tags) == 6
+    gc.collect()
+    _wait_for_no_producer(*tags)
+
+
+@pytest.mark.parametrize(
+    "width,coalesce",
+    [pytest.param(w, c, marks=() if (w, c) == (7, "true") else pytest.mark.slow)
+     for w in (1, 3, 7) for c in ("false", "true")],
+)
+def test_epoch_order_is_width_invariant(spark, width, coalesce):
+    """Epochs 0-2 and a mid-epoch resume give the order digests of a
+    global ``orderBy`` of the scheme order, at any shuffle width, with
+    AQE coalescing on or off."""
+    df = _df(spark, 120)
+    with _conf(spark, **{"spark.sql.shuffle.partitions": str(width),
+                         "spark.sql.adaptive.coalescePartitions.enabled": coalesce}):
+        ds = DataStream(df, "k", batch_size=16, shuffled=True, seed=21)
+        for e in range(3):
+            got = [k for b in ds.get_epoch_iterator() for k in b["k"]]
+            assert _digest(got) == _order_by_digest(df, 21 + e), e
+        got = [k for b in ds.resume(0, 3) for k in b["k"]]
+        assert _digest(got) == _order_by_digest(df, 21, skip=3 * 16)
 
 
 def test_batches_keep_stored_dtypes(spark):
@@ -212,6 +398,26 @@ def test_binary_batches_keep_trailing_zero_bytes(spark):
         got = [x for b in batches for x in b["bin"]]
         assert got == want
         assert {type(x) for x in got} <= {bytes, type(None)}
+
+
+def test_binary_array_batches_keep_every_byte(spark):
+    """An ``array<binary>`` source keeps every byte: a fixed-width batch
+    is a 2-D object array of ``bytes``, a ragged one a 1-D object array
+    of per-example 1-D object arrays (None for a NULL sequence)."""
+    rows = [(0, [b"a\x00", b"\x00"]), (1, [b"", b"b\x00\x00"]),
+            (2, [b"\x00\x00\x00"]), (3, None), (4, [b"c", b"d", b"\x00"])]
+    df = from_rows(spark, rows, schema="k bigint, bins array<binary>")
+    fixed, ragged, _ = DataStream(df, "k", batch_size=2).get_epoch_iterator()
+    assert fixed["bins"].dtype == object and fixed["bins"].shape == (2, 2)
+    assert fixed["bins"].tolist() == [[b"a\x00", b"\x00"], [b"", b"b\x00\x00"]]
+    assert ragged["bins"].dtype == object and ragged["bins"].shape == (2,)
+    assert ragged["bins"][1] is None
+    example = ragged["bins"][0]
+    assert example.dtype == object and example.ndim == 1
+    assert example.tolist() == [b"\x00\x00\x00"]
+    tail = next(DataStream(df, "k", batch_size=8).get_epoch_iterator())["bins"]
+    assert [None if x is None else x.tolist() for x in tail] == [r[1] for r in rows]
+    assert {type(b) for x in tail if x is not None for b in x} == {bytes}
 
 
 def _row_path_to_array(values: tuple, dtype) -> np.ndarray:
@@ -340,6 +546,6 @@ def test_arrow_batch_rdd_is_reachable(spark):
             "Dataset.toArrowBatchRdd (private[sql], Spark Classic) is no "
             f"longer reachable over py4j; DataStream delivery needs it: {e}"
         )
-    messages = list(_arrow_messages(df.orderBy("k")))
+    messages = [m for part in _arrow_partitions(df.orderBy("k")) for m in part]
     assert sum(m.num_rows for m in messages) == 10
     assert [x for m in messages for x in m.column("k").to_pylist()] == list(range(10))
