@@ -23,6 +23,13 @@ from fuel_spark.functions import materialize, words
 from fuel_spark.ops.text import _doc_stats
 
 
+def _n_words(text_col: str):
+    """Per-document word count of text column ``text_col``: the word
+    count of ``_doc_stats`` (a blank text is one word, ``""``)."""
+    t = F.col(text_col)
+    return _doc_stats(t, words(t))[0]
+
+
 def domain_mixture_weights(
     df: DataFrame,
     domain_col: str,
@@ -45,7 +52,7 @@ def domain_mixture_weights(
     Output: domain, n_tokens, weight, epochs_at_budget.
     """
     toks = (
-        df.select(F.col(domain_col), F.size(words(F.col(text_col))).alias("_n"))
+        df.select(F.col(domain_col), _n_words(text_col).alias("_n"))
         .groupBy(domain_col)
         .agg(F.sum("_n").cast("bigint").alias("n_tokens"))
     )
@@ -89,7 +96,7 @@ def packing_efficiency(
 
     Output: bin_lo, n_docs, n_tokens, n_padded, n_waste, waste_rate.
     """
-    n = F.size(words(F.col(text_col))).cast("bigint")
+    n = _n_words(text_col).cast("bigint")
     return (
         df.select(n.alias("_n"))
         # integer ceil/floor via DIV — no float truncation semantics
@@ -146,7 +153,7 @@ def curriculum_phases(
             F.count(F.lit(1)).alias("n_docs"),
             F.min(score_col).alias("min_score"),
             F.max(score_col).alias("max_score"),
-            F.sum(F.size(words(F.col(text_col))))
+            F.sum(_n_words(text_col))
             .cast("bigint")
             .alias("n_tokens"),
         )
@@ -230,7 +237,7 @@ def truncation_savings(
     Output: prob, cutoff_len, docs_truncated, tokens_saved,
     frac_saved.
     """
-    n = F.size(words(F.col(text_col))).cast("bigint")
+    n = _n_words(text_col).cast("bigint")
     # consumed 2 + len(probs)x: the grid, the total and each prob's
     # savings pass
     lens = materialize(df.select(n.alias("_n")))
@@ -310,7 +317,7 @@ def mixture_schedule_slots(
     """
     # consumed 2x: the total and the apportionment select
     toks = materialize(
-        df.select(F.col(domain_col), F.size(words(F.col(text_col))).alias("_n"))
+        df.select(F.col(domain_col), _n_words(text_col).alias("_n"))
         .groupBy(domain_col)
         .agg(F.sum("_n").cast("bigint").alias("n_tokens"))
     )
@@ -358,7 +365,7 @@ def snapshot_length_psi(
     bin_lo, n_old, n_new, psi_term.
     """
     def bins(df: DataFrame, cname: str) -> DataFrame:
-        n = F.size(words(F.col(text_col))).cast("bigint")
+        n = _n_words(text_col).cast("bigint")
         return (
             df.select(n.alias("_n"))
             .withColumn("bin_lo", F.expr(f"_n DIV {bin_size} * {bin_size}"))
@@ -478,7 +485,7 @@ def token_gini(
 
     Output (1 row): n_docs, total_tokens, gini.
     """
-    n = F.size(words(F.col(text_col))).cast("bigint")
+    n = _n_words(text_col).cast("bigint")
     grid = (
         df.select(n.alias("_n"))
         .groupBy("_n")
@@ -533,7 +540,7 @@ def packing_concat_vs_pad(
     Output: domain, n_docs, n_tokens, pad_sequences, concat_sequences,
     sequences_saved, save_rate.
     """
-    n = F.size(words(F.col(text_col))).cast("bigint")
+    n = _n_words(text_col).cast("bigint")
     per = df.select(F.col(domain_col), n.alias("_n")).withColumn(
         "_pads", F.expr(f"(_n + {seq_len - 1}) DIV {seq_len}")
     )
@@ -715,7 +722,7 @@ def packing_seqlen_sweep(
 
     Output: seq_len, n_docs, n_tokens, n_padded, waste_rate.
     """
-    n = F.size(words(F.col(text_col))).cast("bigint")
+    n = _n_words(text_col).cast("bigint")
     per = df.select(n.alias("_n"))
     aggs = [
         F.count(F.lit(1)).alias("_nd"),
@@ -788,7 +795,7 @@ def unimax_allocation(
     """
     # consumed 2x per unrolled round: the agg and the crossJoin side
     toks = materialize(
-        df.select(F.col(domain_col), F.size(words(F.col(text_col))).alias("_n"))
+        df.select(F.col(domain_col), _n_words(text_col).alias("_n"))
         .groupBy(domain_col)
         .agg(F.sum("_n").cast("bigint").alias("n_tokens"))
         .withColumn(
@@ -875,7 +882,7 @@ def shard_skew_sweep(
         ]
     )
     per = df.select(
-        F.size(words(F.col(text_col))).cast("bigint").alias("_t"),
+        _n_words(text_col).cast("bigint").alias("_t"),
         F.explode(buckets).alias("_b"),
     ).select("_t", "_b.n_shards", "_b.shard")
     grid = per.groupBy("n_shards", "shard").agg(
@@ -1266,7 +1273,7 @@ def mixture_after_dedup(
     base = df.select(
         F.col(domain_col).alias("_d"),
         F.md5(F.col(text_col)).alias("_dig"),
-        F.size(words(F.col(text_col))).cast("bigint").alias("_n"),
+        _n_words(text_col).cast("bigint").alias("_n"),
     )
     before = base.groupBy("_d").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

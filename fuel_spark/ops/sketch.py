@@ -218,6 +218,12 @@ def cms_build(
     one map-side-combinable count shuffle onto ≤ depth·width cells.
     At 100 TB the combine collapses each task's contribution to at
     most depth·width partial rows before anything moves.
+
+    On a streaming frame it is the streaming Count-Min sketch: an
+    update-mode aggregation whose state is the cell table itself
+    (≤ depth·width keys, forever), each micro-batch re-emitting the
+    cells it touched with their running counts.  The latest emission
+    per cell is the batch sketch of every row seen so far.
     """
     parts = [
         df.select(
@@ -327,19 +333,31 @@ def bloom_build(
     m_bits: int = 4096,
     k_hashes: int = 3,
     seed: int = 5,
+    *,
+    group_col: str | None = None,
 ) -> DataFrame:
     """Bloom filter build as a POSITION TABLE: the distinct bit
     positions set by ``k_hashes`` md5 hash functions over the member
     keys.  ≤ m_bits rows total — a representation that unions
     (mergeable), broadcasts, and oracle-checks, where a packed bitmap
-    would need engine-specific bit twiddling.
+    would need engine-specific bit twiddling.  With ``group_col``, one
+    filter per group: (group_col, pos), ≤ m_bits rows per group.
 
     Shuffle story: k narrow scans unioned, one distinct onto ≤ m_bits
     rows (map-side combine collapses each task to ≤ m_bits partials).
+
+    On a streaming frame it is the streaming Bloom build: the distinct
+    runs as the engine's streaming deduplication, whose state is the
+    position table itself (≤ m_bits keys per group, forever), each
+    micro-batch emitting the positions it sets for the first time.
+    The union of its emissions is the batch filter of every row seen
+    so far.
     """
+    group = [F.col(group_col)] if group_col else []
     parts = [
         df.select(
-            hash_mod(f"bl{seed}h{i}", F.col(key_col), m_bits).alias("pos")
+            *group,
+            hash_mod(f"bl{seed}h{i}", F.col(key_col), m_bits).alias("pos"),
         )
         for i in range(k_hashes)
     ]
@@ -542,7 +560,12 @@ def _hll_registers(
 ) -> DataFrame:
     """Per-group HLL register table: (group, _b bucket, _m max rank).
     ≤ m rows per group; the mergeable representation (union register
-    tables, per-register MAX — see :func:`hll_merge_certificate`)."""
+    tables, per-register MAX — see :func:`hll_merge_certificate`).
+
+    On a streaming frame it is the streaming HLL: an update-mode
+    aggregation whose state is the register table itself (≤ groups·m
+    keys, forever); the latest emission per register is the batch
+    register of every row seen so far."""
     h = hash_mod(f"hllr{seed}", F.col(key_col), 1 << 52)
     bucket = hash_mod(f"hllb{seed}", F.col(key_col), m)
     rank = F.expr(f"53 - {_bitlen_case('_h')}")

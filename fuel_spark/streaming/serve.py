@@ -488,78 +488,6 @@ def near_dup_stream(
     return wide.select(*docs.columns)
 
 
-CMS_OUT_SCHEMA = "row_id int, counts array<long>, batch_total long"
-CMS_STATE_SCHEMA = "counts array<long>"
-
-
-def cms_stream(
-    events: DataFrame,
-    key_col: str,
-    depth: int = 3,
-    width: int = 256,
-    seed: int = 11,
-) -> DataFrame:
-    """Streaming Count-Min sketch as a BOUNDED-STATE stateful
-    operator: per hash row, the width-sized counter array folds each
-    micro-batch in, so state is O(depth·width) FOREVER regardless of
-    stream length or key cardinality — the same bounded-state
-    property as :func:`heavy_hitters_stream`, holding full
-    frequency-estimation structure instead of a top-k.  Point queries
-    run against the latest emission with ``ops.sketch.cms_estimate``
-    semantics (min over rows of the addressed cell).
-
-    The hash family is IDENTICAL to the batch
-    :func:`fuel_spark.ops.sketch.cms_build` (same md5 seeds), so the
-    streamed sketch equals the batch sketch of the same rows
-    cell-for-cell — pinned by test, the streaming twin of the CMS
-    merge certificate.  Each event pre-projects to ``depth``
-    (row_id, col_id) rows (a narrow union, no state); the stateful
-    group key is row_id, so parallelism is depth-wide — right for a
-    sketch whose whole point is being tiny; shard the KEY SPACE into
-    several sketches upstream if a single firehose saturates.
-
-    Update-mode semantics: each batch re-emits every row's CURRENT
-    counter array (superseding earlier emissions).  Output: row_id,
-    counts (width longs), batch_total.
-    """
-    import pandas as pd
-
-    from fuel_spark.functions import hash_mod
-
-    parts = [
-        events.select(
-            F.lit(i).cast("int").alias("_row"),
-            hash_mod(f"cms{seed}r{i}", F.col(key_col), width).alias("_col"),
-        )
-        for i in range(depth)
-    ]
-    prepared = parts[0]
-    for p in parts[1:]:
-        prepared = prepared.unionByName(p)
-
-    def fn(key, pdfs, state: GroupState):
-        (row_id,) = key
-        counts = list(state.get[0]) if state.exists else [0] * width
-        seen = 0
-        for pdf in pdfs:
-            for c in pdf["_col"].to_numpy():
-                counts[int(c)] += 1
-                seen += 1
-        state.update(([int(x) for x in counts],))
-        yield pd.DataFrame(
-            [(row_id, [int(x) for x in counts], seen)],
-            columns=["row_id", "counts", "batch_total"],
-        )
-
-    return prepared.groupBy("_row").applyInPandasWithState(
-        fn,
-        outputStructType=CMS_OUT_SCHEMA,
-        stateStructType=CMS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def bloom_screen_stream(
     candidates: DataFrame,
     bloom: DataFrame,
@@ -1115,34 +1043,37 @@ def sessionize_native(
 def _sliced_restart_runs(
     spark: SparkSession,
     df: DataFrame,
-    slice_col: str,
-    schema_ddl: str,
-    workdir: str,
+    workdir: str | None,
     n_runs: int,
     build_query,
     output_mode: str = "update",
 ) -> list[list]:
     """Shared restart harness for the resume certificates: split
-    ``df`` into ``n_runs`` deterministic slices (``slice_col`` mod
+    ``df`` into ``n_runs`` deterministic slices (its column ``k`` mod
     n_runs), stage slice i as a new source file, and run the stream
     built by ``build_query`` with trigger availableNow against ONE
-    shared checkpoint — so every run after the first restores its
-    operator state from the state store, exactly a production
-    restart.  Returns the collected foreachBatch rows of EVERY run in
-    chronological order — update-mode state is cumulative, so a
-    group's latest emission across all runs IS its final state even
-    when no key of that group falls in the last slice's residue
-    class (callers fold latest-wins per group); returning only the
-    final run would silently drop such groups on skewed fixtures.
+    shared checkpoint (under ``workdir``, a new temporary directory
+    when None) — so every run after the first restores its operator
+    state from the state store, exactly a production restart.  The
+    stream reads ``df``'s own schema.  Returns the collected
+    foreachBatch rows of EVERY run in chronological order —
+    update-mode state is cumulative, so a group's latest emission
+    across all runs IS its final state even when no key of that group
+    falls in the last slice's residue class (see
+    :func:`_resumed_state`); returning only the final run would
+    silently drop such groups on skewed fixtures.
 
     Test apparatus by design — the production ops are the bounded-
-    state streams themselves; the driver-side read here is the final
-    emission only, sketch-sized by each stream's own contract.
+    state streaming operators themselves; the driver-side read here is
+    their emissions only, sketch-sized by each operator's own
+    contract.
     """
     import glob
     import os
     import shutil
+    import tempfile
 
+    workdir = workdir or tempfile.mkdtemp(prefix="fuel_spark_resume_")
     src = os.path.join(workdir, "src")
     ckpt = os.path.join(workdir, "ckpt")
     os.makedirs(src, exist_ok=True)
@@ -1150,12 +1081,12 @@ def _sliced_restart_runs(
     for run in range(int(n_runs)):
         stage = os.path.join(workdir, f"stage{run}")
         df.where(
-            F.pmod(F.col(slice_col), F.lit(int(n_runs))) == run
+            F.pmod(F.col("k"), F.lit(int(n_runs))) == run
         ).coalesce(1).write.mode("overwrite").parquet(stage)
         for part in glob.glob(os.path.join(stage, "part-*.parquet")):
             shutil.copy(part, os.path.join(src, f"{run:03d}.parquet"))
         batches: list[list] = []
-        stream = spark.readStream.schema(schema_ddl).parquet(src)
+        stream = spark.readStream.schema(df.schema).parquet(src)
         q = (
             build_query(stream)
             .writeStream.outputMode(output_mode)
@@ -1169,6 +1100,27 @@ def _sliced_restart_runs(
     return all_batches
 
 
+def _resumed_state(
+    spark: SparkSession,
+    df: DataFrame,
+    workdir: str | None,
+    n_runs: int,
+    build_query,
+    key_cols: tuple[str, ...],
+    out_ddl: str,
+) -> DataFrame:
+    """The final state of an update-mode stream across restarts: the
+    emissions of :func:`_sliced_restart_runs`, folded latest-wins per
+    ``key_cols`` (a row supersedes every earlier row with the same
+    key values), as a frame of ``out_ddl`` — whose columns are, in
+    order, those of the stream's emission.  Rows are sorted by key."""
+    latest: dict[tuple, tuple] = {}
+    for rows in _sliced_restart_runs(spark, df, workdir, n_runs, build_query):
+        for r in rows:
+            latest[tuple(r[c] for c in key_cols)] = tuple(r)
+    return spark.createDataFrame([latest[k] for k in sorted(latest)], out_ddl)
+
+
 def cms_resume_certificate(
     spark: SparkSession,
     df: DataFrame,
@@ -1179,8 +1131,9 @@ def cms_resume_certificate(
     seed: int = 11,
     n_runs: int = 2,
 ) -> DataFrame:
-    """Checkpoint-RESUME certificate for the streaming CMS: slices fed
-    in SEPARATE availableNow runs against one checkpoint (see
+    """Checkpoint-RESUME certificate for the streaming CMS
+    (``ops.sketch.cms_build`` on a stream): slices fed in SEPARATE
+    availableNow runs against one checkpoint (see
     :func:`_sliced_restart_runs`), final counter state returned as a
     (row_id, col_id, cnt) cell table.  Because CMS cells are order-
     and batching-independent (each is an exact count of hashed
@@ -1191,30 +1144,18 @@ def cms_resume_certificate(
     ``sessionize_stateful`` two-run pattern applied to the sketch
     family, VERDICT r7 ask #4).
     """
-    import tempfile
+    from fuel_spark.ops.sketch import cms_build
 
-    workdir = workdir or tempfile.mkdtemp(prefix="fuel_spark_cms_resume_")
     keyed = df.select(F.col(key_col).cast("long").alias("k")).where(
         F.col("k").isNotNull()
     )
-    final_runs = _sliced_restart_runs(
-        spark, keyed, "k", "k long", workdir, n_runs,
-        lambda stream: cms_stream(
+    return _resumed_state(
+        spark, keyed, workdir, n_runs,
+        lambda stream: cms_build(
             stream, "k", depth=depth, width=width, seed=seed
         ),
-    )
-    final: dict[int, list[int]] = {}
-    for rows in final_runs:
-        for r in rows:
-            final[int(r.row_id)] = [int(x) for x in r.counts]
-    cells = [
-        (row_id, col_id, cnt)
-        for row_id, counts in sorted(final.items())
-        for col_id, cnt in enumerate(counts)
-        if cnt > 0
-    ]
-    return spark.createDataFrame(
-        cells, "row_id int, col_id int, cnt bigint"
+        ("row_id", "col_id"),
+        "row_id int, col_id int, cnt bigint",
     )
 
 
@@ -1245,96 +1186,15 @@ def kmv_resume_certificate(
     columns need the raw data, which a resumed stream no longer has —
     by design).
     """
-    import tempfile
-
-    workdir = workdir or tempfile.mkdtemp(prefix="fuel_spark_kmv_resume_")
     keyed = df.select(
         F.col(group_col).cast("string").alias("g"),
         F.col(key_col).cast("long").alias("k"),
     ).where(F.col("k").isNotNull() & F.col("g").isNotNull())
-    final_runs = _sliced_restart_runs(
-        spark, keyed, "k", "g string, k long", workdir, n_runs,
+    return _resumed_state(
+        spark, keyed, workdir, n_runs,
         lambda stream: kmv_stream(stream, "g", "k", k=k, seed=seed),
-    )
-    latest: dict[str, tuple] = {}
-    for rows in final_runs:
-        for r in rows:
-            latest[r.group] = (
-                r.group, int(r.n_sketch), float(r.theta),
-                float(r.est_distinct),
-            )
-    return spark.createDataFrame(
-        sorted(latest.values()),
+        ("group",),
         "group string, n_sketch bigint, theta double, est_distinct double",
-    )
-
-
-HLL_OUT_SCHEMA = "group string, regs array<int>, batch_n long"
-HLL_STATE_SCHEMA = "regs array<int>"
-
-
-def hll_stream(
-    events: DataFrame,
-    group_col: str,
-    key_col: str,
-    m: int = 256,
-    seed: int = 13,
-) -> DataFrame:
-    """Streaming HyperLogLog as a BOUNDED-STATE stateful operator:
-    per group, ``m`` registers hold the max leading-zero rank, so
-    state is O(m) FOREVER — the register member of the bounded-state
-    family (CMS counters, KMV arg-min keys, Misra–Gries top-k, KLL
-    ladder).  The bucket and rank are computed JVM-side BEFORE the
-    stateful op (the same md5 family and generated bit-length CASE as
-    the batch ``ops.sketch._hll_registers``), so the Python worker
-    only folds integer maxima — and the streamed register table
-    equals the batch one cell-for-cell, which
-    :func:`hll_resume_certificate` pins across a restart.
-
-    Update-mode semantics: each batch re-emits the group's CURRENT
-    register array.  Output: group, regs (m ints, 0 = empty),
-    batch_n.
-    """
-    import pandas as pd
-
-    from fuel_spark.functions import hash_mod
-    from fuel_spark.ops.sketch import _bitlen_case
-
-    prepared = (
-        events.select(
-            F.col(group_col).cast("string").alias("_g"),
-            hash_mod(f"hllb{seed}", F.col(key_col), m).alias("_b"),
-            hash_mod(f"hllr{seed}", F.col(key_col), 1 << 52).alias("_h"),
-        )
-        .withColumn("_r", F.expr(f"53 - {_bitlen_case('_h')}"))
-        .drop("_h")
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        (group,) = key
-        regs = list(state.get[0]) if state.exists else [0] * m
-        seen = 0
-        for pdf in pdfs:
-            seen += len(pdf)
-            # vectorized per-batch fold: collapse the batch to its
-            # per-bucket max FIRST (pandas groupby), then merge the
-            # <= m survivors — the Python loop never sees row grain
-            mx = pdf.groupby("_b")["_r"].max()
-            for b, r in mx.items():
-                if int(r) > regs[int(b)]:
-                    regs[int(b)] = int(r)
-        state.update(([int(x) for x in regs],))
-        yield pd.DataFrame(
-            [(group, [int(x) for x in regs], seen)],
-            columns=["group", "regs", "batch_n"],
-        )
-
-    return prepared.groupBy("_g").applyInPandasWithState(
-        fn,
-        outputStructType=HLL_OUT_SCHEMA,
-        stateStructType=HLL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -1348,106 +1208,30 @@ def hll_resume_certificate(
     seed: int = 13,
     n_runs: int = 2,
 ) -> DataFrame:
-    """Checkpoint-RESUME certificate for the streaming HLL — the
-    third resume-family member (CMS: counter arrays; KMV: arg-min
-    keys; this: register MAXIMA).  Per-register max is order- and
-    batching-independent, so the final emission's register table must
-    equal the batch ``ops.sketch._hll_registers`` over the whole
-    input cell-for-cell — and unlike the estimate-level readouts the
+    """Checkpoint-RESUME certificate for the streaming HLL
+    (``ops.sketch._hll_registers`` on a stream) — the third
+    resume-family member (CMS: counters; KMV: arg-min keys; this:
+    register MAXIMA).  Per-register max is order- and
+    batching-independent, so the final register table must equal the
+    batch ``ops.sketch._hll_registers`` over the whole input
+    cell-for-cell — and unlike the estimate-level readouts the
     register table is ALL-INTEGER, so the oracle comparison carries
     no float discipline at all.
 
     Output: group, b (register bucket), max_rank — set registers
     only, ≤ m rows per group.
     """
-    import tempfile
+    from fuel_spark.ops.sketch import _hll_registers
 
-    workdir = workdir or tempfile.mkdtemp(prefix="fuel_spark_hll_resume_")
     keyed = df.select(
         F.col(group_col).cast("string").alias("g"),
         F.col(key_col).cast("long").alias("k"),
     ).where(F.col("k").isNotNull() & F.col("g").isNotNull())
-    final_runs = _sliced_restart_runs(
-        spark, keyed, "k", "g string, k long", workdir, n_runs,
-        lambda stream: hll_stream(stream, "g", "k", m=m, seed=seed),
-    )
-    latest: dict[str, list[int]] = {}
-    for rows in final_runs:
-        for r in rows:
-            latest[r.group] = [int(x) for x in r.regs]
-    cells = [
-        (g, b, rank)
-        for g, regs in sorted(latest.items())
-        for b, rank in enumerate(regs)
-        if rank > 0
-    ]
-    return spark.createDataFrame(
-        cells, "group string, b int, max_rank int"
-    )
-
-
-BLOOM_OUT_SCHEMA = "group string, positions array<int>, batch_n long"
-BLOOM_STATE_SCHEMA = "positions array<int>"
-
-
-def bloom_build_stream(
-    events: DataFrame,
-    group_col: str,
-    key_col: str,
-    m_bits: int = 4096,
-    k_hashes: int = 3,
-    seed: int = 5,
-) -> DataFrame:
-    """Streaming Bloom-filter BUILD as a bounded-state stateful
-    operator — the membership member of the family (CMS counters /
-    KMV arg-min keys / HLL register maxima / this: set BITS), and the
-    missing build half of :func:`bloom_screen_stream` (which screens
-    a stream against a STATIC bloom): state is the group's set of set
-    positions, O(m_bits) forever, and bit-OR is order- and batching-
-    independent so the built filter is restart-proof by construction
-    (:func:`bloom_resume_certificate` pins it).  Positions are
-    computed JVM-side with the SAME md5 family as the batch
-    ``ops.sketch.bloom_build`` — the streamed position set equals the
-    batch position table row-for-row.
-
-    Update-mode semantics: each batch re-emits the group's CURRENT
-    sorted position list.  Output: group, positions, batch_n.
-    """
-    import pandas as pd
-
-    from fuel_spark.functions import hash_mod
-
-    parts = [
-        events.select(
-            F.col(group_col).cast("string").alias("_g"),
-            hash_mod(f"bl{seed}h{i}", F.col(key_col), m_bits).alias("_p"),
-        )
-        for i in range(k_hashes)
-    ]
-    prepared = parts[0]
-    for p in parts[1:]:
-        prepared = prepared.unionByName(p)
-
-    def fn(key, pdfs, state: GroupState):
-        (group,) = key
-        bits = set(int(x) for x in state.get[0]) if state.exists else set()
-        seen = 0
-        for pdf in pdfs:
-            seen += len(pdf)
-            bits.update(int(x) for x in pdf["_p"].unique())
-        out = sorted(bits)
-        state.update((out,))
-        yield pd.DataFrame(
-            [(group, out, seen)],
-            columns=["group", "positions", "batch_n"],
-        )
-
-    return prepared.groupBy("_g").applyInPandasWithState(
-        fn,
-        outputStructType=BLOOM_OUT_SCHEMA,
-        stateStructType=BLOOM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _resumed_state(
+        spark, keyed, workdir, n_runs,
+        lambda stream: _hll_registers(stream, "g", "k", m, seed),
+        ("g", "_b"),
+        "group string, b int, max_rank int",
     )
 
 
@@ -1462,36 +1246,30 @@ def bloom_resume_certificate(
     seed: int = 5,
     n_runs: int = 2,
 ) -> DataFrame:
-    """Checkpoint-RESUME certificate for the streaming Bloom build —
-    the fourth and last resume-family member (counters / arg-min keys
-    / register maxima / set BITS): bit-OR of (restored bits ∪ new
-    bits) equals the bits of everything, so the final emission's
-    position set must equal the batch ``ops.sketch.bloom_build``
-    position table per group — all-integer, like the HLL twin.
+    """Checkpoint-RESUME certificate for the streaming Bloom build
+    (``ops.sketch.bloom_build`` per group on a stream) — the fourth
+    resume-family member (counters / arg-min keys / register maxima /
+    set BITS): the restored bits OR the new bits equal the bits of
+    everything, so the final position set must equal the batch
+    ``ops.sketch.bloom_build`` position table per group —
+    all-integer, like the HLL twin.
 
     Output: group, pos — set positions only, ≤ m_bits rows per group.
     """
-    import tempfile
+    from fuel_spark.ops.sketch import bloom_build
 
-    workdir = workdir or tempfile.mkdtemp(prefix="fuel_spark_bloom_resume_")
     keyed = df.select(
         F.col(group_col).cast("string").alias("g"),
         F.col(key_col).cast("long").alias("k"),
     ).where(F.col("k").isNotNull() & F.col("g").isNotNull())
-    final_runs = _sliced_restart_runs(
-        spark, keyed, "k", "g string, k long", workdir, n_runs,
-        lambda stream: bloom_build_stream(
-            stream, "g", "k", m_bits=m_bits, k_hashes=k_hashes, seed=seed
+    return _resumed_state(
+        spark, keyed, workdir, n_runs,
+        lambda stream: bloom_build(
+            stream, "k", m_bits, k_hashes, seed, group_col="g"
         ),
+        ("g", "pos"),
+        "group string, pos int",
     )
-    latest: dict[str, list[int]] = {}
-    for rows in final_runs:
-        for r in rows:
-            latest[r.group] = [int(x) for x in r.positions]
-    cells = [
-        (g, p) for g, ps in sorted(latest.items()) for p in ps
-    ]
-    return spark.createDataFrame(cells, "group string, pos int")
 
 
 def window_counts_resume_certificate(
@@ -1509,22 +1287,18 @@ def window_counts_resume_certificate(
     every open window's partial count and keep adding to it.  Window
     counts are order/batching-independent, so the folded final state
     (latest emission per (window, type) across all runs — the
-    ``_sliced_restart_runs`` contract) must equal the batch tumbling
+    :func:`_resumed_state` fold) must equal the batch tumbling
     aggregation over the whole input.
 
     Output: window_start_sec (epoch), event_type, n_events.
     """
-    import tempfile
-
-    workdir = workdir or tempfile.mkdtemp(prefix="fuel_spark_wc_resume_")
     keyed = df.select(
         F.col("event_id").cast("long").alias("k"),
         F.col("ts"),
         F.col("event_type").cast("string").alias("g"),
     ).where(F.col("g").isNotNull())
-    final_runs = _sliced_restart_runs(
-        spark, keyed, "k", "k long, ts timestamp, g string", workdir,
-        n_runs,
+    return _resumed_state(
+        spark, keyed, workdir, n_runs,
         lambda stream: (
             stream.groupBy(
                 F.window(F.col("ts"), "1 hour").alias("w"), F.col("g")
@@ -1534,14 +1308,8 @@ def window_counts_resume_certificate(
                 F.col("w.start").cast("long").alias("ws"), "g", "n"
             )
         ),
-    )
-    latest: dict[tuple, int] = {}
-    for rows in final_runs:
-        for r in rows:
-            latest[(int(r.ws), r.g)] = int(r.n)
-    cells = [(ws, g, n) for (ws, g), n in sorted(latest.items())]
-    return spark.createDataFrame(
-        cells, "window_start_sec bigint, event_type string, n_events bigint"
+        ("ws", "g"),
+        "window_start_sec bigint, event_type string, n_events bigint",
     )
 
 
@@ -1563,35 +1331,24 @@ def running_agg_resume_certificate(
 
     Output: event_type, n_events, min_value, max_value, sum_value.
     """
-    import tempfile
-
-    workdir = workdir or tempfile.mkdtemp(prefix="fuel_spark_ra_resume_")
     keyed = df.select(
         F.col("event_id").cast("long").alias("k"),
         F.col("event_type").cast("string").alias("g"),
         F.round(F.col("value"), 6).alias("v"),
     ).where(F.col("g").isNotNull())
-    final_runs = _sliced_restart_runs(
-        spark, keyed, "k", "k long, g string, v double", workdir, n_runs,
+    return _resumed_state(
+        spark, keyed, workdir, n_runs,
         lambda stream: (
             stream.groupBy("g").agg(
                 F.count(F.lit(1)).cast("bigint").alias("n"),
                 F.min("v").alias("mn"),
                 F.max("v").alias("mx"),
-                F.sum(F.col("v").cast("decimal(27,6)")).alias("s"),
+                F.sum(F.col("v").cast("decimal(27,6)"))
+                .cast("double")
+                .alias("s"),
             )
         ),
-    )
-    latest: dict[str, tuple] = {}
-    for rows in final_runs:
-        for r in rows:
-            latest[r.g] = (int(r.n), float(r.mn), float(r.mx),
-                           float(r.s))
-    cells = [
-        (g, n, mn, mx, s) for g, (n, mn, mx, s) in sorted(latest.items())
-    ]
-    return spark.createDataFrame(
-        cells,
+        ("g",),
         "event_type string, n_events bigint, min_value double,"
         " max_value double, sum_value double",
     )
@@ -1610,7 +1367,7 @@ def sessionize_resume_certificate(
     open session windows and MERGE new events into them (windows
     grow, fuse, and change their keys across the restart).
 
-    Update-mode emissions are folded by interval supersession: a
+    Complete-mode emissions are folded by interval supersession: a
     later emission for a user replaces every earlier emission whose
     window overlaps it (that is precisely the engine's merge rule —
     a merged window always covers the partials it absorbed).  The
@@ -1624,17 +1381,13 @@ def sessionize_resume_certificate(
     Output: user_id, session_start_sec (epoch), n_events,
     duration_sec.
     """
-    import tempfile
-
-    workdir = workdir or tempfile.mkdtemp(prefix="fuel_spark_sess_resume_")
     keyed = df.select(
         F.col("event_id").cast("long").alias("k"),
         F.col("user_id").cast("long").alias("user_id"),
         F.col("ts"),
     ).where(F.col("user_id").isNotNull())
     final_runs = _sliced_restart_runs(
-        spark, keyed, "k", "k long, user_id long, ts timestamp", workdir,
-        n_runs,
+        spark, keyed, workdir, n_runs,
         lambda stream: sessionize_native(
             stream, gap_sec=gap_sec, watermark="3650 days"
         ).select(

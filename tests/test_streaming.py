@@ -10,6 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from fuel_spark.ops import sketch
 from fuel_spark.streaming import serve
 
 
@@ -906,53 +907,71 @@ def test_heavy_hitters_stream_bounded_state_and_mg_bound(spark, workdir):
     assert final == {7: 198}
 
 
-def test_cms_stream_equals_batch_sketch(spark, workdir):
-    """Two micro-batches; the streamed CMS's final counter arrays must
-    equal the batch cms_build over the union, cell for cell (same md5
-    family) — and every emission is exactly `depth` rows (bounded
-    state, every batch)."""
+# sketch -> (batch builder over (g string, k long), its cell columns,
+# the engine's stateful operator it runs as on a stream)
+SKETCH_BUILDERS = {
+    "cms": (lambda d: sketch.cms_build(d, "k", depth=3, width=64),
+            ("row_id", "col_id"), "StateStoreSave"),
+    "hll": (lambda d: sketch._hll_registers(d, "g", "k", 32, 13),
+            ("g", "_b"), "StateStoreSave"),
+    "bloom": (lambda d: sketch.bloom_build(d, "k", 128, 3, group_col="g"),
+              ("g", "pos"), "StreamingDeduplicate"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SKETCH_BUILDERS))
+def test_sketch_builder_on_a_stream_equals_batch_sketch(spark, workdir, name):
+    """A batch sketch builder applied to a file stream (one file per
+    micro-batch) is the streaming sketch: the latest update-mode
+    emission per cell, over >= 2 micro-batches whose keys overlap,
+    equals the batch builder over the union cell for cell.  Its state
+    is the engine's state store (no Python state), and no emission is
+    larger than the final cell table."""
     import pandas as pd
 
-    from fuel_spark.ops import sketch
     from fuel_spark.sources import from_rows
 
-    src = os.path.join(workdir, "cms_src")
-    ckpt = os.path.join(workdir, "cms_ckpt")
+    build, cell_cols, operator = SKETCH_BUILDERS[name]
+    src = os.path.join(workdir, "src")
     os.makedirs(src)
     all_rows = []
-    for b in range(2):
-        rows = [(b * 1000 + (i % 13),) for i in range(120)]
+    for b in range(3):
+        rows = [("g%d" % (i % 2), b * 5 + i % 13) for i in range(60)]
         all_rows += rows
-        pd.DataFrame(rows, columns=["user_id"]).to_parquet(
+        pd.DataFrame(rows, columns=["g", "k"]).to_parquet(
             os.path.join(src, f"{b:03d}.parquet")
         )
     stream = (
-        spark.readStream.schema("user_id long")
+        spark.readStream.schema("g string, k long")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
     batches = []
     q = (
-        serve.cms_stream(stream, "user_id", depth=3, width=64)
+        build(stream)
         .writeStream.outputMode("update")
-        .foreachBatch(lambda d, i: batches.append((i, d.collect())))
-        .option("checkpointLocation", ckpt)
+        .foreachBatch(lambda d, i: batches.append(d.collect()))
+        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    emitted = [rows for _, rows in batches if rows]
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert operator in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+
+    def cells(rows):
+        return {tuple(r[c] for c in cell_cols): tuple(r) for r in rows}
+
+    want = cells(build(from_rows(spark, all_rows,
+                                 schema="g string, k long")).collect())
+    emitted = [rows for rows in batches if rows]
     assert len(emitted) >= 2
+    assert all(len(rows) <= len(want) for rows in emitted)
+    latest = {}
     for rows in emitted:
-        assert len(rows) == 3                      # depth rows, every batch
-        assert all(len(r.counts) == 64 for r in rows)
-    final = {r.row_id: list(r.counts) for r in emitted[-1]}
-    static = from_rows(spark, all_rows, schema="user_id long")
-    cells = {(r.row_id, r.col_id): r.cnt for r in
-             sketch.cms_build(static, "user_id", depth=3, width=64).collect()}
-    for row_id, counts in final.items():
-        for col_id, cnt in enumerate(counts):
-            assert cnt == cells.get((row_id, col_id), 0), (row_id, col_id)
+        latest.update(cells(rows))
+    assert latest == want
 
 
 def test_bloom_screen_stream_no_false_negatives(spark, workdir):

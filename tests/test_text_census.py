@@ -29,8 +29,9 @@ CODE = {
     "F.length(F.concat_ws(''": "_doc_stats",
     "F.split(F.trim(": "_ws_tokens",
 }
-# hand copies of the front end that must stay gone
-GONE_CODE = ("F.explode(words(", "F.filter(words(")
+# hand copies of the front end, and of _doc_stats's word count, that
+# must stay gone (curate counts words with curate._n_words)
+GONE_CODE = ("F.explode(words(", "F.filter(words(", "F.size(words(")
 GONE_FRAGMENTS = ("<> ''",)
 
 
