@@ -1676,9 +1676,10 @@ def q_curation_pipeline(spark, sf, prededup_exact: bool = True):
     d = _t(spark, sf)["documents"]
     corpus = d.where(F.col("doc_id") >= 20).select("doc_id", "text", "lang")
     bench = d.where(F.col("doc_id") < 20).select("text")
-    # `kept` is consumed 2-3x inside apply_dedup (digest rollup,
-    # sketch input, final anti-join) and `deduped` 4x (decontaminate's
-    # gram pass + id spine, the clean join).
+    # `kept` is consumed 2x inside apply_dedup (digest rollup and
+    # pre-pass anti-join; without the pre-pass, sketch input and final
+    # anti-join) and `deduped` 4x (decontaminate's gram pass + id
+    # spine, the clean join).
     kept = materialize(
         text_ops.quality_score(corpus, "text")
         .where(F.col("quality") >= 0.9)

@@ -5,9 +5,11 @@ first-class here because dedup is the canonical 100 TB text job.
 Design: everything is hash-based and *pair-bounded* —
 
 - exact: one groupBy on a text digest (map-side partial agg).
-- minhash LSH: per-doc sketch (narrow), then band-bucket self-join;
-  candidate pairs only, never the full quadratic pair space.
-- jaccard verify: array intersection on the candidate pairs.
+- minhash LSH: per-doc sketch (narrow), then one band-bucket
+  aggregation; candidate pairs only, never the full quadratic pair
+  space.
+- jaccard verify: array intersection on the candidate pairs, inside
+  the bucket stage (the shingle sets ride the band shuffle).
 - simhash: bit-vote fingerprint, one narrow projection.
 
 The near-dup operators share one pipeline, sketch → candidates →
@@ -17,6 +19,10 @@ helper (``tests/test_dedup_census.py`` fails on a copy):
 - ``_shingle_sets``: normalize, then the distinct char-shingle set;
 - ``_minhash_sketch``: shingle base hashes → K minhashes → band keys;
 - ``_all_pairs_sql``: every pair of a sorted bucket array;
+- ``_band_buckets``: each band bucket's sorted member array;
+- ``_bucket_pairs``: band rows → full-width bucket shuffle → member
+  pairs, all-pairs or star past ``max_bucket`` (candidates,
+  ``ngram_jaccard_pairs`` and ``minhash_calibration`` all read it);
 - ``_with_overlap``: ``inter`` / ``uni`` / round-6 ``jaccard``;
 - ``_exact_prepass``: md5 rollup → min id per text → survivors;
 - ``_gram_hash_sql``: the 64-bit word-gram hash (the n-gram signals
@@ -67,7 +73,7 @@ DEFAULT_MAX_BUCKET: int | None = 512
 
 
 # --------------------------------------------------------------------------
-# The six building blocks of the near-dup pipeline, each written once.
+# The building blocks of the near-dup pipeline, each written once.
 # --------------------------------------------------------------------------
 
 
@@ -118,13 +124,14 @@ def _with_overlap(df: DataFrame, sh_a: str, sh_b: str) -> DataFrame:
     )
 
 
-def _exact_prepass(df: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate pre-pass on a 16-byte md5 rollup: returns the
-    survivors (``id_col``, ``text_col``; the min id of each exact-text
-    group), materialized, and the loser ids.  The survivors are read by
-    the bands and both sides of the shingle join; replaying the
-    digest-rollup + anti-join chain under each measured 12 scans, 19s
-    for a 5k-doc verify at the 20× smoke."""
+def _exact_prepass(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Exact-duplicate pre-pass on a 16-byte md5 rollup: the rows of
+    ``df`` (every column) that survive it, materialized.  A row loses
+    when a smaller id carries the same text; a NULL id never loses.
+    Every consumer reads the survivors twice or more (the sketch, then
+    the verify join or ``apply_dedup``'s final anti-join); replaying
+    the digest-rollup + anti-join chain under each measured 12 scans,
+    19s for a 5k-doc verify at the 20× smoke."""
     hashed = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("_h"))
     keepers = hashed.groupBy("_h").agg(F.min(id_col).alias("_keep"))
     losers = (
@@ -132,10 +139,7 @@ def _exact_prepass(df: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame
         .where(F.col(id_col) != F.col("_keep"))
         .select(id_col)
     )
-    kept = materialize(
-        df.join(losers, id_col, "left_anti").select(F.col(id_col), F.col(text_col))
-    )
-    return kept, losers
+    return materialize(df.join(losers, id_col, "left_anti"))
 
 
 def _all_pairs_sql(arr: str, a: str = "id_a", b: str = "id_b") -> str:
@@ -145,6 +149,73 @@ def _all_pairs_sql(arr: str, a: str = "id_a", b: str = "id_b") -> str:
         f"flatten(transform(sequence(1, size({arr}) - 1),"
         f" i -> transform(slice({arr}, i + 1, size({arr}) - i),"
         f" x -> struct(element_at({arr}, i) AS {a}, x AS {b}))))"
+    )
+
+
+def _band_buckets(rows: DataFrame, member: Column, out: str) -> DataFrame:
+    """Each LSH bucket of ``rows`` (one row per doc and band, keyed by
+    ``band_id`` and ``band_key``) with its non-NULL ``member`` values
+    collected into one sorted array ``out``."""
+    return rows.groupBy("band_id", "band_key").agg(
+        F.array_sort(F.collect_list(member)).alias(out)
+    )
+
+
+def _bucket_pairs(
+    sketch: DataFrame,
+    keys: list[Column],
+    id_col: str,
+    payload: list[str],
+    max_bucket: int | None,
+) -> DataFrame:
+    """Every pair of docs sharing an LSH bucket, as struct columns
+    ``a`` and ``b`` (``a.id < b.id``), each holding the doc's ``id``
+    and its ``payload`` columns of ``sketch`` (``_sh`` rides along
+    this way, so a verify needs no join back to the corpus).
+
+    ``sketch`` (from :func:`_minhash_sketch`, with its band ``keys``)
+    explodes to one row per doc and band.  A doc with a NULL id joins
+    no bucket.  The rows are hashed to full width on the bucket key
+    (``ensure_parallelism``: bytes-tiny buckets would otherwise let
+    AQE coalesce the CPU-heavy verify into one task), the bucket
+    aggregation reuses that partitioning, and each bucket's sorted
+    member array expands to index pairs in the same stage; a pair
+    reads its two members out of the bucket array, so the pair array
+    holds index pairs, never copies of the payloads.  Work is Σ bucket²,
+    never corpus²; a pair sharing several buckets comes out once per
+    bucket.
+
+    ``max_bucket`` guards the 100 TB pathological case (a boilerplate
+    bucket of 10^6 docs → 10^12 pairs): oversized buckets degrade to
+    pairing every member with the bucket minimum — linear, and still
+    sufficient for greedy keep-smallest dedup within the bucket.
+    """
+    member = F.when(
+        F.col(id_col).isNotNull(),
+        F.struct(F.col(id_col).alias("id"), *payload),
+    )
+    band_structs = [
+        F.struct(F.lit(b).alias("band_id"), key.alias("band_key"))
+        for b, key in enumerate(keys)
+    ]
+    rows = sketch.select(
+        member.alias("_m"), F.explode(F.array(*band_structs)).alias("_b")
+    ).select("_b.band_id", "_b.band_key", "_m")
+    buckets = (
+        _band_buckets(ensure_parallelism(rows, "band_id", "band_key"), F.col("_m"), "_ms")
+        .where(F.size("_ms") > 1)
+        .select("_ms", F.sequence(F.lit(1), F.size("_ms")).alias("_ix"))
+    )
+    all_pairs = _all_pairs_sql("_ix", "i", "j")
+    star_pairs = "transform(slice(_ix, 2, size(_ix) - 1), j -> struct(1 AS i, j AS j))"
+    pair_expr = (
+        all_pairs
+        if max_bucket is None
+        else f"CASE WHEN size(_ix) <= {max_bucket} THEN {all_pairs} ELSE {star_pairs} END"
+    )
+    return buckets.select("_ms", F.explode(F.expr(pair_expr)).alias("_p")).select(
+        F.element_at("_ms", F.col("_p.i")).alias("a"),
+        F.element_at("_ms", F.col("_p.j")).alias("b"),
     )
 
 
@@ -236,16 +307,12 @@ def minhash_candidate_pairs(
     """LSH candidate pairs (a < b) sharing any band bucket.
 
     One groupBy on (band_id, band_key) collects each bucket's ids,
-    then pairs expand JVM-side from the sorted array — the minhash
-    subtree is computed once and shuffles once (a self-join would
-    compute and shuffle it twice; Spark can't reuse the exchange
-    because the two projections differ).  Work is proportional to
-    Σ bucket², never corpus².
-
-    ``max_bucket`` guards the 100 TB pathological case (a boilerplate
-    bucket of 10^6 docs → 10^12 pairs): oversized buckets degrade to
-    pairing every member with the bucket minimum — linear, and still
-    sufficient for greedy keep-smallest dedup within the bucket.
+    then pairs expand JVM-side from the sorted array
+    (:func:`_bucket_pairs`) — the minhash subtree is computed once and
+    shuffles once (a self-join would compute and shuffle it twice;
+    Spark can't reuse the exchange because the two projections
+    differ).  Work is proportional to Σ bucket², never corpus².
+    ``max_bucket`` is the star-degrade guard of :func:`_bucket_pairs`.
 
     ``distinct_pairs=False`` skips the final pair-set dedup shuffle: a
     pair colliding in several bands appears up to ``bands`` times.
@@ -253,25 +320,12 @@ def minhash_candidate_pairs(
     connected components — both end in their own distinct/agg) should
     pass False; it removes a full shuffle of the pair set.
     """
-    bands_df = with_minhash_bands(df, id_col, text_col, num_hashes, bands, shingle_k)
-    buckets = (
-        bands_df.groupBy("band_id", "band_key")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
-        .where(F.size("ids") > 1)
+    sk, keys = _minhash_sketch(
+        df.select(F.col(id_col), F.col(text_col)), [id_col], text_col,
+        num_hashes, bands, shingle_k,
     )
-    all_pairs = _all_pairs_sql("ids")
-    star_pairs = (
-        "transform(slice(ids, 2, size(ids) - 1),"
-        " x -> struct(element_at(ids, 1) AS id_a, x AS id_b))"
-    )
-    pair_expr = (
-        all_pairs
-        if max_bucket is None
-        else f"CASE WHEN size(ids) <= {max_bucket} THEN {all_pairs} ELSE {star_pairs} END"
-    )
-    out = (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("_p"))
-        .select("_p.id_a", "_p.id_b")
+    out = _bucket_pairs(sk, keys, id_col, [], max_bucket).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
     )
     return out.distinct() if distinct_pairs else out
 
@@ -290,63 +344,56 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Verified near-dup pairs: jaccard over distinct char-shingle sets
     computed on LSH candidates only (sketch → candidates → verify, the
-    standard MinHashLSH pipeline shape).  ``distinct_pairs=False``
-    propagates to the candidate stage (multi-band collisions verify
-    more than once but skip the pair-set shuffle — right when the
+    standard MinHashLSH pipeline shape), verified inside the bucket.
+    One sketch pass computes each doc's shingle set ``_sh``; the band
+    rows carry it through the bucket shuffle (:func:`_bucket_pairs`),
+    so each candidate pair already holds both sets and its overlap is
+    scored in the stage that expands it — no second shingle pass and
+    no join back to the corpus.  Ids are assumed unique: two rows with
+    one id are two docs here, each scored with its own shingle set.
+
+    ``distinct_pairs=False`` skips the final pair-set shuffle: a pair
+    sharing several bands comes out once per band (right when the
     consumer reduces over pairs anyway).  ``max_bucket`` propagates
-    the star-degrade guard: on boilerplate-heavy corpora the verify
-    join is quadratic in bucket size without it.
+    the star-degrade guard: on boilerplate-heavy corpora the verify is
+    quadratic in bucket size without it.
 
     ``carry_exprs`` ({name: Column-over-df}) rides extra per-doc
-    payloads THROUGH the verify join, emitted as ``<name>_a`` /
-    ``<name>_b`` — consumers that need side data per pair (lengths
-    for survivor policies, quality scores) get it for free instead of
-    re-joining the multi-million-row pair set against the corpus
-    afterwards (measured 37s → ~2s on the 10× pathological smoke).
+    payloads through the bucket with the shingle sets, emitted as
+    ``<name>_a`` / ``<name>_b`` — consumers that need side data per
+    pair (lengths for survivor policies, quality scores) get it for
+    free instead of re-joining the multi-million-row pair set against
+    the corpus afterwards (measured 37s → ~2s on the 10× pathological
+    smoke).  Payloads must be orderable (no maps): the bucket array is
+    sorted by member.
     """
-    cands = minhash_candidate_pairs(
-        df, id_col, text_col, num_hashes, bands, shingle_k,
-        max_bucket=max_bucket, distinct_pairs=distinct_pairs,
-    )
-    # pin the verify width: candidate-pair rows are BYTES-tiny (two
-    # ids), so AQE's size-based coalescing folds them into one
-    # partition and the shingle-set intersections — the CPU-heavy
-    # part — run single-threaded (measured 15.6s vs 1.9s on the same
-    # 125k pairs).  Cost is one shuffle of narrow rows.
-    cands = ensure_parallelism(cands)
     carry = dict(carry_exprs or {})
-    sh = ensure_parallelism(
-        df.select(
-            F.col(id_col),
-            F.col(text_col),
-            # carry exprs evaluate against the FULL df row, before the
-            # projection narrows to (id, text)
-            *[c.alias(f"_c_{n}") for n, c in carry.items()],
-        )
+    docs = df.select(
+        F.col(id_col),
+        F.col(text_col),
+        # carry exprs evaluate against the FULL df row, before the
+        # projection narrows to (id, text)
+        *[c.alias(f"_c_{n}") for n, c in carry.items()],
     )
-    sh = _shingle_sets(sh, [id_col, *[f"_c_{n}" for n in carry]], text_col, shingle_k, "sh")
-    # NOTE (r10, measured): a lazy checkpoint of `sh` here is NOT a
-    # win — the shingle arrays are ~5x the text bytes, so
-    # materializing them costs as much as the second compute pass
-    # (interleaved best-of-5: 2.59s without vs 2.79s with on
-    # dedup_apply), and at scale the memory blow-up is worse.  The
-    # two-sided replay stays, deliberately.
-    a = sh.select(
-        F.col(id_col).alias("id_a"),
-        F.col("sh").alias("sh_a"),
-        *[F.col(f"_c_{n}").alias(f"{n}_a") for n in carry],
+    carry_cols = [f"_c_{n}" for n in carry]
+    sk, keys = _minhash_sketch(
+        docs, [id_col, *carry_cols], text_col, num_hashes, bands, shingle_k
     )
-    b = sh.select(
-        F.col(id_col).alias("id_b"),
-        F.col("sh").alias("sh_b"),
-        *[F.col(f"_c_{n}").alias(f"{n}_b") for n in carry],
+    fields = [("id", "id"), ("_sh", "sh"), *zip(carry_cols, carry)]
+    pairs = _bucket_pairs(sk, keys, id_col, ["_sh", *carry_cols], max_bucket).select(
+        *[
+            F.col(s).getField(f).alias(f"{name}_{s}")
+            for s in ("a", "b")
+            for f, name in fields
+        ]
     )
     carried = [f"{n}_{s}" for n in carry for s in ("a", "b")]
-    return (
-        _with_overlap(cands.join(a, "id_a").join(b, "id_b"), "sh_a", "sh_b")
+    out = (
+        _with_overlap(pairs, "sh_a", "sh_b")
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "inter", "uni", "jaccard", *carried)
     )
+    return out.dropDuplicates(["id_a", "id_b"]) if distinct_pairs else out
 
 
 def apply_dedup(
@@ -370,11 +417,13 @@ def apply_dedup(
     verified pair the shorter normalized text loses — the
     quality-aware policy that keeps the fuller page instead of an
     arbitrary id.  The kill set is tiny relative to the corpus, so
-    the final step is a broadcast-able left_anti join: corpus-sized
-    data crosses the wire exactly once.  Candidate pairs stay
-    non-distinct (``distinct_pairs=False``): the survivor pick only
-    needs the SET of loser ids, and the losers projection dedups one
-    id column — strictly cheaper than a distinct over full pairs.
+    the final step is a broadcast-able left_anti join of the
+    pre-pass survivors: corpus-sized data crosses the wire exactly
+    once.  Verified pairs stay non-distinct (``distinct_pairs=False``):
+    the survivor pick only needs the SET of loser ids, and the anti
+    join reads that set as it is.  Ids are assumed unique, as in
+    :func:`ngram_jaccard_pairs`; a doc with a NULL id is never
+    removed.
 
     ``prededup_exact`` (default on) removes exact duplicates with one
     16-byte-digest rollup BEFORE sketching — the production pipeline
@@ -389,17 +438,16 @@ def apply_dedup(
     star-degraded — strictly better recall.  On the 10× pathological
     smoke corpus (10 exact copies/doc) the pre-pass cuts the verify
     join from 12.6M pairs to the distinct-text pair set, 33s → ~4s,
-    AND kills 64 near-dups the degraded run missed.
+    AND kills 64 near-dups the degraded run missed.  Its survivors
+    are materialized once, full rows, and read twice: by the sketch
+    and by the final anti-join.
     """
     if keep not in ("min_id", "longest"):
         raise ValueError(f"unknown keep policy {keep!r}")
-    exact_losers = None
-    near_input = df
-    if prededup_exact:
-        near_input, exact_losers = _exact_prepass(df, id_col, text_col)
+    survivors = _exact_prepass(df, id_col, text_col) if prededup_exact else df
     if keep == "min_id":
         pairs = ngram_jaccard_pairs(
-            near_input, id_col, text_col, threshold, num_hashes, bands,
+            survivors, id_col, text_col, threshold, num_hashes, bands,
             shingle_k, distinct_pairs=False, max_bucket=max_bucket,
         )
         near_losers = pairs.select(F.col("id_b").alias(id_col))
@@ -407,12 +455,12 @@ def apply_dedup(
         # quality-aware survivor policy: per verified pair the SHORTER
         # normalized text loses (the standard keep-the-fuller-page
         # choice); equal lengths fall back to keep-min (id_a < id_b by
-        # construction, so id_b loses).  Lengths RIDE the verify join
-        # via carry_exprs — re-joining the multi-million-row pair set
-        # against the corpus afterwards measured 37s vs ~2s on the
-        # 10× pathological smoke.
+        # construction, so id_b loses).  Lengths RIDE the bucket with
+        # the shingle sets via carry_exprs — re-joining the
+        # multi-million-row pair set against the corpus afterwards
+        # measured 37s vs ~2s on the 10× pathological smoke.
         pairs = ngram_jaccard_pairs(
-            near_input, id_col, text_col, threshold, num_hashes, bands,
+            survivors, id_col, text_col, threshold, num_hashes, bands,
             shingle_k, distinct_pairs=False, max_bucket=max_bucket,
             carry_exprs={"len": F.length(norm_text(F.col(text_col)))},
         )
@@ -421,11 +469,7 @@ def apply_dedup(
             .otherwise(F.col("id_b"))
             .alias(id_col)
         )
-    losers = (
-        near_losers if exact_losers is None
-        else near_losers.unionByName(exact_losers)
-    ).distinct()
-    return df.join(losers, id_col, "left_anti")
+    return survivors.join(near_losers, id_col, "left_anti")
 
 
 def simhash(
@@ -787,7 +831,7 @@ def containment_pairs(
         # representative (the 20× smoke's copy-heavy corpus emits
         # 1.14M raw verified pairs; representatives collapse it to
         # the distinct-text pair set)
-        df, _ = _exact_prepass(df, id_col, text_col)
+        df = _exact_prepass(df.select(id_col, text_col), id_col, text_col)
     cands = minhash_candidate_pairs(
         df, id_col, text_col, num_hashes, bands, shingle_k,
         max_bucket=max_bucket, distinct_pairs=False,
@@ -1427,8 +1471,8 @@ def fuzzy_join(
     Output: id_l, id_r, inter, uni, jaccard (>= threshold).
     """
     if prededup_exact:
-        left, _ = _exact_prepass(left, left_id, left_text)
-        right, _ = _exact_prepass(right, right_id, right_text)
+        left = _exact_prepass(left.select(left_id, left_text), left_id, left_text)
+        right = _exact_prepass(right.select(right_id, right_text), right_id, right_text)
     lb = with_minhash_bands(
         left.select(left_id, left_text), left_id, left_text,
         num_hashes, bands, shingle_k,
@@ -1437,12 +1481,8 @@ def fuzzy_join(
         right.select(right_id, right_text), right_id, right_text,
         num_hashes, bands, shingle_k,
     )
-    gl = lb.groupBy("band_id", "band_key").agg(
-        F.array_sort(F.collect_list(left_id)).alias("_ids_l")
-    )
-    gr = rb.groupBy("band_id", "band_key").agg(
-        F.array_sort(F.collect_list(right_id)).alias("_ids_r")
-    )
+    gl = _band_buckets(lb, F.col(left_id), "_ids_l")
+    gr = _band_buckets(rb, F.col(right_id), "_ids_r")
     if max_bucket is not None:
         gl = gl.where(F.size("_ids_l") <= max_bucket)
         gr = gr.where(F.size("_ids_r") <= max_bucket)
@@ -1750,41 +1790,41 @@ def minhash_calibration(
     faithful on THIS corpus", complementing tools/eval_recall.py's
     recall sweep.
 
-    One sketch pass carries the per-doc minhash vector; candidates
-    come from the banded pipeline; the exact side reuses the verify
-    join.  All three means are exact-integer rounded divisions of
-    6-dp decimal sums (engines disagree on double-rounding exact
-    halves).
+    One sketch pass carries the per-doc shingle set and minhash
+    vector through the band buckets (:func:`_bucket_pairs`), so each
+    candidate pair is scored where it is expanded and then
+    deduplicated, as the distinct candidate set.  All three means are
+    exact-integer rounded divisions of 6-dp decimal sums (engines
+    disagree on double-rounding exact halves).
     """
-    sk, _ = _minhash_sketch(
+    sk, keys = _minhash_sketch(
         df.select(F.col(id_col), F.col(text_col)), [id_col], text_col,
         num_hashes, bands, shingle_k,
     )
-    cands = minhash_candidate_pairs(
-        df, id_col, text_col, num_hashes, bands, shingle_k
-    )
-    a = sk.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_sh").alias("_sa"),
-        *[F.col(f"_mh{j}").alias(f"_ma{j}") for j in range(num_hashes)],
-    )
-    b = sk.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_sh").alias("_sb"),
-        *[F.col(f"_mh{j}").alias(f"_mb{j}") for j in range(num_hashes)],
-    )
-    agree = sum(
-        F.when(F.col(f"_ma{j}") == F.col(f"_mb{j}"), 1).otherwise(0)
-        for j in range(num_hashes)
+    mh = [f"_mh{j}" for j in range(num_hashes)]
+    pairs = _bucket_pairs(
+        sk, keys, id_col, ["_sh", *mh], DEFAULT_MAX_BUCKET
+    ).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.col("a._sh").alias("_sa"),
+        F.col("b._sh").alias("_sb"),
+        sum(
+            F.when(F.col("a").getField(m) == F.col("b").getField(m), 1).otherwise(0)
+            for m in mh
+        ).alias("_agree"),
     )
     scored = (
-        _with_overlap(cands.join(a, "id_a").join(b, "id_b"), "_sa", "_sb")
+        _with_overlap(pairs, "_sa", "_sb")
         .select(
-            F.round(agree / F.lit(float(num_hashes)), 6)
+            "id_a",
+            "id_b",
+            F.round(F.col("_agree") / F.lit(float(num_hashes)), 6)
             .cast("decimal(27,6)")
             .alias("est"),
             F.col("jaccard").cast("decimal(27,6)").alias("exact"),
         )
+        .dropDuplicates(["id_a", "id_b"])
         .withColumn(
             "abs_err",
             F.when(F.col("est") >= F.col("exact"),

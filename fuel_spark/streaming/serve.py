@@ -1055,12 +1055,13 @@ def _sliced_restart_runs(
     shared checkpoint (under ``workdir``, a new temporary directory
     when None) — so every run after the first restores its operator
     state from the state store, exactly a production restart.  The
-    stream reads ``df``'s own schema.  Returns the collected
-    foreachBatch rows of EVERY run in chronological order —
-    update-mode state is cumulative, so a group's latest emission
-    across all runs IS its final state even when no key of that group
-    falls in the last slice's residue class (see
-    :func:`_resumed_state`); returning only the final run would
+    stream reads ``df``'s own schema.  A temporary ``workdir`` is
+    removed before the call returns; a caller's is left in place.
+    Returns the collected foreachBatch rows of EVERY run in
+    chronological order — update-mode state is cumulative, so a
+    group's latest emission across all runs IS its final state even
+    when no key of that group falls in the last slice's residue class
+    (see :func:`_resumed_state`); returning only the final run would
     silently drop such groups on skewed fixtures.
 
     Test apparatus by design — the production ops are the bounded-
@@ -1073,7 +1074,11 @@ def _sliced_restart_runs(
     import shutil
     import tempfile
 
-    workdir = workdir or tempfile.mkdtemp(prefix="fuel_spark_resume_")
+    if workdir is None:
+        with tempfile.TemporaryDirectory(prefix="fuel_spark_resume_") as tmp:
+            return _sliced_restart_runs(
+                spark, df, tmp, n_runs, build_query, output_mode
+            )
     src = os.path.join(workdir, "src")
     ckpt = os.path.join(workdir, "ckpt")
     os.makedirs(src, exist_ok=True)

@@ -1301,6 +1301,23 @@ def test_cms_resume_certificate_state_survives_restart(spark, workdir):
     assert len([c for c in commits if not c.startswith(".")]) >= 2
 
 
+def test_resume_certificate_removes_its_temporary_workdir(spark):
+    """Without a ``workdir`` the certificate stages its slices, source
+    files and checkpoint in a temporary directory, gone once the call
+    returns (a caller's ``workdir`` is kept: the test above reads its
+    checkpoint afterwards)."""
+    import glob
+
+    from fuel_spark.sources import from_rows
+
+    pattern = os.path.join(tempfile.gettempdir(), "fuel_spark_resume_*")
+    before = set(glob.glob(pattern))
+    df = from_rows(spark, [(i % 5,) for i in range(40)], schema="user_id long")
+    cells = serve.cms_resume_certificate(spark, df, "user_id", depth=2, width=8)
+    assert sum(r.cnt for r in cells.collect()) == 2 * 40
+    assert set(glob.glob(pattern)) == before
+
+
 def test_kmv_resume_certificate_matches_batch(spark, workdir):
     """KMV resume: run 2 restores the (hashes, keys) arrays from the
     checkpoint, so the final per-group emission equals the batch

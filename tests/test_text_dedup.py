@@ -4,6 +4,7 @@ import math
 
 from pyspark.sql import functions as F
 
+from fuel_spark.functions import norm_text
 from fuel_spark.ops import dedup, similarity, text as text_ops
 from fuel_spark.sources import build_dictionary, dictionary_encode, from_rows
 
@@ -2744,3 +2745,191 @@ def test_banding_precision_sweep_nested(spark):
     assert out[1].precision >= out[3].precision >= out[9].precision
     for r in out.values():
         assert r.n_verified <= r.n_candidates
+
+
+# --------------------------------------------------------------------------
+# Verify inside the LSH bucket: parity with the join form.  The reference
+# below is the earlier plan in pure Python — bucket the non-NULL ids,
+# expand all pairs (star past max_bucket), join each side's shingle set
+# back by id — fed by the unchanged sketch primitives.
+# --------------------------------------------------------------------------
+
+
+def _parity_corpus(spark, n_bases=30):
+    import random
+
+    rng = random.Random(11)
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    bases = [" ".join(rng.choice(words) for _ in range(12)) for _ in range(n_bases)]
+    rows, i = [], 0
+    for b in bases:
+        for k in range(rng.randint(1, 4)):
+            rows.append((i, b if k == 0 or rng.random() < 0.3 else f"{b} {rng.choice(words)}"))
+            i += 1
+    rows += [(None, bases[0]), (None, bases[0] + " x"), (500, None), (501, None), (None, None)]
+    return from_rows(spark, rows, schema="doc_id bigint, text string")
+
+
+def _ref_jaccard_pairs(df, threshold, max_bucket, distinct_pairs, carry=None):
+    """Counter of (id_a, id_b, inter, uni, jaccard, *carried) rows."""
+    import collections
+    import itertools
+
+    buckets = collections.defaultdict(list)
+    for r in dedup.with_minhash_bands(df, "doc_id", "text").collect():
+        if r.doc_id is not None:
+            buckets[(r.band_id, r.band_key)].append(r.doc_id)
+    cands = []
+    for ids in buckets.values():
+        ids = sorted(ids)
+        if max_bucket is None or len(ids) <= max_bucket:
+            cands += itertools.combinations(ids, 2)
+        else:
+            cands += [(ids[0], x) for x in ids[1:]]
+    if distinct_pairs:
+        cands = set(cands)
+    sh = collections.defaultdict(list)
+    for r in dedup._shingle_sets(df, ["doc_id"], "text", 5).collect():
+        sh[r.doc_id].append(r._sh)
+    extra = {}
+    if carry:
+        extra = {r[0]: tuple(r[1:]) for r in
+                 df.select("doc_id", *carry.values()).collect()}
+    out = collections.Counter()
+    for a, b in cands:
+        for sa, sb in itertools.product(sh[a], sh[b]):
+            if sa is None or sb is None:
+                continue  # a NULL text scores NULL, which no threshold keeps
+            inter = len(set(sa) & set(sb))
+            uni = len(sa) + len(sb) - inter
+            jac = round(inter / max(uni, 1), 6)
+            if jac >= threshold:
+                carried = tuple(v for pair in zip(extra.get(a, ()), extra.get(b, ())) for v in pair)
+                out[(a, b, inter, uni, jac, *carried)] += 1
+    return out
+
+
+def _ref_apply_dedup(df, threshold, keep, max_bucket):
+    """Sorted survivor ids: exact pre-pass, then the reference pairs."""
+    rows = [(r.doc_id, r.text) for r in df.collect()]
+    keep_id = {}
+    for i, t in rows:
+        if i is not None:
+            keep_id[t] = min(keep_id.get(t, i), i)
+    exact_losers = {i for i, t in rows if i is not None and i != keep_id[t]}
+    survivors = df.where(
+        F.col("doc_id").isNull() | ~F.col("doc_id").isin(sorted(exact_losers))
+    )
+    lengths = {"len": F.length(norm_text(F.col("text")))}
+    pairs = _ref_jaccard_pairs(survivors, threshold, max_bucket, False, lengths)
+    losers = {
+        (a if keep == "longest" and la < lb else b)
+        for a, b, _, _, _, la, lb in pairs
+    }
+    return sorted(
+        (i for i, _ in rows if i is None or (i not in exact_losers and i not in losers)),
+        key=lambda i: (i is None, i),
+    )
+
+
+def _counter(df):
+    import collections
+
+    return collections.Counter(tuple(r) for r in df.collect())
+
+
+def test_jaccard_pairs_match_join_form_reference(spark):
+    """Bucket-side verify == the join form: NULL ids never pair, NULL
+    texts never verify, the star degrade (``max_bucket=2``) and the
+    ``distinct_pairs=False`` multiplicity (one row per shared band)
+    hold, and ``carry_exprs`` payloads ride both sides."""
+    df = _parity_corpus(spark)
+    carry = {"len": F.length("text")}
+    for max_bucket, distinct in ((512, True), (512, False), (2, True), (2, False), (None, False)):
+        got = _counter(dedup.ngram_jaccard_pairs(
+            df, "doc_id", "text", 0.3, distinct_pairs=distinct,
+            max_bucket=max_bucket, carry_exprs=carry,
+        ))
+        want = _ref_jaccard_pairs(df, 0.3, max_bucket, distinct, carry)
+        assert got == want, (max_bucket, distinct)
+        assert want and (distinct or max(want.values()) > 1)
+
+
+def test_apply_dedup_matches_join_form_reference(spark):
+    """apply_dedup == exact pre-pass + join-form pairs + anti-join,
+    for both survivor policies, at the default cap and star-degraded."""
+    df = _parity_corpus(spark)
+    for keep in ("min_id", "longest"):
+        for max_bucket in (512, 2):
+            got = sorted(
+                (r.doc_id for r in dedup.apply_dedup(
+                    df, "doc_id", "text", 0.5, max_bucket=max_bucket, keep=keep
+                ).collect()),
+                key=lambda i: (i is None, i),
+            )
+            assert got == _ref_apply_dedup(df, 0.5, keep, max_bucket), (keep, max_bucket)
+
+
+def test_null_ids_never_enter_a_bucket(spark):
+    """A NULL-id doc joins no bucket: it neither pairs with another
+    NULL-id doc nor removes a doc, and it is never removed itself."""
+    t = "the quick brown fox jumps over the lazy dog again and again"
+    df = from_rows(
+        spark, [(1, t), (2, t + " x"), (None, t), (None, t + " y")],
+        schema="doc_id bigint, text string",
+    )
+    pairs = {(r.id_a, r.id_b) for r in
+             dedup.ngram_jaccard_pairs(df, "doc_id", "text", distinct_pairs=False).collect()}
+    assert pairs == {(1, 2)}
+    for keep in ("min_id", "longest"):
+        got = [r.doc_id for r in dedup.apply_dedup(df, "doc_id", "text", 0.5, keep=keep).collect()]
+        assert sorted(got, key=lambda i: (i is None, i)) == [1 if keep == "min_id" else 2, None, None]
+
+
+def test_jaccard_pairs_plan_shingles_once_without_join(spark):
+    """One shingle pass feeds both the band keys and the verify, and
+    no join brings the shingle sets back to the candidate pairs: in
+    ``ngram_jaccard_pairs`` and in ``minhash_calibration``."""
+    for frame in (
+        dedup.ngram_jaccard_pairs(
+            _docs(spark), "doc_id", "text", carry_exprs={"len": F.length("text")}
+        ),
+        dedup.minhash_calibration(_docs(spark), "doc_id", "text"),
+    ):
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("array_distinct(transform(sequence") == 1, plan
+        assert "Join" not in plan, plan
+
+
+def test_apply_dedup_builds_in_few_jobs(spark, tmp_path):
+    """Building ``apply_dedup`` (the pre-pass materialization and a
+    lazy checkpoint of the result, as a pipeline stage does) over a
+    300-doc parquet table runs at most 7 Spark jobs; the join form ran
+    13."""
+    import random
+
+    rng = random.Random(5)
+    words = [f"w{i}" for i in range(400)]
+    rows = []
+    for i in range(300):
+        if i % 10 == 3:
+            rows.append((i, rows[i - 1][1]))
+        elif i % 10 == 7:
+            rows.append((i, rows[i - 2][1] + " tail"))
+        else:
+            rows.append((i, " ".join(rng.choice(words) for _ in range(20))))
+    path = str(tmp_path / "docs")
+    from_rows(spark, rows, schema="doc_id bigint, text string").write.parquet(path)
+    df = spark.read.parquet(path)
+    sc = spark.sparkContext
+    group = "test-apply-dedup-build"
+    sc.setJobGroup(group, "build apply_dedup")
+    try:
+        out = dedup.apply_dedup(df, "doc_id", "text", threshold=0.5).localCheckpoint(eager=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < len(jobs) <= 7, jobs
+    kept = {r.doc_id for r in out.collect()}
+    assert not any(i in kept for i in range(3, 300, 10))
+    assert not any(i in kept for i in range(7, 300, 10))
